@@ -46,6 +46,27 @@ def bm25_score_expr(tf, idf_col, dl, avgdl, k1: float = BM25_K1, b: float = BM25
     return idf_col * (tf_d * F.lit(k1 + 1.0)) / denom
 
 
+def rank_topk(scored: DataFrame, k: int, score: str = "score") -> DataFrame:
+    """Global top-``k`` of ``scored`` by ``score`` desc, ``doc_id`` asc,
+    with a 1-based ``rk`` column appended.
+
+    orderBy+limit plans TakeOrderedAndProject: each partition keeps a
+    k-row heap and only k rows per partition move to the final merge (a
+    row_number window over ``scored`` would instead drag every scored
+    doc into ONE partition — wrong at scale).  Its output is ONE
+    partition holding the k rows in sort order (the operator's declared
+    SinglePartition / outputOrdering), so a row's index there is its
+    rank: ``monotonically_increasing_id`` numbers partition 0's rows
+    0..k-1.  No rank window, hence no WindowExec logging "No Partition
+    Defined" on every call (partitioning the window by a literal does
+    not help: the optimizer drops foldable window partitions)."""
+    return (
+        scored.orderBy(F.desc(score), F.asc("doc_id"))
+        .limit(k)
+        .withColumn("rk", (F.monotonically_increasing_id() + 1).cast("int"))
+    )
+
+
 def bm25_rank(
     tf: DataFrame,
     idf_stats: DataFrame,
@@ -88,16 +109,7 @@ def bm25_rank(
         .groupBy("doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    # Global top-k as orderBy+limit: Spark plans TakeOrderedAndProject —
-    # each partition keeps a k-row heap, only k rows per partition move to
-    # the driver-side merge.  (A row_number window here would instead drag
-    # every scored doc into ONE partition — wrong at scale.)  The rank
-    # column is then added over the already-tiny k-row result.
-    from pyspark.sql import Window
-
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int"))
+    return rank_topk(scored, k)
 
 
 def doc_norms(tfidf_rel: DataFrame) -> DataFrame:
@@ -150,11 +162,8 @@ def more_like_this(tfidf_rel: DataFrame, source_doc_id: int, k: int = 10) -> Dat
                 "cosine"
             ),
         )
-        .orderBy(F.desc("cosine"), F.asc("doc_id"))
-        .limit(k)
     )
-    w = Window.orderBy(F.desc("cosine"), F.asc("doc_id"))
-    return top.withColumn("rk", F.row_number().over(w).cast("int"))
+    return rank_topk(top, k, score="cosine")
 
 
 def bm25_rank_conjunctive(
@@ -177,8 +186,6 @@ def bm25_rank_conjunctive(
     pruned to query terms at the scan exactly as in the OR form, so
     shuffle volume is O(docs matching ANY term) before the HAVING cut.
     """
-    from pyspark.sql import Window  # noqa: PLC0415
-
     n_terms = len(set(query_terms))
     avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
     matches = tf.where(F.col("word").isin(*query_terms))
@@ -201,9 +208,7 @@ def bm25_rank_conjunctive(
         .where(F.col("_nt") == F.lit(n_terms))
         .select("doc_id", "score")
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int"))
+    return rank_topk(scored, k)
 
 
 def bm25_rank_excluding(
@@ -227,8 +232,6 @@ def bm25_rank_excluding(
     the OR form over the surviving candidates, so scores equal
     ``bm25_rank``'s for every surviving document.
     """
-    from pyspark.sql import Window  # noqa: PLC0415
-
     if not exclude_terms:  # nothing to exclude — the OR form verbatim
         return bm25_rank(tf, idf_stats, dlen, query_terms, k, k1, b)
     avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
@@ -253,9 +256,7 @@ def bm25_rank_excluding(
         .groupBy("doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int"))
+    return rank_topk(scored, k)
 
 
 def bm25_batch_rank(
@@ -285,8 +286,6 @@ def bm25_batch_rank(
     Scores are identical to :func:`bm25_rank` of each query alone
     (pinned by test).
     """
-    from pyspark.sql import Window  # noqa: PLC0415
-
     q_terms = queries.select(
         F.col(id_col), F.explode(F.col(terms_col)).alias("word")
     ).distinct()
@@ -412,9 +411,7 @@ def bm25_rank_prf(
         .groupBy("doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int"))
+    return rank_topk(scored, k)
 
 
 def bm25_facets(

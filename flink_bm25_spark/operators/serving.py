@@ -66,7 +66,7 @@ from pyspark.sql import functions as F
 
 from flink_bm25_spark.config import BM25_B, BM25_K1
 from flink_bm25_spark.functions.hashing import h60
-from flink_bm25_spark.operators.bm25 import bm25_score_expr
+from flink_bm25_spark.operators.bm25 import bm25_score_expr, rank_topk
 from flink_bm25_spark.operators.df_idf import document_frequencies
 from flink_bm25_spark.operators.pipeline import build_corpus_stats
 from flink_bm25_spark.operators.tf import doc_lengths
@@ -156,6 +156,23 @@ WRITER_LOCK_TTL_S = 600.0
 # Every section a compaction may produce (also the GC scope for stale
 # version trees and the bare pre-manifest layout).
 SECTIONS = ("postings", "df", "stats", "forward", "hot", "deleted")
+
+# Declared schema of every section — data then partition columns, exactly
+# as parquet inference types what the writers produce — pinned by every
+# read (`_read_section`), so no read pays a schema-inference job; tests
+# hold every writer to it.  Batch ids stay int: manual ids are below
+# STREAM_BATCH_BASE, stream ids near it plus twice the micro-batch count.
+SECTION_SCHEMAS = {
+    "postings": "word string, doc_id bigint, tf bigint, dl bigint,"
+    " _batch_id int, bucket int",
+    "df": "word string, df bigint, _batch_id int, bucket int",
+    "stats": "n_docs bigint, n_dlen_docs bigint, total_dl bigint,"
+    " n_buckets int, _batch_id int",
+    "forward": "doc_id bigint, dl bigint,"
+    " terms array<struct<word:string,tf:bigint>>, _batch_id int, fbucket int",
+    "hot": "word string, n_salts int, _batch_id int",
+    "deleted": "doc_id bigint, below bigint, _batch_id int",
+}
 
 
 def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -298,6 +315,12 @@ class _Layout:
 
     def has(self, name: str) -> bool:
         return _fs_exists(self.spark, self.sec(name))
+
+
+def _read_section(spark: SparkSession, lay: _Layout, name: str) -> DataFrame:
+    """One section of the resolved tree, read with its declared schema
+    (`SECTION_SCHEMAS`) — the engine wrote it, so nothing is inferred."""
+    return spark.read.schema(SECTION_SCHEMAS[name]).parquet(lay.sec(name))
 
 
 def _fs_mtime_ms(spark: SparkSession, path: str) -> int:
@@ -577,10 +600,7 @@ def query_buckets(terms: tuple[str, ...], n_buckets: int) -> list[int]:
     twin of the in-plan ``pmod(h60(word), n_buckets)`` (same md5 recipe,
     pinned equal by test), so the query path needs no Spark job to learn
     which partitions to open."""
-    out = set()
-    for t in terms:
-        out.add(_h_driver(t) % n_buckets)
-    return sorted(out)
+    return _open_buckets(terms, n_buckets, {})
 
 
 def _h_driver(term: str) -> int:
@@ -588,49 +608,46 @@ def _h_driver(term: str) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def _read_hot_salts(
-    spark: SparkSession,
-    path: str,
-    terms: tuple[str, ...],
-    lay: "_Layout | None" = None,
-) -> dict[str, int]:
-    """``word -> n_salts`` for the query terms that some batch salted —
-    a read of the tiny ``hot/`` relation pruned to the terms (collect
-    bounded by ``|terms|``); ``{}`` when the index has no hot section.
-    Folding with MAX is safe-by-superset: if batches disagree on a
-    word's salt count, opening the widest salt range covers every
-    bucket any batch wrote (the word equality inside keeps scores
-    exact)."""
-    lay = lay or _Layout(spark, path)
-    hot_path = lay.sec("hot")
-    if not _fs_exists(spark, hot_path):
-        return {}
-    rows = (
-        spark.read.parquet(hot_path)
-        .where(F.col("word").isin(*terms))
-        .groupBy("word")
-        .agg(F.max("n_salts").alias("n_salts"))
-        .collect()
-    )
-    return {r["word"]: int(r["n_salts"]) for r in rows}
-
-
-def _expanded_query_buckets(
-    spark: SparkSession,
-    path: str,
-    terms: tuple[str, ...],
-    n_buckets: int,
-    lay: "_Layout | None" = None,
+def _open_buckets(
+    terms: tuple[str, ...], n_buckets: int, hot: dict[str, int]
 ) -> list[int]:
     """The buckets a query must open against a PERSISTED index: the
     base bucket per term, plus — for terms the index salted as hot —
     every salted sub-bucket ``(h60(word) + salt) % n_buckets``."""
-    buckets = set(query_buckets(terms, n_buckets))
-    for word, n_salts in _read_hot_salts(spark, path, terms, lay=lay).items():
-        h = _h_driver(word)
-        for s in range(n_salts):
-            buckets.add((h + s) % n_buckets)
+    buckets = set()
+    for t in terms:
+        h = _h_driver(t)
+        buckets.update((h + s) % n_buckets for s in range(hot.get(t, 1)))
     return sorted(buckets)
+
+
+# The whole-index hot-salt map is held on the driver only while it is
+# genuinely small; past this many hot words a warm index probes the
+# query's own terms instead.
+HOT_CACHE_CAP = 10_000
+
+
+def _hot_fold(
+    spark: SparkSession, lay: _Layout, terms: tuple[str, ...] | None = None
+) -> DataFrame | None:
+    """``(word, n_salts)`` from the tiny ``hot/`` relation — pruned to
+    ``terms`` when given — or None when the index has no hot section;
+    at most `HOT_CACHE_CAP` + 1 rows.  Folding with MAX is
+    safe-by-superset: if batches disagree on a word's salt count,
+    opening the widest salt range covers every bucket any batch wrote
+    (the word equality inside keeps scores exact).  ``coalesce(1)``
+    satisfies the fold's clustering, so it plans no shuffle."""
+    if not lay.has("hot"):
+        return None
+    hot = _read_section(spark, lay, "hot")
+    if terms is not None:
+        hot = hot.where(F.col("word").isin(*terms))
+    return (
+        hot.coalesce(1)
+        .groupBy("word")
+        .agg(F.max("n_salts").alias("n_salts"))
+        .limit(HOT_CACHE_CAP + 1)
+    )
 
 
 def _index_batch_with_tf(
@@ -653,7 +670,7 @@ def _index_batch_with_tf(
         .select(
             _bucket(F.col("word"), n_buckets).alias("bucket"),
             "word",
-            "doc_id",
+            F.col("doc_id").cast("long").alias("doc_id"),
             "tf",
             "dl",
         )
@@ -712,28 +729,21 @@ def bm25_topk_from_partials(
     b: float = BM25_B,
 ) -> DataFrame:
     """Top-k ``(doc_id, score, rk)`` for a bag-of-words query against
-    index relations — the single scoring path shared by the in-memory
-    and on-disk forms.
+    IN-MEMORY index relations — the relational form of the scoring core
+    (`_score_topk`) the on-disk paths share.
 
-    Plan shape: postings pruned to the query's terms FIRST (on disk the
-    same predicate is partition pruning); df partials folded per word
-    (≤ batches × |terms| rows) and broadcast; corpus scalars folded from
-    the batches-row stats relation and broadcast as one row — the whole
-    ranking is one Spark job and no scalar round-trips through Python
-    (``bm25_rank``'s posture).  Scores are identical to ``bm25_rank``
-    over the concatenated corpus because both folds are exact sums.
+    Plan shape: postings pruned to the query's terms FIRST; corpus
+    scalars folded from the batches-row stats relation and broadcast as
+    one row, so no scalar round-trips through Python (``bm25_rank``'s
+    posture).  Scores are identical to ``bm25_rank`` over the
+    concatenated corpus because both folds are exact sums.
 
     An EMPTY term tuple (a stopword-only query after tokenization)
     short-circuits to an empty result instead of reaching a zero-arg
     ``isin`` (which Spark rejects with an opaque analysis error)."""
     if not query_terms:
         return _empty_topk(index.postings.sparkSession)
-    matches = index.postings.where(F.col("word").isin(*query_terms))
-    df_fold = (
-        index.df_parts.where(F.col("word").isin(*query_terms))
-        .groupBy("word")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
+    word = F.col("word").isin(*query_terms)
     scalars = index.stats_parts.agg(
         F.sum("n_docs").cast("double").alias("n_docs"),
         (
@@ -741,26 +751,59 @@ def bm25_topk_from_partials(
             / F.sum("n_dlen_docs").cast("double")
         ).alias("avgdl"),
     )
+    return _score_topk(
+        index.postings.where(word).crossJoin(F.broadcast(scalars)),
+        _fold_df(index.df_parts.where(word)),
+        F.col("n_docs"),
+        F.col("avgdl"),
+        k, k1, b,
+    )
+
+
+def _fold_df(df_parts: DataFrame) -> DataFrame:
+    """``(word, df)``: the per-batch df partials summed per word."""
+    return df_parts.groupBy("word").agg(F.sum("df").cast("long").alias("df"))
+
+
+def _score_topk(
+    matches: DataFrame,
+    df: DataFrame,
+    n_docs,
+    avgdl,
+    k: int,
+    k1: float,
+    b: float,
+    by: str | None = None,
+) -> DataFrame:
+    """The BM25 scoring core of every index form: ``matches`` (postings
+    pruned to the query terms, plus ``by`` = ``query_id`` for a batch)
+    join the broadcast per-word ``df`` fold; contributions sum per doc
+    (per ``(by, doc)``), round to 6 places and cut to the top ``k``.
+    ``n_docs`` / ``avgdl`` are Columns: literals on the served paths,
+    the broadcast scalar row's columns on the in-memory partials path."""
+    keys = [by, "doc_id"] if by else ["doc_id"]
     scored = (
-        matches.join(F.broadcast(df_fold), "word")
-        .crossJoin(F.broadcast(scalars))
+        matches.join(F.broadcast(df), "word")
         .select(
-            "doc_id",
+            *keys,
             bm25_score_expr(
                 F.col("tf"),
-                F.log(F.col("n_docs") / (F.col("df") + F.lit(1))),
+                F.log(n_docs / (F.col("df") + F.lit(1))),
                 F.col("dl"),
-                F.col("avgdl"),
+                avgdl,
                 k1,
                 b,
             ).alias("contrib"),
         )
-        .groupBy("doc_id")
+        .groupBy(*keys)
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int"))
+    if by is None:
+        return rank_topk(scored, k)
+    w = Window.partitionBy(by).orderBy(F.desc("score"), F.asc("doc_id"))
+    return scored.withColumn("rk", F.row_number().over(w).cast("int")).where(
+        F.col("rk") <= F.lit(k)
+    )
 
 
 BATCH_COL = "_batch_id"
@@ -933,22 +976,66 @@ def bm25_index_save(
     if forward:
         # share the pinned TF relation — building the forward section
         # with the index costs zero extra tokenize passes
-        bm25_index_save_forward(documents, path, tokenizer, tf=tf)
+        _write_forward(
+            documents, os.path.join(path, "forward"), n_buckets, 0,
+            create=True, tokenizer=tokenizer, tf=tf,
+        )
     _touch_stamp(spark, path)
 
 
-def _read_stats(
-    spark: SparkSession, path: str, lay: "_Layout | None" = None
-) -> DataFrame:
-    lay = lay or _Layout(spark, path)
-    return spark.read.parquet(lay.sec("stats"))
+class _StatsFold(NamedTuple):
+    """The stats partials folded: corpus scalars, the next free manual
+    batch id and, when a hot fold rode the same collect, the salt map."""
+
+    n_buckets: int
+    n_docs: float
+    avgdl: float
+    next_batch_id: int
+    # word -> n_salts; {} without a hot fold; None past HOT_CACHE_CAP
+    salts: dict[str, int] | None
 
 
-def _read_n_buckets(
-    spark: SparkSession, path: str, lay: "_Layout | None" = None
-) -> int:
-    row = _read_stats(spark, path, lay=lay).select("n_buckets").first()
-    return int(row["n_buckets"])
+def _fold_stats(
+    spark: SparkSession, lay: _Layout, hot: DataFrame | None = None
+) -> _StatsFold:
+    """ONE collect of the raw stats partials (a row per batch: no shuffle)
+    plus ``hot`` (a `_hot_fold`), folded on the driver with exact integer
+    sums — the doubles the in-plan ``sum().cast("double")`` fold gives.
+    ``next_batch_id`` is one past the highest MANUAL id: a manual write
+    never lands in the stream id space (:data:`STREAM_BATCH_BASE`)."""
+    rel = _read_section(spark, lay, "stats")
+    if hot is not None:
+        rel = rel.unionByName(hot, allowMissingColumns=True)
+    rows = rel.collect()
+    salts = [r for r in rows if r["n_buckets"] is None]  # the hot rows
+    rows = [r for r in rows if r["n_buckets"] is not None]
+
+    def total(col: str) -> int:  # SQL sum: an empty batch's nulls add 0
+        return sum(r[col] or 0 for r in rows)
+
+    n_dlen = total("n_dlen_docs")
+    manual = [r[BATCH_COL] for r in rows if r[BATCH_COL] < STREAM_BATCH_BASE]
+    return _StatsFold(
+        n_buckets=int(rows[0]["n_buckets"]),
+        n_docs=float(total("n_docs")),
+        avgdl=float(total("total_dl")) / float(n_dlen) if n_dlen else 0.0,
+        next_batch_id=max(manual, default=0) + 1,
+        salts=None
+        if len(salts) > HOT_CACHE_CAP
+        else {r["word"]: int(r["n_salts"]) for r in salts},
+    )
+
+
+def _batch_id_or_next(st: _StatsFold, batch_id: int | None) -> int:
+    """An explicit batch id as given; else the next manual id."""
+    if batch_id is not None:
+        return batch_id
+    if st.next_batch_id >= STREAM_BATCH_BASE:
+        raise ValueError(
+            "manual batch-id space exhausted; run bm25_index_compact"
+            " to fold batches back to 0"
+        )
+    return st.next_batch_id
 
 
 @_locked_writer(lambda documents, path, *a, **k: (documents.sparkSession, path))
@@ -980,31 +1067,21 @@ def bm25_index_add(
     lineage; adds remain O(batch))."""
     spark = documents.sparkSession
     lay = _Layout(spark, path)
-    stats = _read_stats(spark, path, lay=lay)
-    n_buckets = int(stats.select("n_buckets").first()["n_buckets"])
-    if batch_id is None:
-        row = stats.where(F.col(BATCH_COL) < STREAM_BATCH_BASE).agg(
-            F.max(BATCH_COL).alias("m")
-        ).first()
-        batch_id = (int(row["m"]) if row["m"] is not None else 0) + 1
-        if batch_id >= STREAM_BATCH_BASE:
-            raise ValueError(
-                "manual batch-id space exhausted; run bm25_index_compact"
-                " to fold batches back to 0"
-            )
-    batch, tf = _index_batch_with_tf(documents, n_buckets, tokenizer)
+    st = _fold_stats(spark, lay)
+    batch_id = _batch_id_or_next(st, batch_id)
+    batch, tf = _index_batch_with_tf(documents, st.n_buckets, tokenizer)
     _write_index_batch(
         batch,
         lay.root,
         batch_id,
         create=False,
-        n_buckets=n_buckets,
+        n_buckets=st.n_buckets,
         hot_df_cap=hot_df_cap,
     )
     if lay.has("forward"):
-        bm25_index_save_forward(
-            documents, path, tokenizer, batch_id=batch_id, create=False,
-            tf=tf,
+        _write_forward(
+            documents, lay.sec("forward"), st.n_buckets, batch_id,
+            create=False, tokenizer=tokenizer, tf=tf,
         )
     _verify_tree_current(spark, path, lay.version)
     _touch_stamp(spark, path)
@@ -1031,11 +1108,10 @@ def _read_deleted(
     removes every version.  Small by contract (compaction applies and
     clears it), so read paths broadcast it."""
     lay = lay or _Layout(spark, path)
-    p = lay.sec("deleted")
-    if not _fs_exists(spark, p):
+    if not lay.has("deleted"):
         return None
     return (
-        spark.read.parquet(p)
+        _read_section(spark, lay, "deleted")
         .groupBy("doc_id")
         .agg(F.max_by("below", F.col(BATCH_COL)).alias("below"))
     )
@@ -1057,7 +1133,7 @@ def _drop_deleted(df: DataFrame, deleted: DataFrame | None) -> DataFrame:
     return (
         df.join(deleted, "doc_id", "left")
         .where(F.col("below").isNull() | (F.col(BATCH_COL) >= F.col("below")))
-        .drop("below")
+        .select(*df.columns)  # the join moved doc_id first
     )
 
 
@@ -1109,26 +1185,20 @@ def bm25_index_delete(
             " (bm25_index_save_forward) — doc-keyed reads against the"
             " term-major postings would be a corpus scan"
         )
-    stats = _read_stats(spark, path, lay=lay)
-    n_buckets = int(stats.select("n_buckets").first()["n_buckets"])
-    if batch_id is None:
-        row = stats.where(F.col(BATCH_COL) < STREAM_BATCH_BASE).agg(
-            F.max(BATCH_COL).alias("m")
-        ).first()
-        batch_id = (int(row["m"]) if row["m"] is not None else 0) + 1
-        if batch_id >= STREAM_BATCH_BASE:
-            raise ValueError(
-                "manual batch-id space exhausted; run bm25_index_compact"
-            )
+    st = _fold_stats(spark, lay)
+    n_buckets = st.n_buckets
+    batch_id = _batch_id_or_next(st, batch_id)
     # The raw forward scan anti-joined with existing tombstones — so
     # re-deleting an id is a no-op by construction.
     if isinstance(doc_ids, DataFrame):
-        raw = _forward_scan_rel(lay, doc_ids.select("doc_id").distinct())
+        raw = _forward_scan_rel(
+            lay, doc_ids.select("doc_id").distinct(), n_buckets
+        )
     else:
         ids = sorted({int(d) for d in doc_ids})
         if not ids:
             return
-        raw = _forward_scan(spark, path, ids, lay=lay)
+        raw = _forward_scan(lay, ids, n_buckets)
     victims = _drop_deleted(
         raw, _read_deleted(spark, path, lay=lay)
     ).localCheckpoint(eager=True)
@@ -1157,20 +1227,14 @@ def bm25_index_delete(
     _touch_stamp(spark, path)
 
 
-def _forward_scan(
-    spark: SparkSession,
-    path: str,
-    ids: list[int],
-    lay: "_Layout | None" = None,
-) -> DataFrame:
+def _forward_scan(lay: _Layout, ids: list[int], n_buckets: int) -> DataFrame:
     """RAW pruned forward scan for a DRIVER-SIDE id list (tombstones NOT
     applied; ``_batch_id`` retained) — ≤ min(len(ids), n_buckets)
     fbucket directories opened; past the In-list cap the id pruning
     rides a broadcast semi-join instead (plan size stays constant)."""
-    lay = lay or _Layout(spark, path)
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
+    spark = lay.spark
     fbuckets = sorted({d % n_buckets for d in ids})
-    scan = spark.read.parquet(lay.sec("forward")).where(
+    scan = _read_section(spark, lay, "forward").where(
         F.col("fbucket").isin(fbuckets)
     )
     if len(ids) <= ISIN_TERM_CAP:
@@ -1179,7 +1243,9 @@ def _forward_scan(
     return scan.join(F.broadcast(ids_df), "doc_id", "leftsemi")
 
 
-def _forward_scan_rel(lay: "_Layout", ids_rel: DataFrame) -> DataFrame:
+def _forward_scan_rel(
+    lay: _Layout, ids_rel: DataFrame, n_buckets: int
+) -> DataFrame:
     """RAW forward scan for an IN-PLAN id relation — the batch-shaped
     twin of :func:`_forward_scan` for callers whose id set must never
     materialize on the driver (a corpus-shaped upsert/CDC batch).
@@ -1192,14 +1258,13 @@ def _forward_scan_rel(lay: "_Layout", ids_rel: DataFrame) -> DataFrame:
     semi-join against ``ids_rel`` — no broadcast hint, so AQE picks
     broadcast for small batches and shuffle for corpus-shaped ones."""
     spark = lay.spark
-    n_buckets = _read_n_buckets(spark, lay.path, lay=lay)
     ids_rel = ids_rel.select(F.col("doc_id").cast("long").alias("doc_id"))
     sample = ids_rel.limit(ISIN_TERM_CAP + 1).collect()
     if not sample:
-        return spark.read.parquet(lay.sec("forward")).where(F.lit(False))
+        return _read_section(spark, lay, "forward").where(F.lit(False))
     if len(sample) <= ISIN_TERM_CAP:
         ids = sorted({int(r["doc_id"]) for r in sample})
-        return _forward_scan(spark, lay.path, ids, lay=lay)
+        return _forward_scan(lay, ids, n_buckets)
     fb_rows = (
         ids_rel.select(
             F.pmod("doc_id", F.lit(n_buckets)).cast("int").alias("fb")
@@ -1208,7 +1273,7 @@ def _forward_scan_rel(lay: "_Layout", ids_rel: DataFrame) -> DataFrame:
         .collect()
     )
     fbuckets = sorted(int(r["fb"]) for r in fb_rows)
-    scan = spark.read.parquet(lay.sec("forward")).where(
+    scan = _read_section(spark, lay, "forward").where(
         F.col("fbucket").isin(fbuckets)
     )
     return scan.join(ids_rel, "doc_id", "leftsemi")
@@ -1301,17 +1366,9 @@ def bm25_index_upsert(
             " old version's statistics, which only the doc-major layout"
             " can read without a corpus scan"
         )
-    stats = _read_stats(spark, path, lay=lay)
-    n_buckets = int(stats.select("n_buckets").first()["n_buckets"])
-    if batch_id is None:
-        row = stats.where(F.col(BATCH_COL) < STREAM_BATCH_BASE).agg(
-            F.max(BATCH_COL).alias("m")
-        ).first()
-        batch_id = (int(row["m"]) if row["m"] is not None else 0) + 1
-        if batch_id >= STREAM_BATCH_BASE:
-            raise ValueError(
-                "manual batch-id space exhausted; run bm25_index_compact"
-            )
+    st = _fold_stats(spark, lay)
+    n_buckets = st.n_buckets
+    batch_id = _batch_id_or_next(st, batch_id)
     # one distinct shuffle, pinned (disk-backed): the id relation feeds
     # the victim semi-join, the fbucket aggregate AND the tombstone
     # write — recomputing it would re-scan a corpus-shaped batch thrice
@@ -1324,15 +1381,15 @@ def bm25_index_upsert(
     # versions older than this batch, under only OLDER tombstones
     deleted_path = lay.sec("deleted")
     prior_tombs = None
-    if _fs_exists(spark, deleted_path):
+    if lay.has("deleted"):
         prior_tombs = (
-            spark.read.parquet(deleted_path)
+            _read_section(spark, lay, "deleted")
             .where(F.col(BATCH_COL) != int(batch_id))
             .groupBy("doc_id")
             .agg(F.max_by("below", F.col(BATCH_COL)).alias("below"))
         )
     victims = _drop_deleted(
-        _forward_scan_rel(lay, ids_rel).where(
+        _forward_scan_rel(lay, ids_rel, n_buckets).where(
             F.col(BATCH_COL) < int(batch_id)
         ),
         prior_tombs,
@@ -1372,11 +1429,128 @@ def bm25_index_upsert(
         combined, lay.root, batch_id, create=False,
         n_buckets=n_buckets, hot_df_cap=hot_df_cap,
     )
-    bm25_index_save_forward(
-        documents, path, tokenizer, batch_id=batch_id, create=False, tf=tf
+    _write_forward(
+        documents, lay.sec("forward"), n_buckets, batch_id,
+        create=False, tokenizer=tokenizer, tf=tf,
     )
     _verify_tree_current(spark, path, lay.version)
     _touch_stamp(spark, path)
+
+
+class _ReadState(NamedTuple):
+    """Everything a served query reads besides the postings themselves,
+    resolved from ONE layout by `_read_state`."""
+
+    lay: _Layout
+    stats: _StatsFold  # salts: None means probe per query
+    buckets: list[int] | None  # opened by the pruned forms; None: whole index
+    df: DataFrame  # (word, df) folded per word
+    deleted: DataFrame | None  # folded tombstones (doc_id, below)
+
+
+def _read_state(
+    spark: SparkSession,
+    lay: _Layout,
+    terms: tuple[str, ...] | None = None,
+    words: DataFrame | None = None,
+) -> _ReadState:
+    """The read state of ONE layout: scalars and hot-salt map from one
+    collect, the df partials folded per word, the tombstones.
+
+    - ``terms`` (a cold query, a batch's small term set): hot map and df
+      fold pruned to the terms and the buckets they open — ≤ batches ×
+      |terms| df rows, folded in ONE partition, so no shuffle;
+    - ``words`` (a batch term relation above `ISIN_TERM_CAP`): buckets
+      from a tiny in-plan aggregate, df pruned by bucket and semi-join;
+    - neither (`Bm25Index.warm`): the whole index, persisted once."""
+    hot = None if words is not None else _hot_fold(spark, lay, terms)
+    st = _fold_stats(spark, lay, hot)
+    df = _read_section(spark, lay, "df")
+    buckets = None
+    if terms is not None:
+        buckets = _open_buckets(terms, st.n_buckets, st.salts)
+        df = df.where(
+            F.col("bucket").isin(buckets) & F.col("word").isin(*terms)
+        ).coalesce(1)
+    elif words is not None:
+        buckets = _word_buckets(spark, lay, words, st.n_buckets)
+        df = df.where(F.col("bucket").isin(buckets)).join(
+            F.broadcast(words), "word", "leftsemi"
+        )
+    deleted = _read_deleted(spark, lay.path, lay=lay)
+    return _ReadState(lay, st, buckets, _fold_df(df), deleted)
+
+
+def _word_buckets(
+    spark: SparkSession, lay: _Layout, words: DataFrame, n_buckets: int
+) -> list[int]:
+    """The buckets a term RELATION opens, via a tiny in-plan distinct
+    aggregate (≤ n_buckets rows collected); hot terms expand to their
+    salted sub-buckets."""
+    base = words.select(_bucket(F.col("word"), n_buckets).alias("b"))
+    if lay.has("hot"):
+        hot_fold = (
+            _read_section(spark, lay, "hot")
+            .groupBy("word")
+            .agg(F.max("n_salts").alias("n_salts"))
+        )
+        salted = (
+            words.join(hot_fold, "word")
+            .select(
+                h60(F.col("word")).alias("h"),
+                F.explode(F.sequence(F.lit(0), F.col("n_salts") - 1)).alias(
+                    "s"
+                ),
+            )
+            .select(
+                F.pmod(F.col("h") + F.col("s"), F.lit(n_buckets))
+                .cast("int")
+                .alias("b")
+            )
+        )
+        base = base.unionByName(salted)
+    return sorted({int(r["b"]) for r in base.distinct().collect()})
+
+
+def _state_postings(
+    rs: _ReadState, terms: tuple[str, ...] | None, buckets: list[int]
+) -> DataFrame:
+    """The state's postings pruned to ``buckets`` (partition pruning)
+    and, when given, ``terms`` (row-group skipping), tombstones
+    applied."""
+    pred = F.col("bucket").isin(buckets)
+    if terms is not None:
+        pred = pred & F.col("word").isin(*terms)
+    postings = _read_section(rs.lay.spark, rs.lay, "postings").where(pred)
+    return _drop_deleted(postings, rs.deleted)
+
+
+def _topk_from_state(
+    rs: _ReadState,
+    terms: tuple[str, ...],
+    k: int = 10,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """One query's top-k from a resolved read state — the scoring path
+    of both the cold (`bm25_topk_from_index`) and the warm
+    (`Bm25Index.search`) serve."""
+    if not terms:
+        return _empty_topk(rs.lay.spark)
+    buckets = rs.buckets
+    if buckets is None:
+        salts = rs.stats.salts
+        if salts is None:  # too many hot words to hold: probe the terms
+            hot = _hot_fold(rs.lay.spark, rs.lay, terms)
+            salts = _fold_stats(rs.lay.spark, rs.lay, hot).salts
+        buckets = _open_buckets(terms, rs.stats.n_buckets, salts)
+    return _score_topk(
+        _state_postings(rs, terms, buckets),
+        rs.df.where(F.col("word").isin(*terms)),
+        F.lit(rs.stats.n_docs),
+        F.lit(rs.stats.avgdl),
+        k, k1, b,
+    )
 
 
 def bm25_topk_from_index(
@@ -1394,31 +1568,16 @@ def bm25_topk_from_index(
     PARTITION pruning (only ~|terms|/n_buckets of the files open —
     asserted by ``test_bm25_index_query_prunes_partitions``), and the
     ``word IN (...)`` predicate pushes into parquet row-group skipping
-    within them.  Scoring is :func:`bm25_topk_from_partials` — identical
+    within them.  Scoring is the shared core (`_score_topk`) — identical
     scores to ``bm25_rank`` over the same corpus (pinned by test).
     ``version=`` serves from a pinned snapshot tree instead of the
     current one (`bm25_index_pin` / `bm25_index_snapshot`)."""
-    if not tuple(query_terms):
+    terms = tuple(query_terms)
+    if not terms:
         return _empty_topk(spark)
     # resolved ONCE: all-old or all-new sections
     lay = _Layout(spark, path, version=version)
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
-    buckets = _expanded_query_buckets(
-        spark, path, tuple(query_terms), n_buckets, lay=lay
-    )
-    postings = _drop_deleted(
-        spark.read.parquet(lay.sec("postings")).where(
-            F.col("bucket").isin(buckets) & F.col("word").isin(*query_terms)
-        ),
-        _read_deleted(spark, path, lay=lay),
-    )
-    df_parts = spark.read.parquet(lay.sec("df")).where(
-        F.col("bucket").isin(buckets) & F.col("word").isin(*query_terms)
-    )
-    stats_parts = spark.read.parquet(lay.sec("stats"))
-    return bm25_topk_from_partials(
-        Bm25IndexBatch(postings, df_parts, stats_parts), tuple(query_terms), k, k1, b
-    )
+    return _topk_from_state(_read_state(spark, lay, terms=terms), terms, k, k1, b)
 
 
 def _fold_batch_col(df: DataFrame, exclude: tuple[int, ...]):
@@ -1525,7 +1684,7 @@ def bm25_index_compact(
     new_version = _next_version(spark, path, lay.version)
     new_root = os.path.join(path, f"v{new_version}")
 
-    df_all = spark.read.parquet(lay.sec("df"))
+    df_all = _read_section(spark, lay, "df")
     df_fold = (
         (df_all.where(~F.col(BATCH_COL).isin(list(excl))) if excl else df_all)
         .groupBy("bucket", "word")
@@ -1549,9 +1708,7 @@ def bm25_index_compact(
     # batches' tombstones are withheld from the physical application and
     # carried into the new tree (see the docstring's exclusion note).
     deleted_raw = (
-        spark.read.parquet(lay.sec("deleted"))
-        if lay.has("deleted")
-        else None
+        _read_section(spark, lay, "deleted") if lay.has("deleted") else None
     )
     deleted = None
     deleted_keep = None
@@ -1572,22 +1729,18 @@ def bm25_index_compact(
                 deleted_keep = None
     postings = _fold_batch_col(
         _drop_deleted(
-            spark.read.parquet(lay.sec("postings")), deleted
+            _read_section(spark, lay, "postings"), deleted
         ),
         excl,
     )
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
+    n_buckets = _fold_stats(spark, lay).n_buckets
     hot_out = None
-    hot_path = lay.sec("hot")
+    has_hot = lay.has("hot")
     if hot_df_cap is not None:
         # global hotness from the FOLDED df (exclusions included in the
         # measurement — their postings keep old buckets, covered by the
         # max-fold read contract)
-        global_df = (
-            spark.read.parquet(lay.sec("df"))
-            .groupBy("word")
-            .agg(F.sum("df").cast("long").alias("df"))
-        )
+        global_df = _fold_df(df_all)
         hot_new = _hot_words(global_df, hot_df_cap, n_buckets)
         folded = (
             postings.where(~F.col(BATCH_COL).isin(list(excl)))
@@ -1605,15 +1758,15 @@ def bm25_index_compact(
         else:
             postings = resalted
         hot_out = hot_new.withColumn(BATCH_COL, F.lit(0).cast("long"))
-        if excl and _fs_exists(spark, hot_path):
+        if excl and has_hot:
             hot_out = hot_out.unionByName(
-                spark.read.parquet(hot_path)
+                _read_section(spark, lay, "hot")
                 .where(F.col(BATCH_COL).isin(list(excl)))
                 .select(*hot_out.columns)
             )
-    elif _fs_exists(spark, hot_path):
+    elif has_hot:
         # preserve salting: fold hot partials with MAX (superset-safe)
-        hot_all = spark.read.parquet(hot_path)
+        hot_all = _read_section(spark, lay, "hot")
         hot_out = (
             (hot_all.where(~F.col(BATCH_COL).isin(list(excl))) if excl else hot_all)
             .groupBy("word")
@@ -1630,7 +1783,7 @@ def bm25_index_compact(
         hot_out = None  # re-salt found nothing hot: the section goes away
 
     postings = postings.repartition(files_per_bucket * 8, "bucket")
-    stats_all = _read_stats(spark, path, lay=lay)
+    stats_all = _read_section(spark, lay, "stats")
     stats_fold = (
         (stats_all.where(~F.col(BATCH_COL).isin(list(excl))) if excl else stats_all)
         .groupBy("n_buckets")
@@ -1657,7 +1810,7 @@ def bm25_index_compact(
     if lay.has("forward"):
         fwd = _fold_batch_col(
             _drop_deleted(
-                spark.read.parquet(lay.sec("forward")), deleted
+                _read_section(spark, lay, "forward"), deleted
             ),
             excl,
         ).repartition(files_per_bucket * 8, "fbucket")
@@ -1890,97 +2043,31 @@ def bm25_batch_topk_from_index(
             [(int(q), list(t)) for q, t in queries],
             "query_id int, terms array<string>",
         )
-    lay = _Layout(spark, path, version=version)
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
     words = queries.select(F.explode("terms").alias("word")).distinct()
     sample = words.limit(ISIN_TERM_CAP + 1).collect()
     if not sample:
         return spark.createDataFrame(
             [], "query_id int, doc_id long, score double, rk int"
         )
-    word_pred = None
+    lay = _Layout(spark, path, version=version)
+    terms = None
     if len(sample) <= ISIN_TERM_CAP:
-        all_terms = tuple(r["word"] for r in sample)
-        buckets = _expanded_query_buckets(
-            spark, path, all_terms, n_buckets, lay=lay
-        )
-        word_pred = F.col("word").isin(*all_terms)
+        terms = tuple(r["word"] for r in sample)
+        rs = _read_state(spark, lay, terms=terms)
     else:
-        # buckets via a tiny in-plan distinct aggregate (≤ n_buckets
-        # rows collected); hot terms expand to their salted sub-buckets
-        base = words.select(_bucket(F.col("word"), n_buckets).alias("b"))
-        hot_path = lay.sec("hot")
-        if _fs_exists(spark, hot_path):
-            hot_fold = (
-                spark.read.parquet(hot_path)
-                .groupBy("word")
-                .agg(F.max("n_salts").alias("n_salts"))
-            )
-            salted = (
-                words.join(hot_fold, "word")
-                .select(
-                    h60(F.col("word")).alias("h"),
-                    F.explode(
-                        F.sequence(F.lit(0), F.col("n_salts") - 1)
-                    ).alias("s"),
-                )
-                .select(
-                    F.pmod(F.col("h") + F.col("s"), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-            )
-            base = base.unionByName(salted)
-        buckets = sorted({int(r["b"]) for r in base.distinct().collect()})
-    bucket_pred = F.col("bucket").isin(buckets)
-    postings = _drop_deleted(
-        spark.read.parquet(lay.sec("postings")).where(
-            bucket_pred & word_pred if word_pred is not None else bucket_pred
-        ),
-        _read_deleted(spark, path, lay=lay),
-    )
-    df_src = spark.read.parquet(lay.sec("df")).where(
-        bucket_pred & word_pred if word_pred is not None else bucket_pred
-    )
-    if word_pred is None:
-        df_src = df_src.join(F.broadcast(words), "word", "leftsemi")
-    df_fold = df_src.groupBy("word").agg(
-        F.sum("df").cast("long").alias("df")
-    )
-    scalars = _read_stats(spark, path, lay=lay).agg(
-        F.sum("n_docs").cast("double").alias("n_docs"),
-        (
-            F.sum("total_dl").cast("double")
-            / F.sum("n_dlen_docs").cast("double")
-        ).alias("avgdl"),
-    )
+        rs = _read_state(spark, lay, words=words)
     q_terms = queries.select(
         "query_id", F.explode("terms").alias("word")
     ).distinct()
-    scored = (
-        postings.join(F.broadcast(q_terms), "word")
-        .join(F.broadcast(df_fold), "word")
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "query_id",
-            "doc_id",
-            bm25_score_expr(
-                F.col("tf"),
-                F.log(F.col("n_docs") / (F.col("df") + F.lit(1))),
-                F.col("dl"),
-                F.col("avgdl"),
-                k1,
-                b,
-            ).alias("contrib"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return scored.withColumn("rk", F.row_number().over(w).cast("int")).where(
-        F.col("rk") <= F.lit(k)
+    return _score_topk(
+        _state_postings(rs, terms, rs.buckets).join(
+            F.broadcast(q_terms), "word"
+        ),
+        rs.df,
+        F.lit(rs.stats.n_docs),
+        F.lit(rs.stats.avgdl),
+        k, k1, b,
+        by="query_id",
     )
 
 
@@ -1998,7 +2085,7 @@ def bm25_index_stats(
     batch/file counts ride the same pass via ``input_file_name``; the
     hot/deleted gauges are tiny side reads."""
     lay = _Layout(spark, path, version=version)
-    p = spark.read.parquet(lay.sec("postings"))
+    p = _read_section(spark, lay, "postings")
     out = (
         p.select(
             "bucket",
@@ -2014,15 +2101,14 @@ def bm25_index_stats(
             F.count_distinct("word").cast("long").alias("n_terms"),
         )
     )
-    hot_path = lay.sec("hot")
-    if _fs_exists(spark, hot_path):
+    if lay.has("hot"):
         # hot terms are counted at their BASE bucket (where the df row lives)
-        n_buckets_row = _read_n_buckets(spark, path, lay=lay)
+        n_buckets = _fold_stats(spark, lay).n_buckets
         hot_counts = (
-            spark.read.parquet(hot_path)
+            _read_section(spark, lay, "hot")
             .select("word")
             .distinct()
-            .select(_bucket(F.col("word"), n_buckets_row).alias("bucket"))
+            .select(_bucket(F.col("word"), n_buckets).alias("bucket"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n_hot_terms"))
         )
@@ -2079,11 +2165,33 @@ def bm25_forward_batch(
             F.pmod(F.col("doc_id"), F.lit(n_buckets)).cast("int").alias(
                 "fbucket"
             ),
-            "doc_id",
+            F.col("doc_id").cast("long").alias("doc_id"),
             "dl",
             "terms",
         )
     )
+
+
+def _write_forward(
+    documents: DataFrame,
+    sec_path: str,
+    n_buckets: int,
+    batch_id: int,
+    create: bool,
+    tokenizer=tokenize,
+    tf: DataFrame | None = None,
+) -> None:
+    """Write one batch's forward rows under its own ``_batch_id``
+    partition of the forward section at ``sec_path`` (static overwrite
+    on ``create``, else dynamic — the postings' batch discipline)."""
+    fwd = bm25_forward_batch(documents, n_buckets, tokenizer, tf=tf)
+    tag = F.lit(batch_id).cast("long").alias(BATCH_COL)
+    with _overwrite_mode(
+        documents.sparkSession, "static" if create else "dynamic"
+    ):
+        fwd.select(tag, "*").write.mode("overwrite").partitionBy(
+            BATCH_COL, "fbucket"
+        ).parquet(sec_path)
 
 
 @_locked_writer(lambda documents, path, *a, **k: (documents.sparkSession, path))
@@ -2102,13 +2210,10 @@ def bm25_index_save_forward(
     caller's already-pinned TF relation (one tokenize per batch)."""
     spark = documents.sparkSession
     lay = _Layout(spark, path)
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
-    fwd = bm25_forward_batch(documents, n_buckets, tokenizer, tf=tf)
-    tag = F.lit(batch_id).cast("long").alias(BATCH_COL)
-    with _overwrite_mode(spark, "static" if create else "dynamic"):
-        fwd.select(tag, "*").write.mode("overwrite").partitionBy(
-            BATCH_COL, "fbucket"
-        ).parquet(lay.sec("forward"))
+    _write_forward(
+        documents, lay.sec("forward"), _fold_stats(spark, lay).n_buckets,
+        batch_id, create, tokenizer, tf,
+    )
     _verify_tree_current(spark, path, lay.version)
     _touch_stamp(spark, path)
 
@@ -2122,15 +2227,7 @@ def doc_vector_from_index(
     n_buckets`` predicate is computed driver-side (integer modulo, no
     job) and prunes the scan to one directory; the ``doc_id`` equality
     then hits parquet row-group stats inside it."""
-    lay = _Layout(spark, path, version=version)
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
-    return _drop_deleted(
-        spark.read.parquet(lay.sec("forward")).where(
-            (F.col("fbucket") == int(doc_id) % n_buckets)
-            & (F.col("doc_id") == int(doc_id))
-        ),
-        _read_deleted(spark, path, lay=lay),
-    ).select("doc_id", "dl", "terms")
+    return doc_vectors_from_index(spark, path, [doc_id], version=version)
 
 
 def more_like_this_from_index(
@@ -2163,55 +2260,31 @@ def more_like_this_from_index(
     (ties toward the lexically smaller word — deterministic), the
     Lucene-MLT ``maxQueryTerms`` discipline: a pathological megadoc
     must not expand into a hundred-thousand-term filter."""
-    src_rows = doc_vector_from_index(
-        spark, path, source_doc_id, version=version
-    ).select(
-        F.explode("terms").alias("t")
-    ).select(
-        F.col("t.word").alias("word"), F.col("t.tf").alias("tf_src")
-    ).orderBy(F.desc("tf_src"), F.asc("word")).limit(max_terms)
-    src = src_rows.localCheckpoint(eager=True)  # one read, reused twice
-    src_terms = [r["word"] for r in src.select("word").distinct().collect()]
+    lay = _Layout(spark, path, version=version)
+    src = (
+        _visible_vectors(lay, [source_doc_id])
+        .select(F.explode("terms").alias("t"))
+        .select(F.col("t.word").alias("word"), F.col("t.tf").alias("tf_src"))
+        .orderBy(F.desc("tf_src"), F.asc("word"))
+        .limit(max_terms)
+        .localCheckpoint(eager=True)  # one read, reused twice
+    )
+    src_terms = tuple(
+        r["word"] for r in src.select("word").distinct().collect()
+    )
     if not src_terms:
         return spark.createDataFrame(
             [], "doc_id long, sim double, rk int"
         )
-    lay = _Layout(spark, path, version=version)
-    n_buckets = _read_n_buckets(spark, path, lay=lay)
-    buckets = _expanded_query_buckets(
-        spark, path, tuple(src_terms), n_buckets, lay=lay
+    rs = _read_state(spark, lay, terms=src_terms)
+    postings = _state_postings(rs, src_terms, rs.buckets).where(
+        F.col("doc_id") != int(source_doc_id)
     )
-    postings = _drop_deleted(
-        spark.read.parquet(lay.sec("postings")).where(
-            F.col("bucket").isin(buckets)
-            & F.col("word").isin(*src_terms)
-            & (F.col("doc_id") != int(source_doc_id))
-        ),
-        _read_deleted(spark, path, lay=lay),
-    )
-    df_fold = (
-        spark.read.parquet(lay.sec("df"))
-        .where(F.col("bucket").isin(buckets) & F.col("word").isin(*src_terms))
-        .groupBy("word")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    scalars = _read_stats(spark, path, lay=lay).agg(
-        F.sum("n_docs").cast("double").alias("n"),
-        (
-            F.sum("total_dl").cast("double")
-            / F.sum("n_dlen_docs").cast("double")
-        ).alias("avgdl"),
-    )
-    weighted = src.join(df_fold, "word").select(
-        "word",
-        "df",
-        (
-            F.col("tf_src").cast("double")
-        ).alias("tf_src"),
+    weighted = src.join(rs.df, "word").select(
+        "word", "df", F.col("tf_src").cast("double").alias("tf_src")
     )
     dots = (
         postings.join(F.broadcast(weighted), "word")
-        .crossJoin(F.broadcast(scalars))
         .select(
             "doc_id",
             # weight = source tf (how much the source emphasizes the
@@ -2220,18 +2293,16 @@ def more_like_this_from_index(
                 F.col("tf_src")
                 * bm25_score_expr(
                     F.col("tf"),
-                    F.log(F.col("n") / (F.col("df") + F.lit(1))),
+                    F.log(F.lit(rs.stats.n_docs) / (F.col("df") + F.lit(1))),
                     F.col("dl"),
-                    F.col("avgdl"),
+                    F.lit(rs.stats.avgdl),
                 )
             ).alias("p"),
         )
         .groupBy("doc_id")
         .agg(F.round(F.sum("p"), 6).alias("sim"))
     )
-    topk = dots.orderBy(F.desc("sim"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("sim"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int"))
+    return rank_topk(dots, k, score="sim")
 
 
 def doc_vectors_from_index(
@@ -2249,8 +2320,13 @@ def doc_vectors_from_index(
         return spark.createDataFrame(
             [], "doc_id long, dl long, terms array<struct<word:string,tf:bigint>>"
         )
-    lay = _Layout(spark, path, version=version)
+    return _visible_vectors(_Layout(spark, path, version=version), ids)
+
+
+def _visible_vectors(lay: _Layout, ids: list[int]) -> DataFrame:
+    """``(doc_id, dl, terms)`` of the ids' visible forward rows."""
+    n_buckets = _fold_stats(lay.spark, lay).n_buckets
     return _drop_deleted(
-        _forward_scan(spark, path, ids, lay=lay),
-        _read_deleted(spark, path, lay=lay),
+        _forward_scan(lay, ids, n_buckets),
+        _read_deleted(lay.spark, lay.path, lay=lay),
     ).select("doc_id", "dl", "terms")

@@ -54,8 +54,9 @@ from flink_bm25_spark.operators.serving import (
     STREAM_OWNER_FILE,
     _fs_read_text,
     _fs_write_text,
+    _Layout,
     _read_deleted,
-    _read_stats,
+    _read_section,
     bm25_index_add,
     bm25_index_compact,
     bm25_index_delete,
@@ -101,7 +102,7 @@ def _claim_stream_ownership(
     # checkpoint over a prior stream's partitions
     if seen_max is None:
         def seen_max():
-            row = _read_stats(spark, path).agg(
+            row = _read_section(spark, _Layout(spark, path), "stats").agg(
                 F.max(BATCH_COL).alias("m")
             ).first()
             return row["m"]
@@ -439,10 +440,6 @@ def maintain_ivf_cdc_stream(
             )
         )
         if compact_tombstones and not due:
-            from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-                _Layout,
-            )
-
             pending = _ivf_read_deleted(spark, _Layout(spark, path).root)
             if pending is not None:
                 ctrl = ctrl.unionByName(

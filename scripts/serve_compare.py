@@ -74,8 +74,8 @@ def main() -> None:
         bm25_topk_from_index(spark, idx, terms, k=10).collect()
     served = (time.perf_counter() - t0) / (len(QUERIES) - 1)
 
-    # warmed served path: df/stats pinned in executor memory, n_buckets
-    # and hot salts pinned on the driver — one Spark job per query
+    # warmed served path: df fold pinned in executor memory, corpus
+    # scalars and hot salts on the driver — at most 3 Spark jobs per query
     from flink_bm25_spark.api import Bm25Index
 
     widx = Bm25Index(spark, idx).warm()

@@ -27,7 +27,7 @@ COLLECT_ALLOWED = {
     "operators/decontam.py",    # Bloom filter rows: bits/64 (16) rows
     "__main__.py",              # CLI search: prints the k-row top-k result
     "operators/sinks.py",       # shard manifest: n_shards rows (counts+checksum)
-    "operators/serving.py",     # batch-serve: distinct query terms (query-relation-sized)
+    "operators/serving.py",     # read state: one stats row per batch, <= HOT_CACHE_CAP hot words; batch-serve: <= ISIN_TERM_CAP+1 terms
     "streaming/index_maintenance.py",  # CDC control aggregate: one collect of ≤3 (op-kind, count) rows per micro-batch
     "operators/graph.py",  # CC fast path: ONE bounded limit(cap+1) probe; above the cap the distributed loop runs
 }

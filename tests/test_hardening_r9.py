@@ -256,7 +256,7 @@ def test_warm_pins_current_tree_when_compaction_races_the_resolve(
     # warm survived the race pinned on the post-fold tree + stamp
     assert idx._warm is not None
     assert idx._warm["stamp"] == read_write_stamp(spark, path)
-    assert idx._warm["postings_path"].startswith(os.path.join(path, "v1"))
+    assert idx._warm["read"].lay.sec("postings").startswith(os.path.join(path, "v1"))
     got = [
         (int(r["doc_id"]), float(r["score"]))
         for r in idx.search(" ".join(TERMS)).collect()

@@ -680,3 +680,30 @@ def test_bm25_prf_plan_shape(spark):
     assert "BroadcastHashJoin" in plan
     assert "ExistingRDD" in plan  # fused shared-subtree replays
     assert "SortMergeJoin" not in plan  # postings still never shuffle
+
+
+def test_topk_rank_adds_no_exchange_and_no_window(spark):
+    """``rk`` over a top-k is the row's position in the k-row result:
+    ranking adds no Exchange to the top-k plan and no WindowExec (an
+    unpartitioned rank window logs "No Partition Defined" on every call,
+    and a window partitioned by a literal plans the same once the
+    optimizer drops the foldable partition).  Ranks match the sort."""
+    from flink_bm25_spark.operators.bm25 import rank_topk
+
+    s = corpus_stats_for(spark, SF_DIR)
+    scored = s.tf.groupBy("doc_id").agg(F.sum("tf").cast("double").alias("score"))
+    bare = explain_str(
+        scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10), "simple"
+    )
+    ranked = explain_str(rank_topk(scored, 10), "simple")
+    assert ranked.count("Exchange") == bare.count("Exchange")
+    assert "Window" not in ranked
+    rows = rank_topk(scored, 10).collect()
+    assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
+    assert [(r["doc_id"], r["score"]) for r in rows] == [
+        (r["doc_id"], r["score"])
+        for r in scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
+    ]
+    for q in ("q_bm25_rank", "q_bm25_serve", "q_bm25_serve_salted"):
+        plan = explain_str(QUERIES[q](spark, SF_DIR), "simple")
+        assert "Window" not in plan, q

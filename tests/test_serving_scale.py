@@ -584,7 +584,7 @@ def test_warm_search_respects_hot_salting(spark, tmp_path):
     bm25_index_save(docs, plain, n_buckets=8)
     want = _topk(spark, plain, ("hotword", "other3"))
     idx = Bm25Index(spark, path).warm()
-    assert idx._warm["hot"].get("hotword") == 8
+    assert idx._warm["read"].stats.salts.get("hotword") == 8
     got = [tuple(r) for r in idx.search("hotword other3").collect()]
     assert got == want
 

@@ -168,7 +168,7 @@ def test_forward_scan_rel_stays_in_plan_above_cap(spark, tmp_path):
 
     small = spark.range(0, 5).select(F.col("id").alias("doc_id"))
     plan_small = (
-        _forward_scan_rel(lay, small)
+        _forward_scan_rel(lay, small, 16)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # below the cap: the id literal pushes into row-group skipping
@@ -176,7 +176,7 @@ def test_forward_scan_rel_stays_in_plan_above_cap(spark, tmp_path):
 
     n = ISIN_TERM_CAP + 40
     big = spark.range(0, n).select(F.col("id").alias("doc_id"))
-    scan = _forward_scan_rel(lay, big)
+    scan = _forward_scan_rel(lay, big, 16)
     plan_big = scan._jdf.queryExecution().executedPlan().toString()
     # above the cap: NO pushed id In-list literal — pruning rides the
     # fbucket partition filter + a semi-join whose strategy AQE picks
