@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,8 +46,8 @@ def _write_safe(df, path, compact=False):  # noqa: ANN001 — DataFrame, str
     checkpointed frame so callers can keep the truncated lineage.
 
     ``compact=True`` (r5 verdict item 7) bounds small-file growth for
-    APPEND-ONLY union-chain stores (LineScreen lines, WinnowScreen fps,
-    EmbeddingDeduper keys): each batch appends a delta's partitions, so
+    APPEND-ONLY union-chain stores (every ``_PersistedState`` relation a
+    batch grows): each batch appends a delta's partitions, so
     after many batches the store is hundreds of tiny files.  When the
     partition count exceeds 2× the cluster's default parallelism, the
     store is coalesced (narrow, no shuffle) to
@@ -64,6 +65,78 @@ def _write_safe(df, path, compact=False):  # noqa: ANN001 — DataFrame, str
                 out = out.coalesce(int(target))
     out.write.mode("overwrite").parquet(path)
     return out
+
+
+class _PersistedState:
+    """The one persistence protocol of every incremental-state object
+    (the reference's ``$inc`` loop: each batch is applied to persisted
+    state, ``BatchBM25PreMain.java:107-123``).
+
+    A subclass declares its parquet relations as ``attribute -> subdir``
+    in ``_relations`` and names in ``_grown`` the ones each batch extends
+    (append-only union chains).  ``save`` writes every relation through
+    :func:`_write_safe` — grown ones compacted, frozen ones as-is — and
+    removes the subdir of a relation that is ``None``, so a later
+    ``load`` can never resurrect stale state.  Because ``_write_safe``
+    materializes eagerly before it overwrites, ``save`` may write back
+    to the very path the state was loaded from, and the saved relations
+    are replaced by their checkpoints: plan depth stays O(1) per batch
+    however long the loop runs.  ``load`` reads the subdirs that exist.
+    """
+
+    _relations: dict[str, str] = {}
+    _grown: frozenset[str] = frozenset()
+
+    def _grow(self, attr: str, delta: DataFrame) -> None:
+        cur = getattr(self, attr)
+        setattr(self, attr, delta if cur is None else cur.unionByName(delta))
+
+    def save(self, path: str) -> None:
+        for attr, sub in self._relations.items():
+            target = os.path.join(path, sub)
+            rel = getattr(self, attr)
+            if rel is not None:
+                setattr(
+                    self,
+                    attr,
+                    _write_safe(rel, target, compact=attr in self._grown),
+                )
+            elif os.path.exists(target):
+                shutil.rmtree(target)
+
+    def checkpoint_state(self, path: str) -> None:
+        """Same as :meth:`save` (which already truncates lineage before
+        it overwrites); kept for callers of the older name."""
+        self.save(path)
+
+    def _restore(self, spark: SparkSession, path: str):
+        for attr, sub in self._relations.items():
+            src = os.path.join(path, sub)
+            if os.path.exists(src):
+                setattr(self, attr, spark.read.parquet(src))
+        return self
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str, **kw):
+        return cls(**kw)._restore(spark, path)
+
+
+def _get_lines(self) -> DataFrame | None:
+    return None if self.line_screen is None else self.line_screen.lines
+
+
+def _set_lines(self, lines: DataFrame) -> None:
+    # a persisted line store implies the stage was enabled — reconstruct
+    # it regardless of how the owner was constructed
+    if self.line_screen is None:
+        self.line_screen = LineScreen(lines)
+    else:
+        self.line_screen.lines = lines
+
+
+# The line archive of an owner's ``line_screen`` stage, as one relation
+# of the owner's own state (CorpusCurator, WebIntakeScreen).
+_line_archive = property(_get_lines, _set_lines)
 
 
 class BM25Engine:
@@ -169,15 +242,15 @@ class BM25Engine:
         return tf_vectors(self.stats.tf, k=k)
 
 
-class CorpusCurator:
+class CorpusCurator(_PersistedState):
     """Incremental corpus curation — the operational loop around the
     curation operators: state is a MinHash signature store plus the
     benchmark gram set (and, with ``line_screen=True``, the archive of
     every content line ever ingested), all plain parquet relations.
 
         curator = CorpusCurator.fit(benchmark)        # empty store
-        good1 = curator.curate_batch(day1_docs)       # survivors, state grows
-        good2 = curator.curate_batch(day2_docs)       # dedups vs day1 too
+        good1 = curator.screen_batch(day1_docs)       # survivors, state grows
+        good2 = curator.screen_batch(day2_docs)       # dedups vs day1 too
         curator.save("/state"); CorpusCurator.load(spark, "/state")
 
     Per batch, O(batch + candidates) work (``dedup.py::
@@ -189,6 +262,15 @@ class CorpusCurator:
     within one batch, ties fall to the lower id.  Replaying the same
     batch sequence reproduces the same survivors.
     """
+
+    _relations = {
+        "eval_grams": "eval_grams",
+        "sigs_wide": "sigs",
+        "_docs": "docs",
+        "lines": "lines",
+    }
+    _grown = frozenset({"sigs_wide", "_docs", "lines"})
+    lines = _line_archive
 
     def __init__(
         self,
@@ -216,7 +298,7 @@ class CorpusCurator:
             LineScreen() if line_screen else None
         )
         # Shingle width shared by BOTH decontamination sides: ``fit``
-        # builds eval_grams at this n, ``curate_batch`` probes at the
+        # builds eval_grams at this n, ``screen_batch`` probes at the
         # same n — widths must agree or overlap is identically zero.
         self.decontam_n = decontam_n
         # Archive handle for verify-stage re-shingling (candidate docs
@@ -236,7 +318,7 @@ class CorpusCurator:
             **kw,
         )
 
-    def curate_batch(self, new_documents: DataFrame) -> DataFrame:
+    def screen_batch(self, new_documents: DataFrame) -> DataFrame:
         """Quality + decontamination + near-dup screening of one batch
         against everything already ingested; returns the surviving rows
         of ``new_documents`` and extends the signature store (with ALL
@@ -309,84 +391,18 @@ class CorpusCurator:
             .join(contaminated, "doc_id", "left_anti")
             .join(losers, "doc_id", "left_anti")
         )
-        new_sigs = minhash_signatures_wide(shingles(new_documents))
-        self.sigs_wide = (
-            new_sigs
-            if self.sigs_wide is None
-            else self.sigs_wide.unionByName(new_sigs)
-        )
-        self._docs = (
-            new_documents
-            if self._docs is None
-            else self._docs.unionByName(new_documents)
-        )
+        self._grow("sigs_wide", minhash_signatures_wide(shingles(new_documents)))
+        self._grow("_docs", new_documents)
         return survivors
 
-    def save(self, path: str) -> None:
-        import shutil  # noqa: PLC0415
-
-        self.eval_grams = _write_safe(
-            self.eval_grams, os.path.join(path, "eval_grams")
-        )
-        # Stale subdirs from an earlier save are removed when the matching
-        # in-memory state is None — otherwise a later ``load`` would
-        # reconstruct an inconsistent curator (e.g. signatures without the
-        # archive they were built from).
-        for name, attr in (("sigs", "sigs_wide"), ("docs", "_docs")):
-            sub = os.path.join(path, name)
-            state = getattr(self, attr)
-            if state is not None:
-                setattr(self, attr, _write_safe(state, sub))
-            elif os.path.exists(sub):
-                shutil.rmtree(sub)
-        lines_sub = os.path.join(path, "lines")
-        if self.line_screen is not None and self.line_screen.lines is not None:
-            self.line_screen.save(path)  # writes ``path/lines``
-        elif os.path.exists(lines_sub):
-            shutil.rmtree(lines_sub)
-
-    def checkpoint_state(self, path: str) -> None:
-        """Truncate state lineage, then persist: after many batches the
-        in-memory signature store / archive handle are union-chains whose
-        plan depth grows with batch count.  An EAGER ``localCheckpoint``
-        materializes them and cuts the lineage to a flat block scan (the
-        same stage-checkpoint pattern as the connected-components loop),
-        so a long-running ingest stays O(1) in plan size per batch — and
-        because the data is materialized BEFORE the write, ``save`` can
-        safely overwrite the very parquet a previous ``load`` read from
-        (an overwrite of a path still feeding the plan would lose data).
-        """
-        # eval_grams included: a curator loaded FROM ``path`` still reads
-        # these parquet files lazily — overwriting them mid-plan loses data
-        self.eval_grams = self.eval_grams.localCheckpoint(eager=True)
-        if self.sigs_wide is not None:
-            self.sigs_wide = self.sigs_wide.localCheckpoint(eager=True)
-        if self._docs is not None:
-            self._docs = self._docs.localCheckpoint(eager=True)
-        if self.line_screen is not None and self.line_screen.lines is not None:
-            self.line_screen.lines = self.line_screen.lines.localCheckpoint(
-                eager=True
-            )
-        self.save(path)
+    curate_batch = screen_batch
 
     @classmethod
     def load(cls, spark: SparkSession, path: str, **kw) -> "CorpusCurator":
-        cur = cls(spark.read.parquet(os.path.join(path, "eval_grams")), **kw)
-        sig_path = os.path.join(path, "sigs")
-        if os.path.exists(sig_path):
-            cur.sigs_wide = spark.read.parquet(sig_path)
-        docs_path = os.path.join(path, "docs")
-        if os.path.exists(docs_path):
-            cur._docs = spark.read.parquet(docs_path)
-        lines_path = os.path.join(path, "lines")
-        if os.path.exists(lines_path):
-            # a persisted line store implies the stage was enabled —
-            # reconstruct it regardless of the ``line_screen`` kwarg
-            cur.line_screen = LineScreen(spark.read.parquet(lines_path))
-        return cur
+        return cls(None, **kw)._restore(spark, path)
 
 
-class EmbeddingDeduper:
+class EmbeddingDeduper(_PersistedState):
     """Incremental SemDeDup-style screening — the embedding analog of
     :class:`CorpusCurator`: state is a persisted sign-LSH band-key store
     (vector + norm + band keys, ``similarity.embedding_band_store``), so
@@ -404,6 +420,9 @@ class EmbeddingDeduper:
     to the lower vec_id.  Replaying the same batch sequence reproduces
     the same survivors.
     """
+
+    _relations = {"keys_wide": "keys"}
+    _grown = frozenset(_relations)
 
     def __init__(
         self,
@@ -443,41 +462,11 @@ class EmbeddingDeduper:
             pairs.select("d1", "d2"), new_vectors.select("vec_id")
         )
         survivors = new_vectors.join(losers, "vec_id", "left_anti")
-        self.keys_wide = (
-            new_keys
-            if self.keys_wide is None
-            else self.keys_wide.unionByName(new_keys)
-        )
+        self._grow("keys_wide", new_keys)
         return survivors
 
-    def save(self, path: str) -> None:
-        import shutil  # noqa: PLC0415
 
-        sub = os.path.join(path, "keys")
-        if self.keys_wide is not None:
-            self.keys_wide = _write_safe(self.keys_wide, sub, compact=True)
-        elif os.path.exists(sub):
-            shutil.rmtree(sub)
-
-    def checkpoint_state(self, path: str) -> None:
-        """Eager lineage truncation + persist (same stage-checkpoint
-        rationale as ``CorpusCurator.checkpoint_state``: the store is a
-        union-chain whose plan depth grows per batch, and the overwrite
-        must not race the plan still reading the old files)."""
-        if self.keys_wide is not None:
-            self.keys_wide = self.keys_wide.localCheckpoint(eager=True)
-        self.save(path)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str, **kw) -> "EmbeddingDeduper":
-        dd = cls(**kw)
-        keys_path = os.path.join(path, "keys")
-        if os.path.exists(keys_path):
-            dd.keys_wide = spark.read.parquet(keys_path)
-        return dd
-
-
-class WinnowScreen:
+class WinnowScreen(_PersistedState):
     """Incremental copy-detection screening — the WINNOWING analog of
     :class:`EmbeddingDeduper`: state is the persisted ``(doc_id, fp)``
     fingerprint relation, so each batch is screened against everything
@@ -496,6 +485,9 @@ class WinnowScreen:
     each batch, so a fingerprint that becomes ubiquitous stops pairing
     exactly as in a full rebuild.
     """
+
+    _relations = {"fps": "fps"}
+    _grown = frozenset(_relations)
 
     def __init__(
         self,
@@ -534,37 +526,11 @@ class WinnowScreen:
             pairs.select("d1", "d2"), new_documents.select("doc_id")
         )
         survivors = new_documents.join(losers, "doc_id", "left_anti")
-        self.fps = (
-            new_fps if self.fps is None else self.fps.unionByName(new_fps)
-        )
+        self._grow("fps", new_fps)
         return survivors
 
-    def save(self, path: str) -> None:
-        import shutil  # noqa: PLC0415
 
-        sub = os.path.join(path, "fps")
-        if self.fps is not None:
-            self.fps = _write_safe(self.fps, sub, compact=True)
-        elif os.path.exists(sub):
-            shutil.rmtree(sub)
-
-    def checkpoint_state(self, path: str) -> None:
-        """Eager lineage truncation + persist (union-chain plan depth
-        grows per batch; the overwrite must not race readers)."""
-        if self.fps is not None:
-            self.fps = self.fps.localCheckpoint(eager=True)
-        self.save(path)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str, **kw) -> "WinnowScreen":
-        ws = cls(**kw)
-        fps_path = os.path.join(path, "fps")
-        if os.path.exists(fps_path):
-            ws.fps = spark.read.parquet(fps_path)
-        return ws
-
-
-class QuantileTracker:
+class QuantileTracker(_PersistedState):
     """Incremental distribution monitor — the streaming/batch-loop twin of
     the KMV quantile sketch (:mod:`flink_bm25_spark.operators.sketches`):
     state is one bottom-k row sample per group, merged batch-by-batch
@@ -585,6 +551,8 @@ class QuantileTracker:
     correct Structured-Streaming form (drive it from ``foreachBatch``,
     same as :class:`CorpusCurator`).
     """
+
+    _relations = {"sketch": "kmv"}
 
     def __init__(self, sketch: DataFrame | None = None, k: int = 256):
         self.sketch = sketch
@@ -614,14 +582,14 @@ class QuantileTracker:
         new = kmv_sketch_by(
             batch, group_col, value_col, key_col, k=self.k, seed=seed
         ).withColumnRenamed(group_col, "grp")
-        merged = new if self.sketch is None else self.sketch.unionByName(new)
+        self._grow("sketch", new)
         # dropDuplicates BEFORE the k-cut: an at-least-once redelivery
         # re-unions rows already in the store, and a duplicated (key)
         # would displace a legitimate sample row — dedup makes re-ingest
         # a no-op (redelivery-safe, same contract as the curator).
         w = Window.partitionBy("grp").orderBy(F.asc("hk"), F.asc("key"))
         self.sketch = (
-            merged.dropDuplicates(["grp", "key"])
+            self.sketch.dropDuplicates(["grp", "key"])
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= self.k)
             .drop("_rn")
@@ -634,23 +602,13 @@ class QuantileTracker:
             raise ValueError("no batches ingested yet")
         return kmv_quantiles_by(self.sketch, "grp", qs)
 
-    def checkpoint_state(self, path: str) -> None:
-        """Eager lineage truncation + persist — the union-chain plan
-        depth grows per batch (same rationale as the other trackers)."""
-        if self.sketch is not None:
-            self.sketch = self.sketch.localCheckpoint(eager=True)
-        self.save(path)
-
     def save(self, path: str) -> None:
-        if self.sketch is not None:
-            self.sketch = _write_safe(self.sketch, os.path.join(path, "kmv"))
+        super().save(path)
         # The (group, value, key, seed) tuple AND k are part of the
         # state: without them, a restarted process could merge a batch
         # sketched under a different configuration — or re-cut the
         # restored sample at a different k, which is no longer the
         # bottom-k of everything ingested — with no error.
-        import json  # noqa: PLC0415
-
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "cfg.json"), "w") as f:
             json.dump(
@@ -669,8 +627,6 @@ class QuantileTracker:
         passing a conflicting explicit ``k`` raises (a restored bottom-k
         sample is only the bottom-k of history at ITS OWN k — re-cutting
         at a larger k would silently bias every later quantile)."""
-        import json  # noqa: PLC0415
-
         saved_k = None
         saved_cfg = None
         cfg_path = os.path.join(path, "cfg.json")
@@ -687,16 +643,13 @@ class QuantileTracker:
                 f"QuantileTracker state at {path} was built with k={saved_k}; "
                 f"loading it at k={k} would re-cut an incomparable sample"
             )
-        qt = cls(k=k if k is not None else (saved_k or 256))
-        sub = os.path.join(path, "kmv")
-        if os.path.exists(sub):
-            qt.sketch = spark.read.parquet(sub)
+        qt = cls(k=k if k is not None else (saved_k or 256))._restore(spark, path)
         if saved_cfg is not None:
             qt._cfg = tuple(saved_cfg)
         return qt
 
 
-class LineScreen:
+class LineScreen(_PersistedState):
     """Incremental CCNet step-1 line dedup — the line-level analog of
     :class:`WinnowScreen`: state is the persisted relation of every
     content line ever ingested, so each batch is cleaned against the
@@ -713,6 +666,9 @@ class LineScreen:
     archived.  Equals a full :func:`~flink_bm25_spark.operators.dedup.
     line_dedup` rebuild whenever batch order agrees with doc_id order.
     """
+
+    _relations = {"lines": "lines"}
+    _grown = frozenset(_relations)
 
     def __init__(
         self,
@@ -742,36 +698,11 @@ class LineScreen:
         # new_store is the UNSEEN delta — dupe-free against the archive
         # by construction — so store maintenance is a true append: the
         # archive is never re-keyed or re-distinct'd.
-        self.lines = (
-            new_store
-            if self.lines is None
-            else self.lines.unionByName(new_store)
-        )
+        self._grow("lines", new_store)
         return cleaned
 
-    def save(self, path: str) -> None:
-        if self.lines is not None:
-            self.lines = _write_safe(
-                self.lines, os.path.join(path, "lines"), compact=True
-            )
 
-    def checkpoint_state(self, path: str) -> None:
-        """Eager lineage truncation + persist (union-chain depth grows
-        per batch; the overwrite must not race the old plan)."""
-        if self.lines is not None:
-            self.lines = self.lines.localCheckpoint(eager=True)
-        self.save(path)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str, **kw) -> "LineScreen":
-        ls = cls(**kw)
-        sub = os.path.join(path, "lines")
-        if os.path.exists(sub):
-            ls.lines = spark.read.parquet(sub)
-        return ls
-
-
-class WebIntakeScreen:
+class WebIntakeScreen(_PersistedState):
     """CCNet's PRODUCTION shape of the web-intake chain (Wenzek et al.
     2020 run it this way over every CommonCrawl snapshot): the per-group
     LM and the bucket/gate operating points are fitted ONCE on a
@@ -807,6 +738,19 @@ class WebIntakeScreen:
     subset only; only the no-group case still yields null ``nll``.
     """
 
+    # the model and cuts are frozen at fit; the line archive is the
+    # only relation a batch grows
+    _relations = {
+        "model": "model",
+        "nll_cuts": "nll_cuts",
+        "score_cuts": "score_cuts",
+        "contexts": "contexts",
+        "defaults": "defaults",
+        "lines": "lines",
+    }
+    _grown = frozenset({"lines"})
+    lines = _line_archive
+
     def __init__(
         self,
         model: DataFrame,
@@ -829,7 +773,7 @@ class WebIntakeScreen:
         self.by_col = by_col
         self.text_col = text_col
         self.sep = sep
-        self._lines = LineScreen(text_col=text_col, sep=sep)
+        self.line_screen = LineScreen(text_col=text_col, sep=sep)
 
     @classmethod
     def fit(
@@ -917,7 +861,7 @@ class WebIntakeScreen:
         )
         # the group key rides the line screen's n_lines spine (carry) —
         # no doc-keyed join to re-attach it (r6)
-        docs = self._lines.screen_batch(
+        docs = self.line_screen.screen_batch(
             stripped, carry=(by,)
         ).withColumnRenamed("cleaned_text", tc)
         # left joins everywhere below: a doc with no model-known bigram
@@ -977,21 +921,7 @@ class WebIntakeScreen:
         )
 
     def save(self, path: str) -> None:
-        self.model = _write_safe(self.model, os.path.join(path, "model"))
-        self.nll_cuts = _write_safe(
-            self.nll_cuts, os.path.join(path, "nll_cuts")
-        )
-        self.score_cuts = _write_safe(
-            self.score_cuts, os.path.join(path, "score_cuts")
-        )
-        if self.contexts is not None:
-            self.contexts = _write_safe(
-                self.contexts, os.path.join(path, "contexts")
-            )
-            self.defaults = _write_safe(
-                self.defaults, os.path.join(path, "defaults")
-            )
-        self._lines.save(path)
+        super().save(path)
         with open(os.path.join(path, "config.json"), "w") as fh:
             json.dump(
                 {
@@ -1003,41 +933,19 @@ class WebIntakeScreen:
                 fh,
             )
 
-    def checkpoint_state(self, path: str) -> None:
-        """Truncate the line archive's union-chain lineage, then persist
-        (model and cuts are frozen — their lineage never grows)."""
-        if self._lines.lines is not None:
-            self._lines.lines = self._lines.lines.localCheckpoint(eager=True)
-        self.save(path)
-
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "WebIntakeScreen":
         with open(os.path.join(path, "config.json")) as fh:
             cfg = json.load(fh)
-        ctx_path = os.path.join(path, "contexts")
-        screen = cls(
-            spark.read.parquet(os.path.join(path, "model")),
-            spark.read.parquet(os.path.join(path, "nll_cuts")),
-            spark.read.parquet(os.path.join(path, "score_cuts")),
+        return cls(
+            None,
+            None,
+            None,
             cfg["global_score_cut"],
             by_col=cfg["by_col"],
             text_col=cfg["text_col"],
             sep=cfg["sep"],
-            contexts=(
-                spark.read.parquet(ctx_path)
-                if os.path.exists(ctx_path)
-                else None
-            ),
-            defaults=(
-                spark.read.parquet(os.path.join(path, "defaults"))
-                if os.path.exists(os.path.join(path, "defaults"))
-                else None
-            ),
-        )
-        screen._lines = LineScreen.load(
-            spark, path, text_col=cfg["text_col"], sep=cfg["sep"]
-        )
-        return screen
+        )._restore(spark, path)
 
 
 class Bm25Index:

@@ -46,8 +46,10 @@ def bm25_score_expr(tf, idf_col, dl, avgdl, k1: float = BM25_K1, b: float = BM25
     return idf_col * (tf_d * F.lit(k1 + 1.0)) / denom
 
 
-def rank_topk(scored: DataFrame, k: int, score: str = "score") -> DataFrame:
-    """Global top-``k`` of ``scored`` by ``score`` desc, ``doc_id`` asc,
+def rank_topk(
+    scored: DataFrame, k: int, score: str = "score", id_col: str = "doc_id"
+) -> DataFrame:
+    """Global top-``k`` of ``scored`` by ``score`` desc, ``id_col`` asc,
     with a 1-based ``rk`` column appended.
 
     orderBy+limit plans TakeOrderedAndProject: each partition keeps a
@@ -61,7 +63,7 @@ def rank_topk(scored: DataFrame, k: int, score: str = "score") -> DataFrame:
     Defined" on every call (partitioning the window by a literal does
     not help: the optimizer drops foldable window partitions)."""
     return (
-        scored.orderBy(F.desc(score), F.asc("doc_id"))
+        scored.orderBy(F.desc(score), F.asc(id_col))
         .limit(k)
         .withColumn("rk", (F.monotonically_increasing_id() + 1).cast("int"))
     )

@@ -38,13 +38,7 @@ CC_FAST_PATH_MAX_EDGES = int(
 # labelings in a module-level dict keyed on (session, plan semantic hash).
 # That let a REPEAT invocation of the same query skip the whole loop —
 # which is result caching across runs, not optimization — so the memo was
-# removed; every call now computes from its input.  ``clear_memo`` stays
-# as a no-op so existing callers keep working.
-
-
-def clear_memo() -> None:
-    """No-op (kept for API compatibility): the former result memo was
-    removed in the r9 optimization round — every call recomputes."""
+# removed; every call now computes from its input.
 
 
 def connected_components(

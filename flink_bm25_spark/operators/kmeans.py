@@ -73,17 +73,7 @@ def _with_cluster(
 # so a repeat fit over the same plan skipped the Lloyd loop.  That is
 # result caching across runs, not optimization, so the memo was removed;
 # the fit's per-round cost was cut instead (literal-referenced centroids,
-# narrow posexplode stats — see :func:`kmeans_fit`).  ``clear_memo``
-# stays as a no-op so existing callers keep working.
-
-
-def clear_memo() -> None:
-    """No-op (kept for API compatibility): the former centroid/CC result
-    memos were removed in the r9 optimization round — every fit
-    recomputes from its input."""
-    from flink_bm25_spark.operators import graph  # noqa: PLC0415
-
-    graph.clear_memo()
+# narrow posexplode stats — see :func:`kmeans_fit`).
 
 
 def kmeans_fit(

@@ -29,20 +29,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def with_rank(
-    df: DataFrame, order_cols: Sequence, rank_col: str = "rk"
-) -> DataFrame:
-    """Attach a 1-based rank column over an ALREADY-TRUNCATED top-k
-    relation.  The window is intentionally unpartitioned: callers must
-    pass a ≤k-row frame (e.g. the output of ``orderBy().limit(k)``) —
-    ranking a corpus-sized relation this way would serialize it into one
-    partition, which is exactly what the upstream TakeOrderedAndProject
-    avoids."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    w = Window.orderBy(*order_cols)
-    return df.withColumn(rank_col, F.row_number().over(w).cast("int"))
+from flink_bm25_spark.operators.bm25 import bm25_rank, rank_topk
 
 
 def rrf_fuse(
@@ -82,8 +69,7 @@ def rrf_fuse(
         )
         .select(F.col("_id").alias(id_col), "rrf", "n_systems")
     )
-    topk = fused.orderBy(F.desc("rrf"), F.asc(id_col)).limit(k)
-    return with_rank(topk, [F.desc("rrf"), F.asc(id_col)])
+    return rank_topk(fused, k, score="rrf", id_col=id_col)
 
 
 def late_interaction_topk(
@@ -162,7 +148,6 @@ def hybrid_search(
 
     ``embeddings.vec_id`` must be the same id space as ``tf.doc_id``
     (one embedding per document)."""
-    from flink_bm25_spark.operators.bm25 import bm25_rank  # noqa: PLC0415
     from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
         cosine_topk,
     )
@@ -170,8 +155,10 @@ def hybrid_search(
     lex = bm25_rank(tf, idf_stats, dlen, query_terms, k=pool).select(
         "doc_id", "rk"
     )
-    dense = with_rank(
+    dense = rank_topk(
         cosine_topk(embeddings, query_vec, k=pool, exclude_id=exclude_id),
-        [F.desc("cos"), F.asc("vec_id")],
+        pool,
+        score="cos",
+        id_col="vec_id",
     ).select(F.col("vec_id").alias("doc_id"), "rk")
     return rrf_fuse([lex, dense], k0=k0, k=k)

@@ -69,6 +69,7 @@ from flink_bm25_spark.functions.hashing import h60
 from flink_bm25_spark.operators.bm25 import bm25_score_expr, rank_topk
 from flink_bm25_spark.operators.df_idf import document_frequencies
 from flink_bm25_spark.operators.pipeline import build_corpus_stats
+from flink_bm25_spark.operators.sinks import overwrite_mode
 from flink_bm25_spark.operators.tf import doc_lengths
 from flink_bm25_spark.operators.tokenize import tokenize
 
@@ -814,28 +815,6 @@ BATCH_COL = "_batch_id"
 ISIN_TERM_CAP = 64
 
 
-class _overwrite_mode:
-    """Scoped ``spark.sql.sources.partitionOverwriteMode`` — restores the
-    previous session value on exit."""
-
-    def __init__(self, spark: SparkSession, mode: str):
-        self._spark, self._mode = spark, mode
-
-    def __enter__(self):
-        self._old = self._spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self._spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", self._mode
-        )
-
-    def __exit__(self, *exc):
-        self._spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", self._old
-        )
-        return False
-
-
 def _hot_words(df_parts: DataFrame, hot_df_cap: int, n_buckets: int) -> DataFrame:
     """``(word, n_salts)`` for the batch's terms whose df exceeds the
     cap — the stopword-grade keys that would otherwise concentrate one
@@ -917,7 +896,7 @@ def _write_index_batch(
     # set-and-restore, not set: leaking dynamic mode into the session
     # would silently turn every later static overwrite (e.g. compaction)
     # into a partial one
-    with _overwrite_mode(spark, "dynamic" if not create else "static"):
+    with overwrite_mode(spark, "dynamic" if not create else "static"):
         postings.select(tag, "*").write.mode(mode).partitionBy(
             BATCH_COL, "bucket"
         ).parquet(os.path.join(root, "postings"))
@@ -1213,7 +1192,7 @@ def bm25_index_delete(
     neg_df, neg_stats, tombstones = _write_negative_partials(
         victims, path, batch_id, n_buckets, below=DELETE_ALL
     )
-    with _overwrite_mode(spark, "dynamic"):
+    with overwrite_mode(spark, "dynamic"):
         neg_df.select(tag, "*").write.mode("overwrite").partitionBy(
             BATCH_COL, "bucket"
         ).parquet(lay.sec("df"))
@@ -1408,7 +1387,7 @@ def bm25_index_upsert(
     # no coalesce(1): a corpus-shaped batch's tombstones must not funnel
     # through one task (tiny batches still write few files — the distinct
     # upstream leaves most partitions empty and parquet skips them)
-    with _overwrite_mode(spark, "dynamic"):
+    with overwrite_mode(spark, "dynamic"):
         tombstones.select(tag, "*").coalesce(8).write.mode(
             "overwrite"
         ).partitionBy(BATCH_COL).parquet(deleted_path)
@@ -1819,7 +1798,7 @@ def bm25_index_compact(
     # nothing is deleted or renamed, so a failure anywhere here leaves
     # the index untouched and an orphan v<N+1> reaped on the next run)
     written = ["postings", "df", "stats"]
-    with _overwrite_mode(spark, "static"):
+    with overwrite_mode(spark, "static"):
         postings.write.mode("overwrite").partitionBy(
             BATCH_COL, "bucket"
         ).parquet(os.path.join(new_root, "postings"))
@@ -2186,7 +2165,7 @@ def _write_forward(
     on ``create``, else dynamic — the postings' batch discipline)."""
     fwd = bm25_forward_batch(documents, n_buckets, tokenizer, tf=tf)
     tag = F.lit(batch_id).cast("long").alias(BATCH_COL)
-    with _overwrite_mode(
+    with overwrite_mode(
         documents.sparkSession, "static" if create else "dynamic"
     ):
         fwd.select(tag, "*").write.mode("overwrite").partitionBy(

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flink_bm25_spark.config import HASH_PRIME
 from flink_bm25_spark.functions.vectors import cosine_similarity
+from flink_bm25_spark.operators.sinks import overwrite_mode
 
 
 def cosine_topk(
@@ -1287,9 +1288,7 @@ def ivf_save(model, assigned: DataFrame, path: str) -> None:
     # partition absent from the new data, resurrecting superseded and
     # tombstoned vectors (caught by the retrain-after-upsert gauge test
     # running after a dynamic-mode test).
-    from flink_bm25_spark.operators.serving import _overwrite_mode  # noqa: PLC0415
-
-    with _overwrite_mode(spark, "static"):
+    with overwrite_mode(spark, "static"):
         assigned.withColumn("post_train", F.lit(False)).select(
             F.lit(0).cast("long").alias(BATCH_COL), "*"
         ).write.mode("overwrite").partitionBy(BATCH_COL, "cell").parquet(
@@ -1429,7 +1428,6 @@ def ivf_delete(spark, path: str, vec_ids, batch_id: int | None = None) -> None:
         BATCH_COL,
         DELETE_ALL,
         _Layout,
-        _overwrite_mode,
     )
 
     if isinstance(vec_ids, DataFrame):
@@ -1448,7 +1446,7 @@ def ivf_delete(spark, path: str, vec_ids, batch_id: int | None = None) -> None:
     tombstones = ids_rel.withColumn(
         "below", F.lit(int(DELETE_ALL)).cast("long")
     )
-    with _overwrite_mode(spark, "dynamic"):
+    with overwrite_mode(spark, "dynamic"):
         tombstones.select(tag, "*").coalesce(8).write.mode(
             "overwrite"
         ).partitionBy(BATCH_COL).parquet(os.path.join(lay.root, "deleted"))
@@ -1480,7 +1478,6 @@ def ivf_upsert(
     from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
         BATCH_COL,
         _Layout,
-        _overwrite_mode,
     )
 
     if batch_id is None:
@@ -1492,7 +1489,7 @@ def ivf_upsert(
         .distinct()
         .withColumn("below", F.lit(int(batch_id)).cast("long"))
     )
-    with _overwrite_mode(spark, "dynamic"):
+    with overwrite_mode(spark, "dynamic"):
         tombstones.select(tag, "*").coalesce(8).write.mode(
             "overwrite"
         ).partitionBy(BATCH_COL).parquet(os.path.join(lay.root, "deleted"))
@@ -1546,10 +1543,6 @@ def ivf_add(spark, path: str, new_vectors: DataFrame, batch_id: int | None = Non
     from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
         BATCH_COL,
         STREAM_BATCH_BASE,
-        _overwrite_mode,
-    )
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
         _Layout,
         _verify_tree_current,
     )
@@ -1560,7 +1553,7 @@ def ivf_add(spark, path: str, new_vectors: DataFrame, batch_id: int | None = Non
     assigned = ivf_assign_to_existing(
         spark, path, new_vectors
     ).withColumn("post_train", F.lit(True))
-    with _overwrite_mode(spark, "dynamic"):
+    with overwrite_mode(spark, "dynamic"):
         assigned.select(
             F.lit(int(batch_id)).cast("long").alias(BATCH_COL), "*"
         ).write.mode("overwrite").partitionBy(BATCH_COL, "cell").parquet(
@@ -1601,7 +1594,6 @@ def ivf_compact(
         _fs_write_text,
         _gc_versions,
         _Layout,
-        _overwrite_mode,
     )
 
     # legacy migration (pre-manifest r7 staged swap): full rollback
@@ -1658,7 +1650,7 @@ def ivf_compact(
         excl,
     ).repartition(files_per_cell * 8, "cell")
     written = ["cells"]
-    with _overwrite_mode(spark, "static"):
+    with overwrite_mode(spark, "static"):
         folded.write.mode("overwrite").partitionBy(BATCH_COL, "cell").parquet(
             os.path.join(path, f"v{new_version}", "cells")
         )

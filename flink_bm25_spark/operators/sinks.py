@@ -9,8 +9,23 @@ is only folded into the nested document shape at the sink boundary.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def overwrite_mode(spark: SparkSession, mode: str):
+    """Scoped ``spark.sql.sources.partitionOverwriteMode`` — restores the
+    previous session value on exit."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key, "static")
+    spark.conf.set(key, mode)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def tf_vectors(tf: DataFrame, k: int | None = None) -> DataFrame:
@@ -51,9 +66,7 @@ def write_partitioned(df: DataFrame, path: str, *part_cols: str) -> None:
     STATIC overwrite is scoped explicitly: this is a full-table rewrite,
     and a session left in dynamic mode (the streaming sinks' setting)
     would otherwise keep partitions absent from the new data."""
-    from flink_bm25_spark.operators.serving import _overwrite_mode  # noqa: PLC0415
-
-    with _overwrite_mode(df.sparkSession, "static"):
+    with overwrite_mode(df.sparkSession, "static"):
         df.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
 
 
@@ -121,9 +134,7 @@ def write_reference_text(
     out count-desc.  One shuffle total, any number of documents.
     """
     lines = reference_text_lines(tf, k=k, doc_col=doc_col)
-    from flink_bm25_spark.operators.serving import _overwrite_mode  # noqa: PLC0415
-
-    with _overwrite_mode(lines.sparkSession, "static"):  # full rewrite
+    with overwrite_mode(lines.sparkSession, "static"):  # full rewrite
         (
             lines.repartition(F.col(doc_col))
             .sortWithinPartitions(doc_col, "rk")
@@ -238,9 +249,7 @@ def write_training_shards(
     import json  # noqa: PLC0415
     import os  # noqa: PLC0415
 
-    from flink_bm25_spark.operators.serving import _overwrite_mode  # noqa: PLC0415
-
-    with _overwrite_mode(df.sparkSession, "static"):  # full rewrite
+    with overwrite_mode(df.sparkSession, "static"):  # full rewrite
         df.write.mode("overwrite").partitionBy(shard_col).parquet(path)
     data_cols = [c for c in df.columns if c != shard_col]
     row_h = F.xxhash64(*[F.col(c) for c in data_cols])

@@ -9,10 +9,11 @@ Point upserts are exactly what a 100 TB stream cannot do — one random
 write per record.  The scale-correct translation is the log-structured
 merge shape every big-table system uses:
 
-- **Write path**: each micro-batch appends its (already partially
-  aggregated) delta as immutable parquet files tagged with the batch id —
-  sequential I/O only, no read-modify-write, exactly-once via the
-  streaming checkpoint + idempotent per-batch output paths.
+- **Write path**: each micro-batch writes its (already partially
+  aggregated) delta as immutable parquet files into its own batch-id
+  partition (:func:`write_batch_partition`) — sequential I/O only, no
+  read-modify-write, effectively-once: a re-delivered batch replaces its
+  own partition instead of adding a second copy.
 - **Read path**: ``$inc`` semantics = SUM over the log per key
   (:func:`read_additive`); document-upsert semantics = latest batch wins
   per key (:func:`read_latest`).  Both are one aggregation over a
@@ -31,27 +32,59 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_bm25_spark.operators.sinks import overwrite_mode
+
 BATCH_COL = "_batch_id"
+
+
+def write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``_batch_id = batch_id`` partition of the
+    parquet dataset at ``path``, replacing only that partition.
+
+    Dynamic partition overwrite, not blind append: ``foreachBatch``
+    delivers at least once, and a re-delivered batch must REPLACE its
+    own partition, not add a second copy.  The mode is scoped (restored
+    on exit): set bare on the session it would leak into every later
+    full-rebuild overwrite, which would then keep stale partitions."""
+    with overwrite_mode(df.sparkSession, "dynamic"):
+        (
+            df.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
+            .write.mode("overwrite")
+            .partitionBy(BATCH_COL)
+            .parquet(path)
+        )
+
+
+def run_available_now(
+    stream: DataFrame, checkpoint: str, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Drive ``stream`` through the ``foreachBatch`` function ``fn``
+    until its input is exhausted (availableNow trigger — processes all
+    pending input, then stops); ``checkpoint`` keeps batch ids stable
+    across restarts."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def append_batch_writer(
     path: str, transform: Callable[[DataFrame], DataFrame] | None = None
 ) -> Callable[[DataFrame, int], None]:
-    """A ``foreachBatch`` function that appends ``transform(batch)`` to
-    the log at ``path``, partitioned by batch id.
+    """A ``foreachBatch`` function that writes ``transform(batch)`` into
+    the log at ``path`` as the batch's own ``_batch_id`` partition.
 
-    Partitioning by ``_batch_id`` makes re-delivered batches idempotent
-    in spirit (same partition directory) and lets :func:`read_latest`
-    prune old partitions when only recent state matters."""
+    A re-delivered batch replaces its partition, so it is counted once
+    (:func:`write_batch_partition`); the partitioning also lets
+    :func:`read_latest` prune old partitions when only recent state
+    matters."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         out = transform(batch_df) if transform is not None else batch_df
-        (
-            out.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .partitionBy(BATCH_COL)
-            .parquet(path)
-        )
+        write_batch_partition(out, path, batch_id)
 
     return _write
 
@@ -117,12 +150,5 @@ def run_stream_to_log(
     checkpoint: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
-    """Drive ``stream`` through the append-log sink until exhausted
-    (availableNow trigger — processes all pending input, then stops)."""
-    q = (
-        stream.writeStream.foreachBatch(append_batch_writer(path, transform))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drive ``stream`` through the append-log sink until exhausted."""
+    run_available_now(stream, checkpoint, append_batch_writer(path, transform))

@@ -1,85 +1,70 @@
-"""Continuous-ingest curation — the :class:`~flink_bm25_spark.api.
-CorpusCurator` driven by a document stream.
+"""Continuous-ingest screening — any screen of :mod:`flink_bm25_spark.api`
+(:class:`~flink_bm25_spark.api.CorpusCurator`,
+:class:`~flink_bm25_spark.api.EmbeddingDeduper`,
+:class:`~flink_bm25_spark.api.WinnowScreen`, ...) driven by a stream.
 
-The batch curator's contract (curate one batch against everything
-already ingested, extend the signature store) is exactly the
-``foreachBatch`` contract, so streaming curation is the same object fed
-micro-batches: each trigger's documents are screened against the
-accumulated state — including documents from EARLIER TRIGGERS of the
-same stream — and survivors append to a parquet sink.
+A screen's contract (screen one batch against everything already
+ingested, extend the persisted state) is exactly the ``foreachBatch``
+contract, so streaming screening is the same object fed micro-batches:
+each trigger's rows are screened against the accumulated state —
+including rows from EARLIER TRIGGERS of the same stream — and survivors
+land in a parquet sink.
 
-Scale/ops posture: state lives in the curator's relations (signature
-store, eval grams, archive handle), checkpointed to parquet by
-``curator.save`` between runs — restart the stream with a reloaded
-curator and dedup continues across the restart (pinned by test).  The
-survivor sink is append-only partitioned by batch id, same layout as
+Scale/ops posture: state lives in the screen's relations, persisted to
+parquet by ``screen.save`` — restart the stream with a reloaded screen
+and dedup continues across the restart (pinned by test).  The survivor
+sink is partitioned by batch id, same layout as
 :mod:`flink_bm25_spark.streaming.append_log`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from flink_bm25_spark.api import CorpusCurator
+from flink_bm25_spark.streaming.append_log import (
+    BATCH_COL,
+    run_available_now,
+    write_batch_partition,
+)
 
-BATCH_COL = "_batch_id"
 
-
-def curate_stream(
+def screen_stream(
     stream: DataFrame,
-    curator: CorpusCurator,
+    screen,
     out_path: str,
     checkpoint: str,
     state_path: str | None = None,
 ) -> None:
-    """Drive a document stream through ``curator`` until exhausted
-    (availableNow trigger): per micro-batch, survivors append to
-    ``out_path``; when ``state_path`` is given the curator state is
-    checkpointed after every batch, so a crash resumes with at most one
-    batch re-screened — and the sink's dynamic partition overwrite makes
-    the re-delivered batch replace its own partition (effectively-once
-    output under foreachBatch's at-least-once delivery)."""
+    """Drive a stream through ``screen`` (anything with ``screen_batch``
+    and ``save``) until exhausted (availableNow trigger): per
+    micro-batch, survivors land in ``out_path``; when ``state_path`` is
+    given the screen state is saved after every batch, so a crash
+    resumes with at most one batch re-screened — and the sink's dynamic
+    partition overwrite makes the re-delivered batch replace its own
+    partition (effectively-once output under foreachBatch's
+    at-least-once delivery)."""
 
-    def _curate(batch_df: DataFrame, batch_id: int) -> None:
-        survivors = curator.curate_batch(batch_df)
-        # Dynamic partition overwrite (not blind append): a re-delivered
-        # batch REPLACES its own _batch_id partition, so foreachBatch's
-        # at-least-once delivery becomes effectively-once in the sink.
-        spark = batch_df.sparkSession
-        # SCOPED dynamic overwrite (restores on exit): setting it bare on
-        # the session leaks into every later full-rebuild overwrite in
-        # the same session, which would then keep stale partitions
-        from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-            _overwrite_mode,
-        )
-
-        with _overwrite_mode(spark, "dynamic"):
-            (
-                survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .partitionBy(BATCH_COL)
-                .parquet(out_path)
-            )
+    def _screen(batch_df: DataFrame, batch_id: int) -> None:
+        write_batch_partition(screen.screen_batch(batch_df), out_path, batch_id)
         if state_path is not None:
-            # save + reload: truncates the union-chain lineage of the
-            # growing state so plan depth stays O(1) per batch
-            curator.checkpoint_state(state_path)
+            # also truncates the union-chain lineage of the growing
+            # state, so plan depth stays O(1) per batch
+            screen.save(state_path)
 
-    q = (
-        stream.writeStream.foreachBatch(_curate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, checkpoint, _screen)
 
 
-def read_curated(spark, out_path: str) -> DataFrame:
-    """The accumulated survivor corpus (all batches; works both before
-    and after :func:`compact_curated`)."""
+curate_stream = screen_stream
+
+
+def read_screened(spark, out_path: str) -> DataFrame:
+    """The accumulated survivors (all batches; works both before and
+    after :func:`compact_curated`)."""
     df = spark.read.parquet(out_path)
     return df.drop(BATCH_COL) if BATCH_COL in df.columns else df
+
+
+read_curated = read_screened
 
 
 def compact_curated(spark, out_path: str, num_files: int = 8) -> None:

@@ -62,10 +62,11 @@ from flink_bm25_spark.operators.serving import (
     bm25_index_delete,
     bm25_index_upsert,
 )
+from flink_bm25_spark.streaming.append_log import run_available_now
 
 
 def _claim_stream_ownership(
-    spark, path: str, checkpoint: str, seen_max=None, remedy: str | None = None
+    spark, path: str, checkpoint: str, ivf: bool = False
 ) -> None:
     """Micro-batch-0 guard shared by every index-maintenance loop: refuse
     a FRESH checkpoint attaching to an index that already holds stream
@@ -81,10 +82,10 @@ def _claim_stream_ownership(
     0) as a foreign stream's and permanently fail the restart instead of
     letting the idempotent overwrite reapply.
 
-    ``seen_max`` supplies the index's highest committed stream batch id
-    (or None) — the pre-marker-era belt-and-braces, consulted only when
-    no marker exists; ``remedy`` names the compaction to run."""
-    remedy = remedy or "bm25_index_compact"
+    The index's highest committed stream batch id is the pre-marker-era
+    belt-and-braces, consulted only when no marker exists; ``ivf``
+    selects the dense index's probe and compaction remedy."""
+    remedy = "ivf_compact" if ivf else "bm25_index_compact"
     marker = os.path.join(path, STREAM_OWNER_FILE)
     owner = _fs_read_text(spark, marker)
     if owner == checkpoint:
@@ -100,13 +101,16 @@ def _claim_stream_ownership(
     # belt-and-braces for pre-marker indexes: stream ids beyond
     # BASE+0 with an UNOWNED batch-0 delivery can only be a fresh
     # checkpoint over a prior stream's partitions
-    if seen_max is None:
-        def seen_max():
-            row = _read_section(spark, _Layout(spark, path), "stats").agg(
-                F.max(BATCH_COL).alias("m")
-            ).first()
-            return row["m"]
-    seen = seen_max()
+    if ivf:
+        from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
+            _ivf_batch_ids,
+        )
+
+        seen = max(_ivf_batch_ids(spark, path), default=None)
+    else:
+        seen = _read_section(spark, _Layout(spark, path), "stats").agg(
+            F.max(BATCH_COL).alias("m")
+        ).first()["m"]
     if seen is not None and int(seen) > STREAM_BATCH_BASE:
         raise RuntimeError(
             "fresh streaming checkpoint over an index that already"
@@ -119,7 +123,7 @@ def _claim_stream_ownership(
     _fs_write_text(spark, marker, checkpoint)
 
 
-def _gc_tick(spark, path: str, grace_seconds: float, gc_fn=None) -> None:
+def _gc_tick(spark, path: str, grace_seconds: float, ivf: bool = False) -> None:
     """Optional per-micro-batch GC: reclaim superseded version trees as
     soon as their read grace expires instead of waiting for the NEXT
     fold (a serve-mostly stream may never fold again, and
@@ -130,11 +134,114 @@ def _gc_tick(spark, path: str, grace_seconds: float, gc_fn=None) -> None:
         _list_manifest_versions,
         bm25_index_gc,
     )
+    from flink_bm25_spark.operators.similarity import ivf_gc  # noqa: PLC0415
 
     versions = _list_manifest_versions(spark, path)
     if not versions:
         return  # never folded: nothing superseded to reclaim
-    (gc_fn or bm25_index_gc)(spark, path, grace_seconds=grace_seconds)
+    (ivf_gc if ivf else bm25_index_gc)(spark, path, grace_seconds=grace_seconds)
+
+
+def _housekeeping(
+    spark, path: str, checkpoint: str, batch_id: int, gc_grace_seconds,
+    ivf: bool = False,
+) -> None:
+    """Start of every micro-batch of every loop: the batch-0 ownership
+    claim, then the optional GC tick."""
+    if batch_id == 0:
+        _claim_stream_ownership(spark, path, checkpoint, ivf)
+    if gc_grace_seconds is not None:
+        _gc_tick(spark, path, gc_grace_seconds, ivf)
+
+
+def _fold_due(compact_every: int | None, batch_id: int) -> bool:
+    return bool(compact_every and batch_id > 0 and batch_id % compact_every == 0)
+
+
+def _append_loop(
+    stream: DataFrame,
+    path: str,
+    checkpoint: str,
+    compact_every: int | None,
+    gc_grace_seconds: float | None,
+    compact,
+    add,
+    ivf: bool = False,
+) -> None:
+    """The append-only loop both index kinds share: each micro-batch
+    lands under ``STREAM_BATCH_BASE + batch_id`` through ``add(spark,
+    batch, id)``; a due fold (``compact(spark, exclude_ids)``) runs
+    first and excludes that id."""
+
+    def _add(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        _housekeeping(spark, path, checkpoint, batch_id, gc_grace_seconds, ivf)
+        if _fold_due(compact_every, batch_id):
+            compact(spark, (STREAM_BATCH_BASE + batch_id,))
+        if batch_df.isEmpty():
+            return
+        add(spark, batch_df, STREAM_BATCH_BASE + batch_id)
+
+    run_available_now(stream, checkpoint, _add)
+
+
+def _latest_changes(
+    batch_df: DataFrame, key: str, payload: str, op_col: str
+) -> DataFrame:
+    """``(key, op, payload)`` — one change per key per micro-batch,
+    pinned once (disk-backed): the deduped change set feeds both legs
+    plus the control aggregate — without the checkpoint the groupBy
+    re-runs up to three times per micro-batch.  Latest-by-``seq`` wins
+    when the stream carries event ids, else a deterministic
+    lexicographic max (redelivery must reproduce the same choice)."""
+    order = (
+        F.col("seq")
+        if "seq" in batch_df.columns
+        else F.struct(F.col(op_col), F.col(payload))
+    )
+    return (
+        batch_df.groupBy(key)
+        .agg(
+            F.max_by(
+                F.struct(F.col(op_col).alias("op"), F.col(payload)), order
+            ).alias("ch")
+        )
+        .select(key, F.col("ch.op").alias("op"), f"ch.{payload}")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _pending_gauge(pending: DataFrame | None) -> list[DataFrame]:
+    """The pending-tombstone count as a ``(k, n)`` control relation."""
+    if pending is None:
+        return []
+    return [
+        pending.agg(F.count("*").alias("n")).select(
+            F.lit("_pending").alias("k"), "n"
+        )
+    ]
+
+
+def _control_counts(
+    latest: DataFrame, delete_op: str, extra: list[DataFrame]
+) -> dict[str, int]:
+    """ONE driver-blocking control job per micro-batch: both legs'
+    emptiness probes (``deletes``/``upserts``) and every ``(k, n)``
+    gauge in ``extra`` ride a single unioned collect — the r8 loop paid
+    up to 3 extra jobs of scheduling floor here."""
+    ctrl = (
+        latest.groupBy((F.col("op") == delete_op).alias("d"))
+        .agg(F.count("*").alias("n"))
+        .select(
+            F.when(F.col("d"), F.lit("deletes"))
+            .otherwise(F.lit("upserts"))
+            .alias("k"),
+            "n",
+        )
+    )
+    for rel in extra:
+        ctrl = ctrl.unionByName(rel)
+    return {r["k"]: int(r["n"]) for r in ctrl.collect()}
 
 
 def maintain_index_stream(
@@ -164,35 +271,15 @@ def maintain_index_stream(
     from flink_bm25_spark.operators.tokenize import tokenize  # noqa: PLC0415
 
     tok = tokenizer or tokenize
-
-    def _add(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_id == 0:
-            _claim_stream_ownership(spark, path, checkpoint)
-        if gc_grace_seconds is not None:
-            _gc_tick(spark, path, gc_grace_seconds)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            bm25_index_compact(
-                spark,
-                path,
-                exclude_batch_ids=(STREAM_BATCH_BASE + batch_id,),
-                hot_df_cap=hot_df_cap,
-            )
-        if batch_df.isEmpty():
-            return
-        bm25_index_add(
-            batch_df, path, tokenizer=tok,
-            batch_id=STREAM_BATCH_BASE + batch_id,
-            hot_df_cap=hot_df_cap,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_add)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _append_loop(
+        stream, path, checkpoint, compact_every, gc_grace_seconds,
+        compact=lambda spark, excl: bm25_index_compact(
+            spark, path, exclude_batch_ids=excl, hot_df_cap=hot_df_cap
+        ),
+        add=lambda spark, df, bid: bm25_index_add(
+            df, path, tokenizer=tok, batch_id=bid, hot_df_cap=hot_df_cap
+        ),
     )
-    q.awaitTermination()
 
 
 def maintain_index_cdc_stream(
@@ -263,60 +350,18 @@ def maintain_index_cdc_stream(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if batch_id == 0:
-            _claim_stream_ownership(spark, path, checkpoint)
-        if gc_grace_seconds is not None:
-            _gc_tick(spark, path, gc_grace_seconds)
+        _housekeeping(spark, path, checkpoint, batch_id, gc_grace_seconds)
         del_id = STREAM_BATCH_BASE + 2 * batch_id
-        ups_id = STREAM_BATCH_BASE + 2 * batch_id + 1
-        # one op per doc per micro-batch: latest-by-seq wins when the
-        # stream carries event ids, else a deterministic lexicographic
-        # max (redelivery must reproduce the same choice)
-        order = (
-            F.col("seq")
-            if "seq" in batch_df.columns
-            else F.struct(F.col(op_col), F.col("text"))
+        ups_id = del_id + 1
+        latest = _latest_changes(batch_df, "doc_id", "text", op_col)
+        due = _fold_due(compact_every, batch_id)
+        gauge = bool(compact_tombstones) and not due
+        counts = _control_counts(
+            latest,
+            delete_op,
+            _pending_gauge(_read_deleted(spark, path)) if gauge else [],
         )
-        # pinned once (disk-backed): the deduped change set feeds both
-        # legs plus the control aggregate — without the checkpoint the
-        # groupBy re-runs up to three times per micro-batch
-        latest = (
-            batch_df.groupBy("doc_id")
-            .agg(
-                F.max_by(
-                    F.struct(F.col(op_col).alias("op"), F.col("text")), order
-                ).alias("ch")
-            )
-            .select("doc_id", F.col("ch.op").alias("op"), "ch.text")
-            .localCheckpoint(eager=True)
-        )
-        due = bool(
-            compact_every and batch_id > 0 and batch_id % compact_every == 0
-        )
-        # ONE driver-blocking control job per micro-batch: both legs'
-        # emptiness probes AND (when armed and not already due) the
-        # pending-tombstone gauge ride a single unioned collect — the
-        # r8 loop paid up to 3 extra jobs of scheduling floor here
-        ctrl = (
-            latest.groupBy((F.col("op") == delete_op).alias("d"))
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.when(F.col("d"), F.lit("deletes"))
-                .otherwise(F.lit("upserts"))
-                .alias("k"),
-                "n",
-            )
-        )
-        if compact_tombstones and not due:
-            pending = _read_deleted(spark, path)
-            if pending is not None:
-                ctrl = ctrl.unionByName(
-                    pending.agg(F.count("*").alias("n")).select(
-                        F.lit("_pending").alias("k"), "n"
-                    )
-                )
-        counts = {r["k"]: int(r["n"]) for r in ctrl.collect()}
-        if compact_tombstones and not due:
+        if gauge:
             due = counts.get("_pending", 0) >= int(compact_tombstones)
         if due:
             bm25_index_compact(
@@ -343,13 +388,7 @@ def maintain_index_cdc_stream(
                 hot_df_cap=hot_df_cap,
             )
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, checkpoint, _apply)
 
 
 def maintain_ivf_cdc_stream(
@@ -386,73 +425,31 @@ def maintain_ivf_cdc_stream(
     (its upsert tombstones hide the folded copy and rewrite the same
     embeddings; its deletes re-hide already-absent ids)."""
     from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-        _ivf_batch_ids,
         _ivf_read_deleted,
         ivf_compact,
         ivf_delete,
+        ivf_retrain,
+        ivf_stats,
         ivf_upsert,
     )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if batch_id == 0:
-            _claim_stream_ownership(
-                spark, path, checkpoint,
-                seen_max=lambda: max(_ivf_batch_ids(spark, path), default=None),
-                remedy="ivf_compact",
-            )
-        if gc_grace_seconds is not None:
-            from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-                ivf_gc,
-            )
-
-            _gc_tick(spark, path, gc_grace_seconds, gc_fn=ivf_gc)
+        _housekeeping(
+            spark, path, checkpoint, batch_id, gc_grace_seconds, ivf=True
+        )
         del_id = STREAM_BATCH_BASE + 2 * batch_id
-        ups_id = STREAM_BATCH_BASE + 2 * batch_id + 1
-        order = (
-            F.col("seq")
-            if "seq" in batch_df.columns
-            else F.struct(F.col(op_col), F.col("embedding"))
+        ups_id = del_id + 1
+        latest = _latest_changes(batch_df, "vec_id", "embedding", op_col)
+        due = _fold_due(compact_every, batch_id)
+        gauge = bool(compact_tombstones) and not due
+        extra = (
+            _pending_gauge(_ivf_read_deleted(spark, _Layout(spark, path).root))
+            if gauge
+            else []
         )
-        latest = (
-            batch_df.groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.struct(F.col(op_col).alias("op"), F.col("embedding")),
-                    order,
-                ).alias("ch")
-            )
-            .select("vec_id", F.col("ch.op").alias("op"), "ch.embedding")
-            .localCheckpoint(eager=True)
-        )
-        due = bool(
-            compact_every and batch_id > 0 and batch_id % compact_every == 0
-        )
-        # same single-control-job discipline as the BM25 CDC loop
-        ctrl = (
-            latest.groupBy((F.col("op") == delete_op).alias("d"))
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.when(F.col("d"), F.lit("deletes"))
-                .otherwise(F.lit("upserts"))
-                .alias("k"),
-                "n",
-            )
-        )
-        if compact_tombstones and not due:
-            pending = _ivf_read_deleted(spark, _Layout(spark, path).root)
-            if pending is not None:
-                ctrl = ctrl.unionByName(
-                    pending.agg(F.count("*").alias("n")).select(
-                        F.lit("_pending").alias("k"), "n"
-                    )
-                )
         if retrain_staleness is not None:
-            from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-                ivf_stats,
-            )
-
-            gauge = (
+            extra.append(
                 ivf_stats(spark, path)
                 .select(
                     F.explode(
@@ -470,28 +467,20 @@ def maintain_ivf_cdc_stream(
                 )
                 .select("r.k", "r.n")
             )
-            ctrl = ctrl.unionByName(gauge)
-        counts = {r["k"]: int(r["n"]) for r in ctrl.collect()}
+        counts = _control_counts(latest, delete_op, extra)
         if (
             retrain_staleness is not None
             and counts.get("_n_vec", 0) > 0
             and counts.get("_n_stale", 0) / counts["_n_vec"]
             >= float(retrain_staleness)
         ):
-            from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-                _fs_write_text,
-            )
-            from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-                ivf_retrain,
-            )
-
             ivf_retrain(spark, path)
             # the in-place rebuild released stream ownership — re-claim
             _fs_write_text(
                 spark, os.path.join(path, STREAM_OWNER_FILE), checkpoint
             )
             due = False  # freshly rebuilt: a fold would be a no-op pass
-        if compact_tombstones and not due:
+        if gauge:
             due = counts.get("_pending", 0) >= int(compact_tombstones)
         if due:
             ivf_compact(spark, path, exclude_batch_ids=(del_id, ups_id))
@@ -512,13 +501,7 @@ def maintain_ivf_cdc_stream(
                 batch_id=ups_id,
             )
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, checkpoint, _apply)
 
 
 def maintain_ivf_stream(
@@ -538,40 +521,15 @@ def maintain_ivf_stream(
     to be (re-)added — a redelivered uncommitted batch still replaces
     its own partition instead of double-counting a folded copy."""
     from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-        _ivf_batch_ids,
         ivf_add,
         ivf_compact,
     )
 
-    def _add(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_id == 0:
-            _claim_stream_ownership(
-                spark, path, checkpoint,
-                seen_max=lambda: max(_ivf_batch_ids(spark, path), default=None),
-                remedy="ivf_compact",
-            )
-        if gc_grace_seconds is not None:
-            from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-                ivf_gc,
-            )
-
-            _gc_tick(spark, path, gc_grace_seconds, gc_fn=ivf_gc)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            ivf_compact(
-                spark, path,
-                exclude_batch_ids=(STREAM_BATCH_BASE + batch_id,),
-            )
-        if batch_df.isEmpty():
-            return
-        ivf_add(
-            spark, path, batch_df, batch_id=STREAM_BATCH_BASE + batch_id
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_add)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _append_loop(
+        stream, path, checkpoint, compact_every, gc_grace_seconds,
+        compact=lambda spark, excl: ivf_compact(
+            spark, path, exclude_batch_ids=excl
+        ),
+        add=lambda spark, df, bid: ivf_add(spark, path, df, batch_id=bid),
+        ivf=True,
     )
-    q.awaitTermination()

@@ -793,3 +793,131 @@ def test_line_screen_store_compaction_many_batches(spark, tmp_path):
     re = LineScreen.load(spark, path)
     redone = re.screen_batch(first).collect()
     assert len(redone) == 1 and redone[0].n_kept == 0
+
+
+def _state_case(spark, name):
+    """``(populated, empty)`` factories for one incremental-state class,
+    over tiny in-memory batches."""
+    from flink_bm25_spark import api
+
+    text = [
+        (1, "en", "alpha beta gamma delta epsilon\nzeta eta theta iota kappa"),
+        (2, "de", "lambda mu nu xi omicron\npi rho sigma tau upsilon"),
+        (3, "en", "alpha beta gamma delta epsilon\nphi chi psi omega one"),
+    ]
+    docs = spark.createDataFrame(text, "doc_id long, lang string, text string")
+    if name == "CorpusCurator":
+        # the stores as a batch leaves them, without running the
+        # MinHash plan (other tests pin curate_batch itself)
+        grams = spark.createDataFrame([("lambda mu nu",)], "gram string")
+
+        def empty():
+            return api.CorpusCurator(grams)
+
+        def populated():
+            cur = empty()
+            cur.sigs_wide = docs.select("doc_id", F.lit(7).alias("band"))
+            cur._docs = docs.select("doc_id", "text")
+            return cur
+
+    elif name == "EmbeddingDeduper":
+
+        def empty():
+            return api.EmbeddingDeduper(dim=4, nnz=2, bands=2, bits_per_band=2)
+
+        def populated():
+            dd = empty()
+            dd.screen_batch(spark.createDataFrame(
+                [(i, [float(i), 1.0, 0.5, -1.0]) for i in range(4)],
+                "vec_id long, embedding array<double>",
+            ))
+            return dd
+
+    elif name == "QuantileTracker":
+
+        def empty():
+            return api.QuantileTracker(k=4)
+
+        def populated():
+            qt = empty()
+            qt.update_batch(docs, "lang", "doc_id", "doc_id")
+            return qt
+
+    elif name == "WebIntakeScreen":
+        # frozen relations as literals: the state under test is the
+        # line archive, and fitting would only add Spark jobs
+        model = spark.createDataFrame(
+            [("en", "alpha", "beta", 0.5)],
+            "lang string, w1 string, w2 string, nl double",
+        )
+        nll_cuts = spark.createDataFrame(
+            [("en", 1.0, 2.0)], "lang string, nll_c1 double, nll_c2 double"
+        )
+        score_cuts = spark.createDataFrame(
+            [("en", 0.0)], "lang string, score_cut double"
+        )
+
+        def empty():
+            return api.WebIntakeScreen(model, nll_cuts, score_cuts, 0.0)
+
+        def populated():
+            ws = empty()
+            ws.screen_batch(docs)
+            return ws
+
+    else:  # WinnowScreen, LineScreen: text batches, default config
+        cls = getattr(api, name)
+
+        def empty():
+            return cls()
+
+        def populated():
+            screen = empty()
+            screen.screen_batch(docs.select("doc_id", "text"))
+            return screen
+
+    return populated, empty
+
+
+def _jobs_run(spark, fn) -> int:
+    core = spark.sparkContext._jsc.sc()
+    first = int(core.dagScheduler().nextJobId())
+    fn()
+    return int(core.dagScheduler().nextJobId()) - first
+
+
+@pytest.mark.parametrize(
+    "name, grown",
+    [
+        pytest.param(name, grown, id=name)
+        for name, grown in (
+            ("LineScreen", ["lines"]),
+            ("QuantileTracker", ["sketch"]),
+            ("WinnowScreen", ["fps"]),
+            ("EmbeddingDeduper", ["keys_wide"]),
+            ("WebIntakeScreen", ["lines"]),
+            ("CorpusCurator", ["sigs_wide", "_docs"]),
+        )
+    ],
+)
+def test_empty_save_removes_stale_state(spark, tmp_path, name, grown):
+    """save -> save of an EMPTY object to the same path -> load must not
+    resurrect the first save's ``grown`` relations (a stale sample or
+    archive would be merged into the next batch), and the older
+    ``checkpoint_state`` name runs no more Spark jobs than ``save``."""
+    populated, empty = _state_case(spark, name)
+    cls = type(empty())
+    full = populated()
+    assert all(getattr(full, a) is not None for a in grown)
+    assert all(getattr(empty(), a) is None for a in grown)
+
+    path = str(tmp_path / "state")
+    full.save(path)  # runs the batch plan; the relations are now flat
+    save_jobs = _jobs_run(spark, lambda: full.save(path))
+    ckpt_jobs = _jobs_run(spark, lambda: full.checkpoint_state(path))
+    assert ckpt_jobs <= save_jobs, (ckpt_jobs, save_jobs)
+
+    empty().save(path)
+    back = cls.load(spark, path)
+    for attr in grown:
+        assert getattr(back, attr) is None, attr

@@ -135,8 +135,7 @@ def test_logreg_and_classifier_on_empty_input(spark):
 def test_kmeans_no_result_memo(spark):
     """r9 optimization round: the former module-level RESULT memos
     (kmeans fit / connected components, keyed on plan semantic hash) are
-    gone — repeat fits RECOMPUTE and must be value-identical; clear_memo
-    survives as a no-op for API compatibility."""
+    gone — repeat fits RECOMPUTE and must be value-identical."""
     from flink_bm25_spark.operators import graph, kmeans
 
     assert not hasattr(kmeans, "_KM_MEMO")
@@ -146,5 +145,4 @@ def test_kmeans_no_result_memo(spark):
         "vec_id long, embedding array<double>",
     )
     c1 = kmeans.kmeans_fit(df, k=2, iterations=1)
-    kmeans.clear_memo()  # no-op, must not raise
     assert kmeans.kmeans_fit(df, k=2, iterations=1) == c1  # refit identical

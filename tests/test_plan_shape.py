@@ -704,6 +704,22 @@ def test_topk_rank_adds_no_exchange_and_no_window(spark):
         (r["doc_id"], r["score"])
         for r in scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
     ]
-    for q in ("q_bm25_rank", "q_bm25_serve", "q_bm25_serve_salted"):
+    for q in ("q_bm25_rank", "q_bm25_serve", "q_bm25_serve_salted", "q_hybrid_rrf"):
         plan = explain_str(QUERIES[q](spark, SF_DIR), "simple")
         assert "Window" not in plan, q
+    # RRF ranks its fused top-k the same way, on its own id column
+    from flink_bm25_spark.operators.retrieval import rrf_fuse
+
+    lists = [
+        rank_topk(scored, 10).select(F.col("doc_id").alias("id"), "rk"),
+        rank_topk(scored.withColumn("score", -F.col("score")), 10).select(
+            F.col("doc_id").alias("id"), "rk"
+        ),
+    ]
+    fused = rrf_fuse(lists, id_col="id", k=5)
+    assert "Window" not in explain_str(fused, "simple")
+    rows = fused.collect()
+    assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
+    assert [r["id"] for r in rows] == [
+        r["id"] for r in sorted(rows, key=lambda r: (-r["rrf"], r["id"]))
+    ]

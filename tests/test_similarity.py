@@ -358,7 +358,7 @@ def test_embedding_screen_stream(spark, tmp_path):
     # availableNow stream over parquet: two files -> micro-batches; dup
     # vectors across the stream are screened with first-arrival policy.
     from flink_bm25_spark.api import EmbeddingDeduper
-    from flink_bm25_spark.streaming.embedding_screen import (
+    from flink_bm25_spark.streaming.curation import (
         read_screened,
         screen_stream,
     )

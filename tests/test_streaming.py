@@ -310,7 +310,7 @@ def test_winnow_screen_stream(spark, tmp_path):
     arriving in LATER micro-batches are screened against earlier ones
     via the fingerprint store (first-arrival policy)."""
     from flink_bm25_spark.api import WinnowScreen
-    from flink_bm25_spark.streaming.embedding_screen import (
+    from flink_bm25_spark.streaming.curation import (
         read_screened,
         screen_stream,
     )
@@ -339,3 +339,19 @@ def test_winnow_screen_stream(spark, tmp_path):
     # exactly one of each near-dup pair survives; singletons survive
     assert (1 in kept) != (10 in kept)
     assert {2, 11} <= kept and len(kept) == 3
+
+
+def test_append_log_redelivered_batch_counted_once(spark, tmp_path):
+    # foreachBatch delivers at least once: writing batch 0 twice (a
+    # redelivery) must replace its partition, not add a second copy
+    from flink_bm25_spark.streaming.append_log import (
+        append_batch_writer,
+        read_additive,
+    )
+
+    log = str(tmp_path / "log")
+    w = append_batch_writer(log)
+    batch = spark.createDataFrame([("a", 3)], "word string, c long")
+    w(batch, 0)
+    w(batch, 0)
+    assert _rows(read_additive(spark, log, ["word"], "c")) == [("a", 3)]
