@@ -154,9 +154,19 @@ WRITER_LOCK_FILE = "_writer_lock"
 WRITER_LOCK_TIMEOUT_S = 120.0
 WRITER_LOCK_TTL_S = 600.0
 
+# Partition column naming the batch that wrote a row.
+BATCH_COL = "_batch_id"
+
 # Every section a compaction may produce (also the GC scope for stale
 # version trees and the bare pre-manifest layout).
 SECTIONS = ("postings", "df", "stats", "forward", "hot", "deleted")
+
+
+def _tombstone_schema(key: str) -> str:
+    """The ``deleted/`` section's schema, keyed by the tier's id column
+    (``doc_id`` here, ``vec_id`` for the IVF index)."""
+    return f"{key} bigint, below bigint, {BATCH_COL} int"
+
 
 # Declared schema of every section — data then partition columns, exactly
 # as parquet inference types what the writers produce — pinned by every
@@ -172,7 +182,7 @@ SECTION_SCHEMAS = {
     "forward": "doc_id bigint, dl bigint,"
     " terms array<struct<word:string,tf:bigint>>, _batch_id int, fbucket int",
     "hot": "word string, n_salts int, _batch_id int",
-    "deleted": "doc_id bigint, below bigint, _batch_id int",
+    "deleted": _tombstone_schema("doc_id"),
 }
 
 
@@ -217,24 +227,22 @@ def _fs_list_names(spark: SparkSession, path: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
 
 
+def _numbered(spark: SparkSession, path: str, prefix: str) -> set[int]:
+    """The ``<n>`` of every ``<prefix><n>`` child of a directory —
+    manifests, pins, version trees, batch partitions; no Spark job."""
+    return {
+        int(n[len(prefix):])
+        for n in _fs_list_names(spark, path)
+        if n.startswith(prefix) and n[len(prefix):].isdigit()
+    }
+
+
 def _list_manifest_versions(spark: SparkSession, path: str) -> list[int]:
-    out = []
-    for name in _fs_list_names(spark, path):
-        if name.startswith(MANIFEST_PREFIX):
-            suffix = name[len(MANIFEST_PREFIX):]
-            if suffix.isdigit():
-                out.append(int(suffix))
-    return sorted(out)
+    return sorted(_numbered(spark, path, MANIFEST_PREFIX))
 
 
 def _list_pins(spark: SparkSession, path: str) -> set[int]:
-    out = set()
-    for name in _fs_list_names(spark, path):
-        if name.startswith(PIN_PREFIX):
-            suffix = name[len(PIN_PREFIX):]
-            if suffix.isdigit():
-                out.add(int(suffix))
-    return out
+    return _numbered(spark, path, PIN_PREFIX)
 
 
 def _next_version(spark: SparkSession, path: str, current: int) -> int:
@@ -244,10 +252,7 @@ def _next_version(spark: SparkSession, path: str, current: int) -> int:
     manifest back to bare v0 while pinned snapshot trees survive;
     counting from the manifest alone would eventually collide with (and
     clobber) a pinned tree."""
-    taken = {int(current)} | _list_pins(spark, path)
-    for name in _fs_list_names(spark, path):
-        if name.startswith("v") and name[1:].isdigit():
-            taken.add(int(name[1:]))
+    taken = {int(current)} | _list_pins(spark, path) | _numbered(spark, path, "v")
     return max(taken) + 1
 
 
@@ -318,10 +323,21 @@ class _Layout:
         return _fs_exists(self.spark, self.sec(name))
 
 
-def _read_section(spark: SparkSession, lay: _Layout, name: str) -> DataFrame:
+def _read_section(
+    spark: SparkSession, lay: _Layout, name: str, schema: str | None = None
+) -> DataFrame:
     """One section of the resolved tree, read with its declared schema
-    (`SECTION_SCHEMAS`) — the engine wrote it, so nothing is inferred."""
-    return spark.read.schema(SECTION_SCHEMAS[name]).parquet(lay.sec(name))
+    (`SECTION_SCHEMAS` unless given) — the engine wrote it, so nothing
+    is inferred."""
+    return spark.read.schema(schema or SECTION_SCHEMAS[name]).parquet(
+        lay.sec(name)
+    )
+
+
+def _section_batch_ids(spark: SparkSession, lay: _Layout, name: str) -> set[int]:
+    """The ``_batch_id=<n>`` partition directories of one section of the
+    resolved tree — a directory listing, no Spark job."""
+    return _numbered(spark, lay.sec(name), f"{BATCH_COL}=")
 
 
 def _fs_mtime_ms(spark: SparkSession, path: str) -> int:
@@ -524,7 +540,7 @@ def _gc_versions(
     ``keep=0`` (no manifest / an explicit reset) reclaims everything
     versioned immediately — with no manifest there is nothing a reader
     could have resolved.  ``sections`` names the bare (v0) dirs this
-    index type owns — the BM25 set by default, ``("cells",)`` for IVF.
+    index type owns — the BM25 set by default, ``IVF_SECTIONS`` for IVF.
 
     PINNED versions (``_pin_v<N>``) keep their section TREE through
     every tier until unpinned — that is the snapshot contract
@@ -544,11 +560,9 @@ def _gc_versions(
     for v in _list_manifest_versions(spark, path):
         if v != keep and (v > keep or expired):
             _fs_delete(spark, os.path.join(path, f"{MANIFEST_PREFIX}{v}"))
-    for name in _fs_list_names(spark, path):
-        if name.startswith("v") and name[1:].isdigit():
-            v = int(name[1:])
-            if v != keep and v not in pins and (v > keep or expired):
-                _fs_delete(spark, os.path.join(path, name))
+    for v in _numbered(spark, path, "v"):
+        if v != keep and v not in pins and (v > keep or expired):
+            _fs_delete(spark, os.path.join(path, f"v{v}"))
     if keep != 0 and expired and 0 not in pins:
         for name in sections:
             bare = os.path.join(path, name)
@@ -807,8 +821,6 @@ def _score_topk(
     )
 
 
-BATCH_COL = "_batch_id"
-
 # Above this many distinct query terms, batch serving stops pushing a
 # word IN (...) literal into the scans (plan-size blowup, driver-side
 # term materialization) and relies on the broadcast hash join alone.
@@ -912,6 +924,16 @@ def _write_index_batch(
             ).parquet(os.path.join(root, "hot"))
 
 
+def _reset_to_bare(spark: SparkSession, path: str, aux: tuple[str, ...]) -> None:
+    """The full-rebuild preamble of both tiers' ``*_save``: drop every
+    manifest and unpinned version tree, the auxiliary sections the
+    rebuild does not rewrite, and the stream-owner marker."""
+    _gc_versions(spark, path, keep=0)
+    for name in (*aux, STREAM_OWNER_FILE):
+        if _fs_exists(spark, os.path.join(path, name)):
+            _fs_delete(spark, os.path.join(path, name))
+
+
 @_locked_writer(lambda documents, path, *a, **k: (documents.sparkSession, path))
 def bm25_index_save(
     documents: DataFrame,
@@ -935,14 +957,7 @@ def bm25_index_save(
     rebuilt index its first legitimate streaming checkpoint (and bless
     the stale one re-attaching over the new corpus)."""
     spark = documents.sparkSession
-    _gc_versions(spark, path, keep=0)
-    for section in ("forward", "hot", "deleted"):
-        sec_path = os.path.join(path, section)
-        if _fs_exists(spark, sec_path):
-            _fs_delete(spark, sec_path)
-    owner = os.path.join(path, STREAM_OWNER_FILE)
-    if _fs_exists(spark, owner):
-        _fs_delete(spark, owner)
+    _reset_to_bare(spark, path, ("forward", "hot", "deleted"))
     batch, tf = _index_batch_with_tf(documents, n_buckets, tokenizer)
     _write_index_batch(
         batch,
@@ -993,28 +1008,33 @@ def _fold_stats(
         return sum(r[col] or 0 for r in rows)
 
     n_dlen = total("n_dlen_docs")
-    manual = [r[BATCH_COL] for r in rows if r[BATCH_COL] < STREAM_BATCH_BASE]
     return _StatsFold(
         n_buckets=int(rows[0]["n_buckets"]),
         n_docs=float(total("n_docs")),
         avgdl=float(total("total_dl")) / float(n_dlen) if n_dlen else 0.0,
-        next_batch_id=max(manual, default=0) + 1,
+        next_batch_id=_next_manual_id(r[BATCH_COL] for r in rows),
         salts=None
         if len(salts) > HOT_CACHE_CAP
         else {r["word"]: int(r["n_salts"]) for r in salts},
     )
 
 
-def _batch_id_or_next(st: _StatsFold, batch_id: int | None) -> int:
+def _next_manual_id(batch_ids) -> int:
+    """One past the highest MANUAL id among ``batch_ids`` — stream ids
+    (:data:`STREAM_BATCH_BASE` and above) never count."""
+    return max((i for i in batch_ids if i < STREAM_BATCH_BASE), default=0) + 1
+
+
+def _batch_id_or_next(next_id: int, batch_id: int | None) -> int:
     """An explicit batch id as given; else the next manual id."""
     if batch_id is not None:
         return batch_id
-    if st.next_batch_id >= STREAM_BATCH_BASE:
+    if next_id >= STREAM_BATCH_BASE:
         raise ValueError(
-            "manual batch-id space exhausted; run bm25_index_compact"
-            " to fold batches back to 0"
+            "manual batch-id space exhausted; compact the index"
+            " (bm25_index_compact / ivf_compact) to fold batches back to 0"
         )
-    return st.next_batch_id
+    return next_id
 
 
 @_locked_writer(lambda documents, path, *a, **k: (documents.sparkSession, path))
@@ -1047,7 +1067,7 @@ def bm25_index_add(
     spark = documents.sparkSession
     lay = _Layout(spark, path)
     st = _fold_stats(spark, lay)
-    batch_id = _batch_id_or_next(st, batch_id)
+    batch_id = _batch_id_or_next(st.next_batch_id, batch_id)
     batch, tf = _index_batch_with_tf(documents, st.n_buckets, tokenizer)
     _write_index_batch(
         batch,
@@ -1072,33 +1092,45 @@ def bm25_index_add(
 DELETE_ALL = 1 << 62
 
 
-def _read_deleted(
-    spark: SparkSession, path: str, lay: "_Layout | None" = None
-) -> DataFrame | None:
-    """The folded tombstone relation ``(doc_id, below)`` if the index
-    has pending deletes/upserts, else None.
-
-    Tombstones are VERSIONED: a row hides postings/forward rows of its
-    doc with ``_batch_id < below`` (a plain delete writes ``below =
-    DELETE_ALL``; an upsert writes ``below = its own batch id`` so the
-    replacement version survives its own tombstone).  Per doc, the
-    LATEST tombstone wins (``max_by(below, _batch_id)``) — so an upsert
-    after a delete resurrects the doc, and a delete after an upsert
-    removes every version.  Small by contract (compaction applies and
-    clears it), so read paths broadcast it."""
-    lay = lay or _Layout(spark, path)
-    if not lay.has("deleted"):
-        return None
-    return (
-        _read_section(spark, lay, "deleted")
-        .groupBy("doc_id")
-        .agg(F.max_by("below", F.col(BATCH_COL)).alias("below"))
+def _latest_tombstones(raw: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Fold raw tombstone rows to ``(key, below)``: per id, the LATEST
+    tombstone wins (``max_by(below, _batch_id)``)."""
+    return raw.groupBy(key).agg(
+        F.max_by("below", F.col(BATCH_COL)).alias("below")
     )
 
 
-def _drop_deleted(df: DataFrame, deleted: DataFrame | None) -> DataFrame:
+def _read_deleted(
+    spark: SparkSession,
+    path: str,
+    lay: "_Layout | None" = None,
+    key: str = "doc_id",
+) -> DataFrame | None:
+    """The folded tombstone relation ``(key, below)`` if the index has
+    pending deletes/upserts, else None — ``key`` is the tier's id column
+    (``doc_id``; ``vec_id`` for the IVF index).
+
+    Tombstones are VERSIONED: a row hides rows of its id with
+    ``_batch_id < below`` (a plain delete writes ``below =
+    DELETE_ALL``; an upsert writes ``below = its own batch id`` so the
+    replacement version survives its own tombstone).  Per id, the
+    LATEST tombstone wins — so an upsert after a delete resurrects the
+    id, and a delete after an upsert removes every version.  Small by
+    contract (compaction applies and clears it), so read paths
+    broadcast it."""
+    lay = lay or _Layout(spark, path)
+    if not lay.has("deleted"):
+        return None
+    return _latest_tombstones(
+        _read_section(spark, lay, "deleted", _tombstone_schema(key)), key
+    )
+
+
+def _drop_deleted(
+    df: DataFrame, deleted: DataFrame | None, key: str = "doc_id"
+) -> DataFrame:
     """Filter out tombstoned VERSIONS: rows whose ``_batch_id`` is below
-    their doc's tombstone cutoff.  ``df`` must still carry the
+    their id's tombstone cutoff.  ``df`` must still carry the
     ``_batch_id`` column (every on-disk read does — it is a partition
     column).
 
@@ -1110,10 +1142,27 @@ def _drop_deleted(df: DataFrame, deleted: DataFrame | None) -> DataFrame:
     if deleted is None:
         return df
     return (
-        df.join(deleted, "doc_id", "left")
+        df.join(deleted, key, "left")
         .where(F.col("below").isNull() | (F.col(BATCH_COL) >= F.col("below")))
-        .select(*df.columns)  # the join moved doc_id first
+        .select(*df.columns)  # the join moved the key first
     )
+
+
+def _write_tombstones(
+    ids_rel: DataFrame, deleted_path: str, batch_id: int, below: int
+) -> None:
+    """Commit one batch's tombstone partition (dynamic overwrite): every
+    id of ``ids_rel`` with cutoff ``below``.  No coalesce(1): a
+    corpus-shaped batch's tombstones must not funnel through one task
+    (tiny batches still write few files — parquet skips empty
+    partitions)."""
+    tag = F.lit(int(batch_id)).cast("long").alias(BATCH_COL)
+    with overwrite_mode(ids_rel.sparkSession, "dynamic"):
+        ids_rel.withColumn("below", F.lit(int(below)).cast("long")).select(
+            tag, "*"
+        ).coalesce(8).write.mode("overwrite").partitionBy(BATCH_COL).parquet(
+            deleted_path
+        )
 
 
 @_locked_writer(lambda spark, path, *a, **k: (spark, path))
@@ -1166,7 +1215,7 @@ def bm25_index_delete(
         )
     st = _fold_stats(spark, lay)
     n_buckets = st.n_buckets
-    batch_id = _batch_id_or_next(st, batch_id)
+    batch_id = _batch_id_or_next(st.next_batch_id, batch_id)
     # The raw forward scan anti-joined with existing tombstones — so
     # re-deleting an id is a no-op by construction.
     if isinstance(doc_ids, DataFrame):
@@ -1347,7 +1396,7 @@ def bm25_index_upsert(
         )
     st = _fold_stats(spark, lay)
     n_buckets = st.n_buckets
-    batch_id = _batch_id_or_next(st, batch_id)
+    batch_id = _batch_id_or_next(st.next_batch_id, batch_id)
     # one distinct shuffle, pinned (disk-backed): the id relation feeds
     # the victim semi-join, the fbucket aggregate AND the tombstone
     # write — recomputing it would re-scan a corpus-shaped batch thrice
@@ -1358,14 +1407,12 @@ def bm25_index_upsert(
     )
     # visibility BEFORE this upsert, recomputable on redelivery: only
     # versions older than this batch, under only OLDER tombstones
-    deleted_path = lay.sec("deleted")
     prior_tombs = None
     if lay.has("deleted"):
-        prior_tombs = (
-            _read_section(spark, lay, "deleted")
-            .where(F.col(BATCH_COL) != int(batch_id))
-            .groupBy("doc_id")
-            .agg(F.max_by("below", F.col(BATCH_COL)).alias("below"))
+        prior_tombs = _latest_tombstones(
+            _read_section(spark, lay, "deleted").where(
+                F.col(BATCH_COL) != int(batch_id)
+            )
         )
     victims = _drop_deleted(
         _forward_scan_rel(lay, ids_rel, n_buckets).where(
@@ -1380,17 +1427,7 @@ def bm25_index_upsert(
     # ids the cutoff hides nothing.  Recomputed identically on
     # redelivery (pure function of ids + batch_id) — and committed
     # BEFORE the positive sections (see WRITE ORDER above).
-    tombstones = ids_rel.withColumn(
-        "below", F.lit(int(batch_id)).cast("long")
-    )
-    tag = F.lit(int(batch_id)).cast("long").alias(BATCH_COL)
-    # no coalesce(1): a corpus-shaped batch's tombstones must not funnel
-    # through one task (tiny batches still write few files — the distinct
-    # upstream leaves most partitions empty and parquet skips them)
-    with overwrite_mode(spark, "dynamic"):
-        tombstones.select(tag, "*").coalesce(8).write.mode(
-            "overwrite"
-        ).partitionBy(BATCH_COL).parquet(deleted_path)
+    _write_tombstones(ids_rel, lay.sec("deleted"), batch_id, below=batch_id)
 
     batch, tf = _index_batch_with_tf(documents, n_buckets, tokenizer)
     if victims.isEmpty():
@@ -1573,6 +1610,122 @@ def _fold_batch_col(df: DataFrame, exclude: tuple[int, ...]):
     )
 
 
+def _split_excluded(
+    df: DataFrame, excl: tuple[int, ...]
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(folded, kept)``: the rows a fold folds, and the excluded
+    (in-flight) batches' rows it carries into the new tree unfolded —
+    ``kept`` is None when nothing is excluded."""
+    if not excl:
+        return df, None
+    kept = F.col(BATCH_COL).isin(list(excl))
+    return df.where(~kept), df.where(kept)
+
+
+def _with_kept(out: DataFrame, kept: DataFrame | None) -> DataFrame:
+    """A folded section plus its excluded batches' rows, unfolded."""
+    return out if kept is None else out.unionByName(kept.select(*out.columns))
+
+
+def _compact_begin(
+    spark: SparkSession,
+    path: str,
+    sections: tuple[str, ...],
+    gc_grace_seconds: float,
+) -> tuple[_Layout, int]:
+    """A fold's first step, both tiers: recover, reclaim, pick the new
+    tree's version.  Returns the live layout and that version.
+
+    Legacy migration (pre-manifest r7 layout): an interrupted
+    staged-rename swap is rolled back IN FULL — every section present
+    in ``_compact_old`` is restored over its live counterpart, so
+    versioned tombstone cutoffs are only ever applied against ORIGINAL
+    batch ids (restoring only the missing sections could pair a live
+    re-tagged postings tree with a restored ``deleted/``, silently
+    dropping upsert survivors); a leftover ``_compact_staging`` is
+    discarded.  Then GC: superseded trees whose read grace has expired,
+    plus orphan trees of a fold that crashed before its flip."""
+    old = os.path.join(path, "_compact_old")
+    if _fs_exists(spark, old):
+        for name in sections:
+            live_sec = os.path.join(path, name)
+            old_sec = os.path.join(old, name)
+            if _fs_exists(spark, old_sec):
+                if _fs_exists(spark, live_sec):
+                    _fs_delete(spark, live_sec)
+                _fs_rename(spark, old_sec, live_sec)
+        _fs_delete(spark, old)
+    staging = os.path.join(path, "_compact_staging")
+    if _fs_exists(spark, staging):
+        _fs_delete(spark, staging)
+    lay = _Layout(spark, path)
+    _gc_versions(
+        spark, path, keep=lay.version, sections=sections,
+        grace_seconds=gc_grace_seconds,
+    )
+    return lay, _next_version(spark, path, lay.version)
+
+
+def _compact_tombstones(
+    spark: SparkSession, lay: _Layout, excl: tuple[int, ...], key: str = "doc_id"
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """``(apply, keep)`` for a fold.  COMMITTED tombstones (``apply``,
+    folded per id) are applied physically — versioned cutoffs compare
+    against ORIGINAL batch ids, so the drop must happen BEFORE the fold
+    re-tags rows to batch 0.  Excluded (in-flight) batches' raw
+    tombstones (``keep``, None when there are none) are withheld and
+    carried into the new tree: an in-flight CDC upsert's negative
+    partials live in its own (also preserved) partition, so applying its
+    cutoff while a redelivery later rewrites that partition would
+    double-count the replaced ids' old versions."""
+    if not lay.has("deleted"):
+        return None, None
+    folded, kept = _split_excluded(
+        _read_section(spark, lay, "deleted", _tombstone_schema(key)), excl
+    )
+    if kept is not None and kept.isEmpty():
+        kept = None
+    return _latest_tombstones(folded, key), kept
+
+
+def _compact_commit(
+    spark: SparkSession,
+    path: str,
+    lay: _Layout,
+    new_version: int,
+    written: list[str],
+    excl: tuple[int, ...],
+    tombs_keep: DataFrame | None,
+) -> None:
+    """A fold's last step, both tiers: write the carried tombstones into
+    the new tree, then FLIP — one atomic file-create moves every reader
+    to the new tree at the same instant (the manifest's NAME is the
+    pointer; its content is informational).  Sections absent from the
+    new tree (applied tombstones, a re-salt that found nothing hot)
+    simply don't exist there — no per-section delete window.  A FULL
+    fold (nothing excluded) folded every stream partition to batch 0, so
+    it releases the stream ownership: a NEW checkpoint may attach."""
+    import json  # noqa: PLC0415
+
+    if tombs_keep is not None:
+        with overwrite_mode(spark, "static"):
+            tombs_keep.write.mode("overwrite").partitionBy(BATCH_COL).parquet(
+                os.path.join(path, f"v{new_version}", "deleted")
+            )
+        written = [*written, "deleted"]
+    # fence (belt-and-braces behind the writer lease): a NON-LOCKING
+    # concurrent fold that flipped first would make this flip supersede
+    # a tree it never read — refuse and leave v<new> an orphan to reap
+    _verify_tree_current(spark, path, lay.version)
+    _fs_write_text(
+        spark,
+        os.path.join(path, f"{MANIFEST_PREFIX}{new_version}"),
+        json.dumps({"version": new_version, "sections": written}),
+    )
+    if not excl:
+        _fs_delete(spark, os.path.join(path, STREAM_OWNER_FILE))
+
+
 @_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def bm25_index_compact(
     spark: SparkSession,
@@ -1589,15 +1742,6 @@ def bm25_index_compact(
     of them).  df partials collapse to one row per word and the stats
     relation to one row; served scores are unchanged (the fold the
     query ran at read time is simply materialized — pinned by test).
-
-    CRASH SAFETY: every compacted relation is written to a staging
-    directory (``<path>/_compact_staging/``) FIRST, then swapped into
-    place by renames — the live index is readable until its section's
-    swap instant, and a mid-compaction failure leaves either the intact
-    live index (staging discarded on the next run) or a ``_old``
-    sibling to restore from; the data is never only in executor-memory
-    checkpoint blocks.  On rename-less object stores the swap degrades
-    to copy+delete — run compaction in a maintenance window there.
 
     ``exclude_batch_ids`` keeps the named batches UNFOLDED (rows keep
     their own ``_batch_id`` partitions): the streaming maintenance loop
@@ -1628,89 +1772,29 @@ def bm25_index_compact(
     for single-writer-single-reader maintenance windows.
 
     Tombstones of EXCLUDED (in-flight) batches are NOT applied
-    physically and their ``deleted/`` partitions are preserved: an
-    in-flight CDC upsert's negative partials live in its own (also
-    preserved) df/stats partition, so applying its cutoff here while a
-    redelivery later rewrites that partition would double-count the
-    replaced docs' old versions.  Committed batches' tombstones fold in
+    physically and their ``deleted/`` partitions are preserved
+    (`_compact_tombstones`).  Committed batches' tombstones fold in
     exactly as before."""
     excl = tuple(int(i) for i in exclude_batch_ids)
-    # Legacy migration (pre-manifest r7 layout): an interrupted
-    # staged-rename swap is rolled back IN FULL — every section present
-    # in _compact_old is restored over its live counterpart, so
-    # versioned tombstone cutoffs are only ever applied against
-    # ORIGINAL batch ids (restoring only the missing sections could
-    # pair a live re-tagged postings tree with a restored deleted/,
-    # silently dropping upsert survivors).
-    old = os.path.join(path, "_compact_old")
-    if _fs_exists(spark, old):
-        for name in SECTIONS:
-            live_sec = os.path.join(path, name)
-            old_sec = os.path.join(old, name)
-            if _fs_exists(spark, old_sec):
-                if _fs_exists(spark, live_sec):
-                    _fs_delete(spark, live_sec)
-                _fs_rename(spark, old_sec, live_sec)
-        _fs_delete(spark, old)
-    staging = os.path.join(path, "_compact_staging")
-    if _fs_exists(spark, staging):
-        _fs_delete(spark, staging)  # leftover from an interrupted r7 run
-
-    lay = _Layout(spark, path)
-    # GC: superseded trees whose read grace has expired, plus any orphan
-    # trees from a compaction that crashed before its flip.
-    _gc_versions(spark, path, keep=lay.version, grace_seconds=gc_grace_seconds)
-    new_version = _next_version(spark, path, lay.version)
+    lay, new_version = _compact_begin(spark, path, SECTIONS, gc_grace_seconds)
     new_root = os.path.join(path, f"v{new_version}")
 
     df_all = _read_section(spark, lay, "df")
-    df_fold = (
-        (df_all.where(~F.col(BATCH_COL).isin(list(excl))) if excl else df_all)
-        .groupBy("bucket", "word")
+    df_folded, df_kept = _split_excluded(df_all, excl)
+    df_fold = _with_kept(
+        df_folded.groupBy("bucket", "word")
         .agg(F.sum("df").cast("long").alias("df"))
         # fully-deleted words net to df=0 once the negative partials
         # fold in — drop the dead rows at the fold
         .where(F.col("df") != 0)
-        .withColumn(BATCH_COL, F.lit(0).cast("long"))
+        .withColumn(BATCH_COL, F.lit(0).cast("long")),
+        df_kept,
     )
-    if excl:
-        df_fold = df_fold.unionByName(
-            df_all.where(F.col(BATCH_COL).isin(list(excl))).select(
-                "bucket", "word", "df", BATCH_COL
-            )
-        )
 
-    # COMMITTED tombstones are applied physically — versioned cutoffs
-    # compare against ORIGINAL batch ids, so the drop must happen BEFORE
-    # the fold re-tags rows to batch 0.  The df/stats sums already net
-    # the delete/upsert negative partials.  Excluded (in-flight)
-    # batches' tombstones are withheld from the physical application and
-    # carried into the new tree (see the docstring's exclusion note).
-    deleted_raw = (
-        _read_section(spark, lay, "deleted") if lay.has("deleted") else None
-    )
-    deleted = None
-    deleted_keep = None
-    if deleted_raw is not None:
-        apply_src = (
-            deleted_raw.where(~F.col(BATCH_COL).isin(list(excl)))
-            if excl
-            else deleted_raw
-        )
-        deleted = apply_src.groupBy("doc_id").agg(
-            F.max_by("below", F.col(BATCH_COL)).alias("below")
-        )
-        if excl:
-            deleted_keep = deleted_raw.where(
-                F.col(BATCH_COL).isin(list(excl))
-            )
-            if deleted_keep.isEmpty():
-                deleted_keep = None
+    # The df/stats sums already net the delete/upsert negative partials.
+    deleted, deleted_keep = _compact_tombstones(spark, lay, excl)
     postings = _fold_batch_col(
-        _drop_deleted(
-            _read_section(spark, lay, "postings"), deleted
-        ),
-        excl,
+        _drop_deleted(_read_section(spark, lay, "postings"), deleted), excl
     )
     n_buckets = _fold_stats(spark, lay).n_buckets
     hot_out = None
@@ -1719,53 +1803,37 @@ def bm25_index_compact(
         # global hotness from the FOLDED df (exclusions included in the
         # measurement — their postings keep old buckets, covered by the
         # max-fold read contract)
-        global_df = _fold_df(df_all)
-        hot_new = _hot_words(global_df, hot_df_cap, n_buckets)
-        folded = (
-            postings.where(~F.col(BATCH_COL).isin(list(excl)))
-            if excl
-            else postings
-        )
+        hot_new = _hot_words(_fold_df(df_all), hot_df_cap, n_buckets)
+        folded, kept = _split_excluded(postings, excl)
         # _salt_postings recomputes bucket for EVERY row (salt 0 for
         # non-hot words = the base bucket), so this IS the global
         # re-bucketing — per-batch salt decisions are superseded
-        resalted = _salt_postings(folded, hot_new, n_buckets)
-        if excl:
-            postings = resalted.unionByName(
-                postings.where(F.col(BATCH_COL).isin(list(excl)))
-            )
-        else:
-            postings = resalted
+        postings = _with_kept(_salt_postings(folded, hot_new, n_buckets), kept)
         hot_out = hot_new.withColumn(BATCH_COL, F.lit(0).cast("long"))
-        if excl and has_hot:
-            hot_out = hot_out.unionByName(
-                _read_section(spark, lay, "hot")
-                .where(F.col(BATCH_COL).isin(list(excl)))
-                .select(*hot_out.columns)
+        if has_hot:
+            hot_out = _with_kept(
+                hot_out, _split_excluded(_read_section(spark, lay, "hot"), excl)[1]
             )
     elif has_hot:
         # preserve salting: fold hot partials with MAX (superset-safe)
-        hot_all = _read_section(spark, lay, "hot")
-        hot_out = (
-            (hot_all.where(~F.col(BATCH_COL).isin(list(excl))) if excl else hot_all)
-            .groupBy("word")
-            .agg(F.max("n_salts").alias("n_salts"))
-            .withColumn(BATCH_COL, F.lit(0).cast("long"))
+        hot_folded, hot_kept = _split_excluded(
+            _read_section(spark, lay, "hot"), excl
         )
-        if excl:
-            hot_out = hot_out.unionByName(
-                hot_all.where(F.col(BATCH_COL).isin(list(excl))).select(
-                    *hot_out.columns
-                )
-            )
+        hot_out = _with_kept(
+            hot_folded.groupBy("word")
+            .agg(F.max("n_salts").alias("n_salts"))
+            .withColumn(BATCH_COL, F.lit(0).cast("long")),
+            hot_kept,
+        )
     if hot_out is not None and hot_out.isEmpty():
         hot_out = None  # re-salt found nothing hot: the section goes away
 
     postings = postings.repartition(files_per_bucket * 8, "bucket")
-    stats_all = _read_section(spark, lay, "stats")
-    stats_fold = (
-        (stats_all.where(~F.col(BATCH_COL).isin(list(excl))) if excl else stats_all)
-        .groupBy("n_buckets")
+    stats_folded, stats_kept = _split_excluded(
+        _read_section(spark, lay, "stats"), excl
+    )
+    stats_fold = _with_kept(
+        stats_folded.groupBy("n_buckets")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("n_dlen_docs").cast("long").alias("n_dlen_docs"),
@@ -1777,26 +1845,18 @@ def bm25_index_compact(
             "total_dl",
             "n_buckets",
             F.lit(0).cast("long").alias(BATCH_COL),
-        )
+        ),
+        stats_kept,
     )
-    if excl:
-        stats_fold = stats_fold.unionByName(
-            stats_all.where(F.col(BATCH_COL).isin(list(excl))).select(
-                *stats_fold.columns
-            )
-        )
     fwd = None
     if lay.has("forward"):
         fwd = _fold_batch_col(
-            _drop_deleted(
-                _read_section(spark, lay, "forward"), deleted
-            ),
-            excl,
+            _drop_deleted(_read_section(spark, lay, "forward"), deleted), excl
         ).repartition(files_per_bucket * 8, "fbucket")
 
-    # 1) write the COMPLETE new tree (reads come from the live tree;
-    # nothing is deleted or renamed, so a failure anywhere here leaves
-    # the index untouched and an orphan v<N+1> reaped on the next run)
+    # write the COMPLETE new tree (reads come from the live tree; nothing
+    # is deleted or renamed, so a failure anywhere here leaves the index
+    # untouched and an orphan v<N+1> reaped on the next run)
     written = ["postings", "df", "stats"]
     with overwrite_mode(spark, "static"):
         postings.write.mode("overwrite").partitionBy(
@@ -1818,38 +1878,16 @@ def bm25_index_compact(
                 BATCH_COL
             ).parquet(os.path.join(new_root, "hot"))
             written.append("hot")
-        if deleted_keep is not None:
-            deleted_keep.write.mode("overwrite").partitionBy(
-                BATCH_COL
-            ).parquet(os.path.join(new_root, "deleted"))
-            written.append("deleted")
-
-    # 2) FLIP: one atomic file-create moves every reader to the new tree
-    # at the same instant (the manifest's NAME is the pointer — content
-    # is informational only).  Sections absent from the new tree
-    # (applied tombstones, a re-salt that found nothing hot) simply
-    # don't exist there — no per-section delete window.
-    import json  # noqa: PLC0415
-
-    # fence (belt-and-braces behind the writer lease): a NON-LOCKING
-    # concurrent fold that flipped first would make this flip supersede
-    # a tree it never read — refuse and leave v<new> an orphan to reap
-    _verify_tree_current(spark, path, lay.version)
-    _fs_write_text(
-        spark,
-        os.path.join(path, f"{MANIFEST_PREFIX}{new_version}"),
-        json.dumps({"version": new_version, "sections": written}),
-    )
-    if not excl:
-        # every stream partition folded to batch 0: release the stream
-        # ownership so a NEW checkpoint may legally attach
-        _fs_delete(spark, os.path.join(path, STREAM_OWNER_FILE))
+    _compact_commit(spark, path, lay, new_version, written, excl, deleted_keep)
     _touch_stamp(spark, path)
 
 
 @_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def bm25_index_gc(
-    spark: SparkSession, path: str, grace_seconds: float = 300.0
+    spark: SparkSession,
+    path: str,
+    grace_seconds: float = 300.0,
+    sections: tuple[str, ...] = SECTIONS,
 ) -> int:
     """Reclaim superseded/orphan version trees WITHOUT folding — the
     fold-once-serve-forever case: `_gc_versions` otherwise runs only at
@@ -1862,26 +1900,27 @@ def bm25_index_gc(
     finish).  Runs under the writer lease — a concurrent fold's
     half-written v<N+1> must not be reaped as an orphan mid-write.
     Does NOT bump the write stamp: the current tree's content is
-    untouched, warm readers stay valid."""
+    untouched, warm readers stay valid.  ``sections`` names the bare v0
+    dirs this tier owns (the BM25 set by default, ``IVF_SECTIONS`` for
+    the IVF index)."""
     lay = _Layout(spark, path)
-    before = set(_list_manifest_versions(spark, path)) | {
-        int(n[1:])
-        for n in _fs_list_names(spark, path)
-        if n.startswith("v") and n[1:].isdigit()
-    }
-    had_bare = lay.version > 0 and any(
-        _fs_exists(spark, os.path.join(path, s)) for s in SECTIONS
+
+    def on_disk() -> tuple[set[int], bool]:
+        """Versions with a manifest or tree, and whether bare v0 remains."""
+        bare = lay.version > 0 and any(
+            _fs_exists(spark, os.path.join(path, s)) for s in sections
+        )
+        return _numbered(spark, path, MANIFEST_PREFIX) | _numbered(
+            spark, path, "v"
+        ), bare
+
+    before, had_bare = on_disk()
+    _gc_versions(
+        spark, path, keep=lay.version, sections=sections,
+        grace_seconds=grace_seconds,
     )
-    _gc_versions(spark, path, keep=lay.version, grace_seconds=grace_seconds)
-    after = set(_list_manifest_versions(spark, path)) | {
-        int(n[1:])
-        for n in _fs_list_names(spark, path)
-        if n.startswith("v") and n[1:].isdigit()
-    }
-    bare_now = lay.version > 0 and any(
-        _fs_exists(spark, os.path.join(path, s)) for s in SECTIONS
-    )
-    return len(before - after) + (1 if had_bare and not bare_now else 0)
+    after, bare_now = on_disk()
+    return len(before - after) + int(had_bare and not bare_now)
 
 
 def bm25_index_versions(
@@ -1892,14 +1931,10 @@ def bm25_index_versions(
     (``manifest_mtime_ms`` is null for the bare pre-compaction v0; it is
     the snapshot's creation instant otherwise).  Driver-side directory
     listing only, no Spark job.  ``sections`` names the bare v0 dirs
-    this tier owns (the BM25 set by default, ``("cells",)`` for IVF)."""
+    this tier owns (the BM25 set by default, ``IVF_SECTIONS`` for IVF)."""
     manifests = set(_list_manifest_versions(spark, path))
     pins = _list_pins(spark, path)
-    trees = {
-        int(n[1:])
-        for n in _fs_list_names(spark, path)
-        if n.startswith("v") and n[1:].isdigit()
-    }
+    trees = _numbered(spark, path, "v")
     current = max(manifests) if manifests else 0
     have_bare = any(
         _fs_exists(spark, os.path.join(path, s)) for s in sections
@@ -1979,11 +2014,20 @@ def bm25_index_snapshot(spark: SparkSession, path: str, **compact_kwargs) -> int
     routine maintenance writes.  Costs one full compaction (two from
     bare); every step runs under ONE writer lease hold, so no
     concurrent mutation lands between the pin and the fold."""
+    return _snapshot(
+        spark, path, bm25_index_pin,
+        lambda: bm25_index_compact(spark, path, **compact_kwargs),
+    )
+
+
+def _snapshot(spark: SparkSession, path: str, pin, fold) -> int:
+    """The snapshot body of both tiers: under one lease hold, promote a
+    bare v0 by a fold, ``pin(spark, path)`` the current tree, fold."""
     with _writer_lock(spark, path):
         if _Layout(spark, path).version == 0:
-            bm25_index_compact(spark, path, **compact_kwargs)
-        v = bm25_index_pin(spark, path)
-        bm25_index_compact(spark, path, **compact_kwargs)
+            fold()
+        v = pin(spark, path)
+        fold()
     return v
 
 

@@ -28,11 +28,39 @@ pair, not three).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_bm25_spark.config import HASH_PRIME
 from flink_bm25_spark.functions.vectors import cosine_similarity
+from flink_bm25_spark.operators.serving import (
+    BATCH_COL,
+    DELETE_ALL,
+    _batch_id_or_next,
+    _compact_begin,
+    _compact_commit,
+    _compact_tombstones,
+    _drop_deleted,
+    _fold_batch_col,
+    _fs_delete,
+    _fs_exists,
+    _Layout,
+    _locked_writer,
+    _next_manual_id,
+    _read_deleted,
+    _reset_to_bare,
+    _section_batch_ids,
+    _snapshot,
+    _verify_tree_current,
+    _write_tombstones,
+    _writer_lock,
+    bm25_index_gc,
+    bm25_index_pin,
+    bm25_index_unpin,
+    bm25_index_versions,
+)
 from flink_bm25_spark.operators.sinks import overwrite_mode
 
 
@@ -140,9 +168,12 @@ def sparse_plane(p: int, dim: int = 64, nnz: int = 8) -> list[tuple[int, int]]:
     Li-Hastie-Church 2006 — density ≈ 1/√d).  Sparsity keeps the sign
     test to ``nnz`` add/subtract terms, so the same plane replays as a
     short arithmetic expression in ANY engine (the DuckDB oracle embeds
-    these constants verbatim)."""
+    these constants verbatim).  ``nnz`` must not exceed ``dim``: the
+    indices are distinct."""
     import hashlib  # noqa: PLC0415
 
+    if nnz > dim:
+        raise ValueError(f"sparse_plane: nnz={nnz} > dim={dim}")
     out: list[tuple[int, int]] = []
     seen: set[int] = set()
     i = 0
@@ -891,22 +922,10 @@ def ivf_topk_exact_from_disk(
     (delete/upsert legs visible), and scoring is the shared
     :func:`cosine_topk` contract.  ``version=`` reads a pinned snapshot
     tree with its stashed codebook (`ivf_pin` / `ivf_snapshot`)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _fs_exists,
-        _Layout,
-    )
-
     lay = _Layout(spark, path, version=version)
-    cent_path = os.path.join(path, "centroids")
-    if version is not None:
-        stash = _ivf_pin_centroids_stash(path, lay.version)
-        if _fs_exists(spark, stash):
-            cent_path = stash
     cents = {
         int(r["cell"]): [float(x) for x in r["centroid"]]
-        for r in spark.read.parquet(cent_path).collect()
+        for r in _ivf_centroid_rows(spark, lay, version)
     }
     q = [float(x) for x in query_vec]
 
@@ -918,13 +937,9 @@ def ivf_topk_exact_from_disk(
 
     ranked = sorted((_rdist(c), cid) for cid, c in cents.items())
     probe = [cid for _, cid in ranked[:nprobe]]
-    cand = _ivf_drop_deleted(
-        spark.read.parquet(os.path.join(lay.root, "cells")).where(
-            F.col("cell").isin(*probe)
-        ),
-        _ivf_read_deleted(spark, lay.root),
+    return cosine_topk(
+        _ivf_visible(spark, lay, probe), q, k=k, exclude_id=exclude_id
     )
-    return cosine_topk(cand, q, k=k, exclude_id=exclude_id)
 
 
 def ivf_topk(
@@ -1220,31 +1235,12 @@ def feature_hash_embeddings(
     )
 
 
-
-def _ivf_locked(get_ctx):
-    """Writer-lease decorator for the IVF mutators — same lease file and
-    fence as the BM25 tier (``operators/serving.py``): mutations and
-    folds on one index serialize across sessions, so a mutation can
-    never land in a tree a concurrent compaction is about to supersede."""
-    import functools  # noqa: PLC0415
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-                _writer_lock,
-            )
-
-            spark, path = get_ctx(*args, **kwargs)
-            with _writer_lock(spark, path):
-                return fn(*args, **kwargs)
-
-        return wrapper
-
-    return deco
+# The IVF index's sections: cell-partitioned vectors and versioned
+# tombstones (centroids live unversioned at the root).
+IVF_SECTIONS = ("cells", "deleted")
 
 
-@_ivf_locked(lambda model, assigned, path, *a, **k: (assigned.sparkSession, path))
+@_locked_writer(lambda model, assigned, path, *a, **k: (assigned.sparkSession, path))
 def ivf_save(model, assigned: DataFrame, path: str) -> None:
     """Persist the IVF index: vectors cell-PARTITIONED on disk (so a
     probe's cell filter becomes partition pruning — the physical
@@ -1259,25 +1255,8 @@ def ivf_save(model, assigned: DataFrame, path: str) -> None:
     version-0 layout (manifest pointers, version trees, and the stream
     ownership marker are cleared — same reset contract as
     ``bm25_index_save``)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        STREAM_OWNER_FILE,
-        _fs_delete,
-        _fs_exists,
-        _gc_versions,
-    )
-
     spark = assigned.sparkSession
-    _gc_versions(spark, path, keep=0, sections=IVF_SECTIONS)
-    for stale in ("deleted",):
-        p = os.path.join(path, stale)
-        if _fs_exists(spark, p):
-            _fs_delete(spark, p)
-    owner = os.path.join(path, STREAM_OWNER_FILE)
-    if _fs_exists(spark, owner):
-        _fs_delete(spark, owner)
+    _reset_to_bare(spark, path, ("deleted",))
     # post_train marks vectors written AFTER the coarse quantizer was
     # trained — the staleness gauge `ivf_stats` reads (adds/upserts set
     # it; compaction carries it; a retrain resets the whole corpus to
@@ -1311,8 +1290,6 @@ def ivf_assign_to_existing(spark, path: str, new_vectors: DataFrame) -> DataFram
     """Assign a vector batch to its nearest EXISTING cell map-side —
     centroids are n_cells×d literals compiled into the expression (no
     shuffle, no join)."""
-    import os  # noqa: PLC0415
-
     from flink_bm25_spark.operators.kmeans import _squared_dist  # noqa: PLC0415
 
     cents = spark.read.parquet(os.path.join(path, "centroids")).collect()
@@ -1333,86 +1310,68 @@ def ivf_assign_to_existing(spark, path: str, new_vectors: DataFrame) -> DataFram
     )
 
 
-IVF_SECTIONS = ("cells", "deleted")
-
-
 def _ivf_cells_path(spark, path: str) -> str:
     """Layout-resolved cells section (bare before the first compaction,
     the current ``v<N>/`` tree after — the BM25 index's `_Layout`)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import _Layout  # noqa: PLC0415
-
-    return os.path.join(_Layout(spark, path).root, "cells")
+    return _Layout(spark, path).sec("cells")
 
 
-def _ivf_read_deleted(spark, root: str):
-    """Folded ``(vec_id, below)`` tombstones under a RESOLVED layout
-    root, or None — same versioned semantics as the BM25 index's
-    ``deleted/`` section (latest tombstone per vec_id wins; a row hides
-    cell rows with ``_batch_id < below``)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        _fs_exists,
-    )
-
-    p = os.path.join(root, "deleted")
-    if not _fs_exists(spark, p):
-        return None
-    return (
-        spark.read.parquet(p)
-        .groupBy("vec_id")
-        .agg(F.max_by("below", F.col(BATCH_COL)).alias("below"))
+def _ivf_visible(spark, lay: _Layout, probe: list[int] | None = None) -> DataFrame:
+    """The resolved tree's visible vectors — cells (pruned to the
+    ``probe`` cells when given) minus tombstoned versions; cells and
+    tombstones come from the ONE layout, so they agree."""
+    cells = spark.read.parquet(lay.sec("cells"))
+    if probe is not None:
+        cells = cells.where(F.col("cell").isin(probe))
+    return _drop_deleted(
+        cells, _read_deleted(spark, lay.path, lay, key="vec_id"), key="vec_id"
     )
 
 
-def _ivf_drop_deleted(df: DataFrame, deleted) -> DataFrame:
-    from flink_bm25_spark.operators.serving import BATCH_COL  # noqa: PLC0415
-
-    if deleted is None:
-        return df
-    return (
-        df.join(deleted, "vec_id", "left")
-        .where(F.col("below").isNull() | (F.col(BATCH_COL) >= F.col("below")))
-        .drop("below")
-    )
+def _ivf_centroid_rows(spark, lay: _Layout, version: int | None) -> list:
+    """``(cell, centroid)`` rows of the codebook a probe uses: the
+    root's, or a pinned snapshot's stashed one on a ``version=`` read."""
+    cent_path = os.path.join(lay.path, "centroids")
+    if version is not None:
+        stash = _ivf_pin_centroids_stash(lay.path, lay.version)
+        if _fs_exists(spark, stash):
+            cent_path = stash
+    return spark.read.parquet(cent_path).collect()
 
 
 def _ivf_next_manual_id(spark, path: str) -> int:
-    """Next free manual batch id — max over the CELLS ids AND the
-    tombstone partition ids (a plain ``ivf_delete`` writes only
-    tombstones, so an allocator that read cells alone would hand the
-    same id to the next delete and silently overwrite the first one's
-    tombstone partition)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        STREAM_BATCH_BASE,
-        _fs_exists,
-        _Layout,
+    """Next free manual batch id — one past the highest manual id over
+    the CELLS AND the tombstone partitions (a plain ``ivf_delete``
+    writes only tombstones, so an allocator that read cells alone would
+    hand the same id to the next delete and silently overwrite the first
+    one's tombstone partition).  Directory listings, no Spark job."""
+    lay = _Layout(spark, path)
+    return _batch_id_or_next(
+        _next_manual_id(
+            i for s in IVF_SECTIONS for i in _section_batch_ids(spark, lay, s)
+        ),
+        None,
     )
 
-    seen = set(_ivf_batch_ids(spark, path))
-    deleted_path = os.path.join(_Layout(spark, path).root, "deleted")
-    if _fs_exists(spark, deleted_path):
-        seen |= {
-            int(r[BATCH_COL])
-            for r in spark.read.parquet(deleted_path)
-            .select(BATCH_COL)
-            .distinct()
-            .collect()
-        }
-    manual = [i for i in seen if i < STREAM_BATCH_BASE]
-    batch_id = (max(manual) if manual else 0) + 1
-    if batch_id >= STREAM_BATCH_BASE:
-        raise ValueError("manual batch-id space exhausted; run ivf_compact")
-    return batch_id
+
+def _ivf_write_batch(
+    spark, path: str, lay: _Layout, new_vectors: DataFrame, batch_id: int
+) -> None:
+    """Assign a vector batch to its nearest existing cells and write it
+    under its own ``_batch_id`` partition by DYNAMIC overwrite — a
+    redelivered batch replaces itself instead of double-inserting."""
+    assigned = ivf_assign_to_existing(
+        spark, path, new_vectors
+    ).withColumn("post_train", F.lit(True))
+    with overwrite_mode(spark, "dynamic"):
+        assigned.select(
+            F.lit(int(batch_id)).cast("long").alias(BATCH_COL), "*"
+        ).write.mode("overwrite").partitionBy(BATCH_COL, "cell").parquet(
+            lay.sec("cells")
+        )
 
 
-@_ivf_locked(lambda spark, path, *a, **k: (spark, path))
+@_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def ivf_delete(spark, path: str, vec_ids, batch_id: int | None = None) -> None:
     """Remove vectors from a persisted IVF index WITHOUT rewriting the
     cells — the dense twin of ``bm25_index_delete`` (re-crawl removals,
@@ -1422,14 +1381,6 @@ def ivf_delete(spark, path: str, vec_ids, batch_id: int | None = None) -> None:
     scalars), so the leg is tombstones only.  ``vec_ids`` is a list or
     a DataFrame with a ``vec_id`` column (the id set stays in-plan for
     corpus-shaped batches); idempotent per ``batch_id``."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        DELETE_ALL,
-        _Layout,
-    )
-
     if isinstance(vec_ids, DataFrame):
         ids_rel = vec_ids.select(
             F.col("vec_id").cast("long").alias("vec_id")
@@ -1442,22 +1393,11 @@ def ivf_delete(spark, path: str, vec_ids, batch_id: int | None = None) -> None:
     if batch_id is None:
         batch_id = _ivf_next_manual_id(spark, path)
     lay = _Layout(spark, path)
-    tag = F.lit(int(batch_id)).cast("long").alias(BATCH_COL)
-    tombstones = ids_rel.withColumn(
-        "below", F.lit(int(DELETE_ALL)).cast("long")
-    )
-    with overwrite_mode(spark, "dynamic"):
-        tombstones.select(tag, "*").coalesce(8).write.mode(
-            "overwrite"
-        ).partitionBy(BATCH_COL).parquet(os.path.join(lay.root, "deleted"))
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _verify_tree_current,
-    )
-
+    _write_tombstones(ids_rel, lay.sec("deleted"), batch_id, below=DELETE_ALL)
     _verify_tree_current(spark, path, lay.version)
 
 
-@_ivf_locked(lambda spark, path, *a, **k: (spark, path))
+@_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def ivf_upsert(
     spark, path: str, new_vectors: DataFrame, batch_id: int | None = None
 ) -> None:
@@ -1473,54 +1413,21 @@ def ivf_upsert(
     serving both), and redelivery under the same id rewrites identical
     partitions.  The coarse quantizer is NOT retrained (standard IVF
     maintenance; retrain on drift via a fresh ``ivf_build``+``save``)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        _Layout,
-    )
-
     if batch_id is None:
         batch_id = _ivf_next_manual_id(spark, path)
     lay = _Layout(spark, path)
-    tag = F.lit(int(batch_id)).cast("long").alias(BATCH_COL)
-    tombstones = (
+    _write_tombstones(
         new_vectors.select(F.col("vec_id").cast("long").alias("vec_id"))
-        .distinct()
-        .withColumn("below", F.lit(int(batch_id)).cast("long"))
+        .distinct(),
+        lay.sec("deleted"),
+        batch_id,
+        below=batch_id,
     )
-    with overwrite_mode(spark, "dynamic"):
-        tombstones.select(tag, "*").coalesce(8).write.mode(
-            "overwrite"
-        ).partitionBy(BATCH_COL).parquet(os.path.join(lay.root, "deleted"))
-        assigned = ivf_assign_to_existing(
-            spark, path, new_vectors
-        ).withColumn("post_train", F.lit(True))
-        assigned.select(tag, "*").write.mode("overwrite").partitionBy(
-            BATCH_COL, "cell"
-        ).parquet(os.path.join(lay.root, "cells"))
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _verify_tree_current,
-    )
-
+    _ivf_write_batch(spark, path, lay, new_vectors, batch_id)
     _verify_tree_current(spark, path, lay.version)
 
 
-def _ivf_batch_ids(spark, path: str):
-    """Existing cell batch ids — a partition-column-only read (directory
-    listing, no row data)."""
-    from flink_bm25_spark.operators.serving import BATCH_COL  # noqa: PLC0415
-
-    return {
-        int(r[BATCH_COL])
-        for r in spark.read.parquet(_ivf_cells_path(spark, path))
-        .select(BATCH_COL)
-        .distinct()
-        .collect()
-    }
-
-
-@_ivf_locked(lambda spark, path, *a, **k: (spark, path))
+@_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def ivf_add(spark, path: str, new_vectors: DataFrame, batch_id: int | None = None) -> None:
     """Extend a persisted IVF index with a new vector batch WITHOUT
     retraining — standard IVF maintenance (the coarse quantizer is only
@@ -1538,31 +1445,14 @@ def ivf_add(spark, path: str, new_vectors: DataFrame, batch_id: int | None = Non
     ``new_vectors`` must carry the same columns as the vectors the
     index was built from (vec_ids disjoint from the archive, caller
     contract shared with every incremental tier)."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        STREAM_BATCH_BASE,
-        _Layout,
-        _verify_tree_current,
-    )
-
     if batch_id is None:
         batch_id = _ivf_next_manual_id(spark, path)
-    version = _Layout(spark, path).version
-    assigned = ivf_assign_to_existing(
-        spark, path, new_vectors
-    ).withColumn("post_train", F.lit(True))
-    with overwrite_mode(spark, "dynamic"):
-        assigned.select(
-            F.lit(int(batch_id)).cast("long").alias(BATCH_COL), "*"
-        ).write.mode("overwrite").partitionBy(BATCH_COL, "cell").parquet(
-            _ivf_cells_path(spark, path)
-        )
-    _verify_tree_current(spark, path, version)
+    lay = _Layout(spark, path)
+    _ivf_write_batch(spark, path, lay, new_vectors, batch_id)
+    _verify_tree_current(spark, path, lay.version)
 
 
-@_ivf_locked(lambda spark, path, *a, **k: (spark, path))
+@_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def ivf_compact(
     spark,
     path: str,
@@ -1571,132 +1461,38 @@ def ivf_compact(
     gc_grace_seconds: float = 300.0,
 ) -> None:
     """Fold the per-batch cell partitions to batch 0 — the small-files
-    maintenance a long-lived IVF index needs under streaming adds; the
-    same reader-atomic manifest protocol as ``bm25_index_compact`` (r8:
-    the fold writes a complete new ``v<N>/cells`` tree, one atomic
-    ``_manifest_v<N>`` file-create is the whole swap, the superseded
-    tree survives one compaction cycle of grace — no mid-swap window at
-    all, including on rename-less object stores), and the same
-    ``exclude_batch_ids`` contract (the streaming loop excludes the
-    in-flight micro-batch so its redelivery stays idempotent).  Probe
-    results are unchanged (pinned by test)."""
-    import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        BATCH_COL,
-        MANIFEST_PREFIX,
-        STREAM_OWNER_FILE,
-        _fold_batch_col,
-        _fs_delete,
-        _fs_exists,
-        _fs_rename,
-        _fs_write_text,
-        _gc_versions,
-        _Layout,
-    )
-
-    # legacy migration (pre-manifest r7 staged swap): full rollback
-    old = os.path.join(path, "_compact_old")
-    if _fs_exists(spark, old):
-        live0 = os.path.join(path, "cells")
-        if _fs_exists(spark, os.path.join(old, "cells")):
-            if _fs_exists(spark, live0):
-                _fs_delete(spark, live0)
-            _fs_rename(spark, os.path.join(old, "cells"), live0)
-        _fs_delete(spark, old)
-    staging = os.path.join(path, "_compact_staging")
-    if _fs_exists(spark, staging):
-        _fs_delete(spark, staging)
-
+    maintenance a long-lived IVF index needs under streaming adds.  It
+    runs ``bm25_index_compact``'s manifest protocol: the fold writes a
+    complete new ``v<N>/cells`` tree, one atomic ``_manifest_v<N>``
+    file-create is the whole swap, and the superseded tree survives its
+    read grace — no mid-swap window, including on rename-less object
+    stores.  Committed tombstones apply physically; the
+    ``exclude_batch_ids`` contract is the same (the streaming loop
+    excludes the in-flight micro-batch so its redelivery stays
+    idempotent, and the excluded batches' tombstones are carried into
+    the new tree).  Probe results are unchanged (pinned by test)."""
     excl = tuple(int(i) for i in exclude_batch_ids)
-    lay = _Layout(spark, path)
-    _gc_versions(
-        spark,
-        path,
-        keep=lay.version,
-        sections=IVF_SECTIONS,
-        grace_seconds=gc_grace_seconds,
-    )
-    from flink_bm25_spark.operators.serving import _next_version  # noqa: PLC0415
-
-    new_version = _next_version(spark, path, lay.version)
-    # COMMITTED tombstones apply physically (against ORIGINAL batch ids,
-    # before the fold re-tags to 0); excluded batches' tombstones are
-    # withheld and carried into the new tree — same invariant as
-    # bm25_index_compact's exclusion contract.
-    deleted_path = os.path.join(lay.root, "deleted")
-    deleted_apply = None
-    deleted_keep = None
-    if _fs_exists(spark, deleted_path):
-        deleted_raw = spark.read.parquet(deleted_path)
-        apply_src = (
-            deleted_raw.where(~F.col(BATCH_COL).isin(list(excl)))
-            if excl
-            else deleted_raw
-        )
-        deleted_apply = apply_src.groupBy("vec_id").agg(
-            F.max_by("below", F.col(BATCH_COL)).alias("below")
-        )
-        if excl:
-            deleted_keep = deleted_raw.where(F.col(BATCH_COL).isin(list(excl)))
-            if deleted_keep.isEmpty():
-                deleted_keep = None
+    lay, new_version = _compact_begin(spark, path, IVF_SECTIONS, gc_grace_seconds)
+    deleted, deleted_keep = _compact_tombstones(spark, lay, excl, key="vec_id")
     folded = _fold_batch_col(
-        _ivf_drop_deleted(
-            spark.read.parquet(os.path.join(lay.root, "cells")),
-            deleted_apply,
-        ),
+        _drop_deleted(spark.read.parquet(lay.sec("cells")), deleted, key="vec_id"),
         excl,
     ).repartition(files_per_cell * 8, "cell")
-    written = ["cells"]
     with overwrite_mode(spark, "static"):
         folded.write.mode("overwrite").partitionBy(BATCH_COL, "cell").parquet(
             os.path.join(path, f"v{new_version}", "cells")
         )
-        if deleted_keep is not None:
-            deleted_keep.write.mode("overwrite").partitionBy(
-                BATCH_COL
-            ).parquet(os.path.join(path, f"v{new_version}", "deleted"))
-            written.append("deleted")
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _verify_tree_current,
-    )
-
-    _verify_tree_current(spark, path, lay.version)
-    _fs_write_text(
-        spark,
-        os.path.join(path, f"{MANIFEST_PREFIX}{new_version}"),
-        json.dumps({"version": new_version, "sections": written}),
-    )
-    if not excl:
-        _fs_delete(spark, os.path.join(path, STREAM_OWNER_FILE))
+    _compact_commit(spark, path, lay, new_version, ["cells"], excl, deleted_keep)
 
 
-@_ivf_locked(lambda spark, path, *a, **k: (spark, path))
-def ivf_gc(spark, path: str, grace_seconds: float = 300.0) -> None:
-    """Reclaim superseded/orphan IVF version trees WITHOUT folding — the
-    dense twin of ``bm25_index_gc`` (fold-once-serve-forever would
-    otherwise carry a full extra cells copy until a fold it never runs);
-    same writer lease + time-based read grace."""
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _gc_versions,
-        _Layout,
-    )
-
-    lay = _Layout(spark, path)
-    _gc_versions(
-        spark,
-        path,
-        keep=lay.version,
-        sections=IVF_SECTIONS,
-        grace_seconds=grace_seconds,
-    )
+def ivf_gc(spark, path: str, grace_seconds: float = 300.0) -> int:
+    """Reclaim superseded/orphan IVF version trees WITHOUT folding —
+    ``bm25_index_gc`` over the IVF sections (same writer lease and
+    time-based read grace); returns the number of trees reclaimed."""
+    return bm25_index_gc(spark, path, grace_seconds, sections=IVF_SECTIONS)
 
 
 def _ivf_pin_centroids_stash(path: str, version: int) -> str:
-    import os  # noqa: PLC0415
-
     return os.path.join(path, "pinned_centroids", f"v{int(version)}")
 
 
@@ -1704,10 +1500,6 @@ def ivf_versions(spark, path: str) -> DataFrame:
     """Version-tree inventory for the dense tier — the IVF twin of
     ``bm25_index_versions`` (same columns, ``cells``-rooted bare
     layout)."""
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        bm25_index_versions,
-    )
-
     return bm25_index_versions(spark, path, sections=IVF_SECTIONS)
 
 
@@ -1722,15 +1514,6 @@ def ivf_pin(spark, path: str, version: int | None = None) -> int:
     (Any on-disk tree postdates the last retrain — a retrain rebuilds
     to bare v0 — so the root codebook AT PIN TIME is exactly the one
     that assigned the pinned cells.)"""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _writer_lock,
-        bm25_index_pin,
-    )
-
-    from flink_bm25_spark.operators.serving import _fs_exists  # noqa: PLC0415
-
     with _writer_lock(spark, path):
         v = bm25_index_pin(spark, path, version=version,
                            sections=IVF_SECTIONS)
@@ -1749,34 +1532,22 @@ def ivf_pin(spark, path: str, version: int | None = None) -> int:
 def ivf_unpin(spark, path: str, version: int) -> None:
     """Release an IVF pin and its stashed codebook — the tree becomes
     reclaimable by the next GC/fold after the normal grace."""
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _fs_delete,
-        bm25_index_unpin,
-    )
-
     bm25_index_unpin(spark, path, version)
     _fs_delete(spark, _ivf_pin_centroids_stash(path, version))
 
 
 def ivf_snapshot(spark, path: str, **compact_kwargs) -> int:
     """Freeze the IVF index's current state as a pinned immutable
-    snapshot (pin + fold under ONE lease hold — the dense twin of
-    ``bm25_index_snapshot``); returns the frozen version number for
+    snapshot — ``bm25_index_snapshot`` with the IVF pin (which stashes
+    the codebook) and fold; returns the frozen version number for
     ``version=`` reads.  A bare v0 index is promoted into a versioned
     tree by an extra fold first — ``ivf_retrain`` (routine CDC
     maintenance) rebuilds the bare root in place, so a snapshot must
     never live there."""
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _Layout,
-        _writer_lock,
+    return _snapshot(
+        spark, path, ivf_pin,
+        lambda: ivf_compact(spark, path, **compact_kwargs),
     )
-
-    with _writer_lock(spark, path):
-        if _Layout(spark, path).version == 0:
-            ivf_compact(spark, path, **compact_kwargs)
-        v = ivf_pin(spark, path)
-        ivf_compact(spark, path, **compact_kwargs)
-    return v
 
 
 def ivf_stats(spark, path: str, version: int | None = None) -> DataFrame:
@@ -1792,19 +1563,15 @@ def ivf_stats(spark, path: str, version: int | None = None) -> DataFrame:
     Retrain (``ivf_retrain``) resets it to 0.  Pre-r9 indexes without
     the marker read staleness 0 (their vectors are all in-train by
     definition until the first r9 mutation).  One aggregate job."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import _Layout  # noqa: PLC0415
-
     lay = _Layout(spark, path, version=version)
-    cells = spark.read.parquet(os.path.join(lay.root, "cells"))
-    visible = _ivf_drop_deleted(cells, _ivf_read_deleted(spark, lay.root))
+    cells = spark.read.parquet(lay.sec("cells"))
+    pending = _read_deleted(spark, path, lay, key="vec_id")
+    visible = _drop_deleted(cells, pending, key="vec_id")
     stale_col = (
         F.coalesce(F.col("post_train"), F.lit(False))
         if "post_train" in cells.columns
         else F.lit(False)
     )
-    pending = _ivf_read_deleted(spark, lay.root)
     n_tomb = (
         pending.agg(F.count("*").alias("n")).select("n")
         if pending is not None
@@ -1827,7 +1594,7 @@ def ivf_stats(spark, path: str, version: int | None = None) -> DataFrame:
     )
 
 
-@_ivf_locked(lambda spark, path, *a, **k: (spark, path))
+@_locked_writer(lambda spark, path, *a, **k: (spark, path))
 def ivf_retrain(spark, path: str, n_cells: int | None = None, seed: int = 42) -> None:
     """Retrain the coarse quantizer on the index's CURRENT visible
     vectors and rebuild in place — the drift playbook's reset step: IVF
@@ -1846,19 +1613,16 @@ def ivf_retrain(spark, path: str, n_cells: int | None = None, seed: int = 42) ->
     the source-of-truth embedding table when one exists — this
     in-place path exists for the maintenance loop, where the index IS
     the current corpus."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import _Layout  # noqa: PLC0415
-
     lay = _Layout(spark, path)
     if n_cells is None:
         n_cells = int(
             spark.read.parquet(os.path.join(path, "centroids")).count()
         )
-    visible = _ivf_drop_deleted(
-        spark.read.parquet(os.path.join(lay.root, "cells")),
-        _ivf_read_deleted(spark, lay.root),
-    ).select("vec_id", "embedding").localCheckpoint(eager=True)
+    visible = (
+        _ivf_visible(spark, lay)
+        .select("vec_id", "embedding")
+        .localCheckpoint(eager=True)
+    )
     model, assigned = ivf_build(visible, n_cells=n_cells, seed=seed)
     ivf_save(model, assigned, path)
 
@@ -1880,34 +1644,16 @@ def ivf_topk_from_disk(
     from a pinned snapshot tree (`ivf_pin` / `ivf_snapshot`), probing
     with its STASHED codebook — stable results across later
     retrains."""
-    import os  # noqa: PLC0415
-
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _fs_exists,
-        _Layout,
-    )
-
     # resolved ONCE: cells + tombstones agree
     lay = _Layout(spark, path, version=version)
-    cent_path = os.path.join(path, "centroids")
-    if version is not None:
-        stash = _ivf_pin_centroids_stash(path, lay.version)
-        if _fs_exists(spark, stash):
-            cent_path = stash
-    cents = spark.read.parquet(cent_path).collect()
+    cents = _ivf_centroid_rows(spark, lay, version)
     q = [float(x) for x in query_vec]
 
     def dist2(c):
         return sum((a - b) * (a - b) for a, b in zip(c, q))
 
     order = sorted(cents, key=lambda r: dist2(r["centroid"]))
-    probe_cells = [int(r["cell"]) for r in order[:nprobe]]
-    cand = _ivf_drop_deleted(
-        spark.read.parquet(os.path.join(lay.root, "cells")).where(
-            F.col("cell").isin(probe_cells)
-        ),
-        _ivf_read_deleted(spark, lay.root),
-    )
+    cand = _ivf_visible(spark, lay, [int(r["cell"]) for r in order[:nprobe]])
     qcol = F.array(*[F.lit(x) for x in q])
     return (
         cand.select(

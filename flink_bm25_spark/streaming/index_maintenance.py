@@ -49,24 +49,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_bm25_spark.operators.serving import (
-    BATCH_COL,
+    SECTIONS,
     STREAM_BATCH_BASE,
     STREAM_OWNER_FILE,
     _fs_read_text,
     _fs_write_text,
     _Layout,
+    _list_manifest_versions,
     _read_deleted,
-    _read_section,
+    _section_batch_ids,
     bm25_index_add,
     bm25_index_compact,
     bm25_index_delete,
+    bm25_index_gc,
     bm25_index_upsert,
+)
+from flink_bm25_spark.operators.similarity import (
+    IVF_SECTIONS,
+    ivf_add,
+    ivf_compact,
+    ivf_delete,
+    ivf_retrain,
+    ivf_stats,
+    ivf_upsert,
 )
 from flink_bm25_spark.streaming.append_log import run_available_now
 
 
 def _claim_stream_ownership(
-    spark, path: str, checkpoint: str, ivf: bool = False
+    spark, path: str, checkpoint: str, sections: tuple[str, ...]
 ) -> None:
     """Micro-batch-0 guard shared by every index-maintenance loop: refuse
     a FRESH checkpoint attaching to an index that already holds stream
@@ -82,14 +93,15 @@ def _claim_stream_ownership(
     0) as a foreign stream's and permanently fail the restart instead of
     letting the idempotent overwrite reapply.
 
-    The index's highest committed stream batch id is the pre-marker-era
-    belt-and-braces, consulted only when no marker exists; ``ivf``
-    selects the dense index's probe and compaction remedy."""
-    remedy = "ivf_compact" if ivf else "bm25_index_compact"
+    The index's highest committed stream batch id — over every one of
+    the tier's ``sections`` (a tombstone-only delete leg writes only
+    ``deleted/``), by directory listing — is the pre-marker-era
+    belt-and-braces, consulted only when no marker exists."""
     marker = os.path.join(path, STREAM_OWNER_FILE)
     owner = _fs_read_text(spark, marker)
     if owner == checkpoint:
         return  # crash-redelivery of micro-batch 0: already the owner
+    remedy = "compaction (bm25_index_compact / ivf_compact)"
     if owner is not None:
         raise RuntimeError(
             f"index is owned by streaming checkpoint {owner!r};"
@@ -101,57 +113,46 @@ def _claim_stream_ownership(
     # belt-and-braces for pre-marker indexes: stream ids beyond
     # BASE+0 with an UNOWNED batch-0 delivery can only be a fresh
     # checkpoint over a prior stream's partitions
-    if ivf:
-        from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-            _ivf_batch_ids,
-        )
-
-        seen = max(_ivf_batch_ids(spark, path), default=None)
-    else:
-        seen = _read_section(spark, _Layout(spark, path), "stats").agg(
-            F.max(BATCH_COL).alias("m")
-        ).first()["m"]
-    if seen is not None and int(seen) > STREAM_BATCH_BASE:
+    lay = _Layout(spark, path)
+    seen = max(
+        (i for s in sections for i in _section_batch_ids(spark, lay, s)),
+        default=None,
+    )
+    if seen is not None and seen > STREAM_BATCH_BASE:
         raise RuntimeError(
             "fresh streaming checkpoint over an index that already"
-            " holds stream batches (max _batch_id ="
-            f" {int(seen)}): restarting ids at 0 would silently"
-            f" overwrite them. Run {remedy} on the index"
-            " first (folds every committed batch to id 0), then"
-            " attach the new checkpoint."
+            f" holds stream batches (max _batch_id = {seen}):"
+            " restarting ids at 0 would silently overwrite them. Run a"
+            f" full {remedy} on the index first (folds every committed"
+            " batch to id 0), then attach the new checkpoint."
         )
     _fs_write_text(spark, marker, checkpoint)
 
 
-def _gc_tick(spark, path: str, grace_seconds: float, ivf: bool = False) -> None:
+def _gc_tick(
+    spark, path: str, grace_seconds: float, sections: tuple[str, ...]
+) -> None:
     """Optional per-micro-batch GC: reclaim superseded version trees as
     soon as their read grace expires instead of waiting for the NEXT
     fold (a serve-mostly stream may never fold again, and
     ``_gc_versions`` otherwise only runs at a compaction's start).
     Cheap when there is nothing versioned: one directory listing
     short-circuits; the actual reclaim runs under the writer lease."""
-    from flink_bm25_spark.operators.serving import (  # noqa: PLC0415
-        _list_manifest_versions,
-        bm25_index_gc,
-    )
-    from flink_bm25_spark.operators.similarity import ivf_gc  # noqa: PLC0415
-
-    versions = _list_manifest_versions(spark, path)
-    if not versions:
+    if not _list_manifest_versions(spark, path):
         return  # never folded: nothing superseded to reclaim
-    (ivf_gc if ivf else bm25_index_gc)(spark, path, grace_seconds=grace_seconds)
+    bm25_index_gc(spark, path, grace_seconds=grace_seconds, sections=sections)
 
 
 def _housekeeping(
     spark, path: str, checkpoint: str, batch_id: int, gc_grace_seconds,
-    ivf: bool = False,
+    sections: tuple[str, ...],
 ) -> None:
     """Start of every micro-batch of every loop: the batch-0 ownership
-    claim, then the optional GC tick."""
+    claim, then the optional GC tick, over the tier's ``sections``."""
     if batch_id == 0:
-        _claim_stream_ownership(spark, path, checkpoint, ivf)
+        _claim_stream_ownership(spark, path, checkpoint, sections)
     if gc_grace_seconds is not None:
-        _gc_tick(spark, path, gc_grace_seconds, ivf)
+        _gc_tick(spark, path, gc_grace_seconds, sections)
 
 
 def _fold_due(compact_every: int | None, batch_id: int) -> bool:
@@ -166,7 +167,7 @@ def _append_loop(
     gc_grace_seconds: float | None,
     compact,
     add,
-    ivf: bool = False,
+    sections: tuple[str, ...],
 ) -> None:
     """The append-only loop both index kinds share: each micro-batch
     lands under ``STREAM_BATCH_BASE + batch_id`` through ``add(spark,
@@ -175,7 +176,9 @@ def _append_loop(
 
     def _add(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _housekeeping(spark, path, checkpoint, batch_id, gc_grace_seconds, ivf)
+        _housekeeping(
+            spark, path, checkpoint, batch_id, gc_grace_seconds, sections
+        )
         if _fold_due(compact_every, batch_id):
             compact(spark, (STREAM_BATCH_BASE + batch_id,))
         if batch_df.isEmpty():
@@ -279,6 +282,7 @@ def maintain_index_stream(
         add=lambda spark, df, bid: bm25_index_add(
             df, path, tokenizer=tok, batch_id=bid, hot_df_cap=hot_df_cap
         ),
+        sections=SECTIONS,
     )
 
 
@@ -350,7 +354,9 @@ def maintain_index_cdc_stream(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _housekeeping(spark, path, checkpoint, batch_id, gc_grace_seconds)
+        _housekeeping(
+            spark, path, checkpoint, batch_id, gc_grace_seconds, SECTIONS
+        )
         del_id = STREAM_BATCH_BASE + 2 * batch_id
         ups_id = del_id + 1
         latest = _latest_changes(batch_df, "doc_id", "text", op_col)
@@ -424,19 +430,11 @@ def maintain_ivf_cdc_stream(
     under redelivery: a leg redelivered across a retrain converges
     (its upsert tombstones hide the folded copy and rewrite the same
     embeddings; its deletes re-hide already-absent ids)."""
-    from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-        _ivf_read_deleted,
-        ivf_compact,
-        ivf_delete,
-        ivf_retrain,
-        ivf_stats,
-        ivf_upsert,
-    )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         _housekeeping(
-            spark, path, checkpoint, batch_id, gc_grace_seconds, ivf=True
+            spark, path, checkpoint, batch_id, gc_grace_seconds, IVF_SECTIONS
         )
         del_id = STREAM_BATCH_BASE + 2 * batch_id
         ups_id = del_id + 1
@@ -444,7 +442,7 @@ def maintain_ivf_cdc_stream(
         due = _fold_due(compact_every, batch_id)
         gauge = bool(compact_tombstones) and not due
         extra = (
-            _pending_gauge(_ivf_read_deleted(spark, _Layout(spark, path).root))
+            _pending_gauge(_read_deleted(spark, path, key="vec_id"))
             if gauge
             else []
         )
@@ -520,16 +518,11 @@ def maintain_ivf_stream(
     committed batches mid-stream while EXCLUDING the micro-batch about
     to be (re-)added — a redelivered uncommitted batch still replaces
     its own partition instead of double-counting a folded copy."""
-    from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-        ivf_add,
-        ivf_compact,
-    )
-
     _append_loop(
         stream, path, checkpoint, compact_every, gc_grace_seconds,
         compact=lambda spark, excl: ivf_compact(
             spark, path, exclude_batch_ids=excl
         ),
         add=lambda spark, df, bid: ivf_add(spark, path, df, batch_id=bid),
-        ivf=True,
+        sections=IVF_SECTIONS,
     )

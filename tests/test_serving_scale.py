@@ -432,6 +432,40 @@ def test_fresh_checkpoint_over_used_index_raises(spark, tmp_path):
         maintain_index_stream(stream, path, str(tmp_path / "fresh_ckpt"))
 
 
+def test_ivf_fresh_checkpoint_over_tombstone_only_batch_raises(spark, tmp_path):
+    # a prior stream's delete leg writes ONLY deleted/ — the guard must
+    # see it, or the fresh checkpoint's delete leg would overwrite that
+    # tombstone partition and resurrect the deleted vectors
+    from flink_bm25_spark.operators.serving import _read_deleted
+    from flink_bm25_spark.operators.similarity import ivf_delete, ivf_save
+    from flink_bm25_spark.streaming.index_maintenance import (
+        maintain_ivf_cdc_stream,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5), 1.0], i % 2) for i in range(60)],
+        "vec_id long, embedding array<double>, cell int",
+    )
+    path = str(tmp_path / "ivf")
+    ivf_save([[0.0, 0.0, 1.0], [5.0, 4.0, 1.0]], vecs, path)
+    ivf_delete(spark, path, [1, 2, 3], batch_id=STREAM_BATCH_BASE + 2)
+    schema = "op string, vec_id long, embedding array<double>, seq long"
+    src = str(tmp_path / "src")
+    for i, vid in enumerate((40, 50)):
+        spark.createDataFrame([("delete", vid, None, i)], schema).write.mode(
+            "append"
+        ).parquet(src)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    with pytest.raises(Exception, match="fresh streaming checkpoint"):
+        maintain_ivf_cdc_stream(stream, path, str(tmp_path / "fresh_ckpt"))
+    tombs = _read_deleted(spark, path, key="vec_id").collect()
+    assert sorted(int(r["vec_id"]) for r in tombs) == [1, 2, 3]
+
+
 # --- delete leg: negative partials + tombstones ------------------------------
 
 

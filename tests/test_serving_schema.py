@@ -11,9 +11,12 @@ from pyspark.sql.types import StructType
 
 from flink_bm25_spark.api import Bm25Index
 from flink_bm25_spark.operators.serving import (
+    BATCH_COL,
     SECTION_SCHEMAS,
     SECTIONS,
     _Layout,
+    _read_section,
+    _section_batch_ids,
     bm25_index_save,
 )
 from tests.test_serving_v2 import _run_cdc, _write_cdc_batches
@@ -36,6 +39,10 @@ def _assert_sections_match(spark, path, step):
         inferred = spark.read.parquet(lay.sec(name)).schema
         declared = StructType.fromDDL(SECTION_SCHEMAS[name])
         assert inferred == declared, (step, name, inferred.simpleString())
+        # the job-free directory listing sees exactly the batches a read does
+        read = _read_section(spark, lay, name).select(BATCH_COL).distinct()
+        listed = _section_batch_ids(spark, lay, name)
+        assert listed == {r[0] for r in read.collect()}, (step, name)
 
 
 def test_every_writer_matches_the_declared_section_schemas(spark, tmp_path):

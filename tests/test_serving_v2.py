@@ -542,6 +542,9 @@ def test_ivf_delete_hides_vectors_until_compaction_applies(spark, tmp_path):
 def test_ivf_upsert_replaces_vectors_and_survives_redelivery(
     spark, tmp_path
 ):
+    from pyspark.sql.types import StructType
+
+    from flink_bm25_spark.operators.serving import _Layout, _tombstone_schema
     from flink_bm25_spark.operators.similarity import (
         _ivf_cells_path,
         ivf_compact,
@@ -584,6 +587,11 @@ def test_ivf_upsert_replaces_vectors_and_survives_redelivery(
     # redelivery under the same id: identical results
     ivf_upsert(spark, path, repl, batch_id=7)
     assert _ivf_probe(spark, path, emb) == got
+    # tombstones are read with a declared schema: the writer must match it
+    deleted = _Layout(spark, path).sec("deleted")
+    assert spark.read.parquet(deleted).schema == StructType.fromDDL(
+        _tombstone_schema("vec_id")
+    )
     # compaction folds to exactly one physical version per id
     ivf_compact(spark, path)
     cells = spark.read.parquet(_ivf_cells_path(spark, path))

@@ -3,12 +3,15 @@ recall against the exact brute force, plus determinism of the bucketing."""
 
 from __future__ import annotations
 
+import pytest
+
 from flink_bm25_spark.operators.similarity import (
     cosine_topk,
     ivf_build,
     ivf_topk,
     rp_lsh_bucket,
     rp_lsh_topk,
+    sparse_plane,
 )
 from flink_bm25_spark.sources.tables import load_embeddings
 from tests.conftest import SF_DIR
@@ -1037,3 +1040,12 @@ def test_ivf_add_ten_batches_recall_drift_bound(spark, tmp_path):
     # a fresh rebuild at the same nprobe/n_cells, and stays useful
     assert r_inc >= r_fresh - 0.2, (r_inc, r_fresh)
     assert r_inc >= 0.5, r_inc
+
+
+def test_sparse_plane_nnz_bounded_by_dim():
+    # nnz > dim cannot yield distinct indices: refused, not an endless loop
+    with pytest.raises(ValueError, match="nnz"):
+        sparse_plane(0, dim=4, nnz=8)
+    plane = sparse_plane(3, dim=4, nnz=4)
+    assert sorted(i for i, _ in plane) == [0, 1, 2, 3]
+    assert all(s in (-1, 1) for _, s in plane)
