@@ -1022,7 +1022,7 @@ def _q_kmv_by_lang(spark, sf_dir):
     # (one WindowGroupLimit pass, O(groups x k) state): the per-source
     # distribution monitor a curation pipeline watches for drift.
     from flink_bm25_spark.operators.sketches import (
-        kmv_quantiles_by,
+        kmv_quantiles,
         kmv_sketch_by,
     )
     from flink_bm25_spark.operators.text_analysis import quality_scores
@@ -1032,7 +1032,7 @@ def _q_kmv_by_lang(spark, sf_dir):
         docs.select("doc_id", "lang"), "doc_id"
     )
     sk = kmv_sketch_by(scored, "lang", "keep_score", "doc_id", k=64)
-    return kmv_quantiles_by(sk, "lang", [0.25, 0.5, 0.75])
+    return kmv_quantiles(sk, [0.25, 0.5, 0.75], group_cols=["lang"])
 
 
 def _q_winsorize(spark, sf_dir):
@@ -2884,9 +2884,11 @@ def _q_ccnet_by_lang(spark, sf_dir):
     # CCNet's published per-language design: one bigram LM per language,
     # head/middle/tail terciles within each language's own nll
     # distribution.  Grouped no-row-window min-rank.
-    from flink_bm25_spark.operators.text_analysis import ccnet_buckets_by
+    from flink_bm25_spark.operators.text_analysis import ccnet_buckets
 
-    return ccnet_buckets_by(load_table(spark, "documents", sf_dir), by_col="lang")
+    return ccnet_buckets(
+        load_table(spark, "documents", sf_dir), group_cols=["lang"]
+    )
 
 
 def _q_quality_gate_by_lang(spark, sf_dir):
@@ -2895,11 +2897,11 @@ def _q_quality_gate_by_lang(spark, sf_dir):
     # cumsum window partitioned by language, per-group percent_rank
     # semantics, nothing globally sorted.
     from flink_bm25_spark.operators.text_analysis import (
-        quality_percentile_gate_by,
+        quality_percentile_gate,
     )
 
-    return quality_percentile_gate_by(
-        load_table(spark, "documents", sf_dir), by_col="lang", cutoff=0.75
+    return quality_percentile_gate(
+        load_table(spark, "documents", sf_dir), cutoff=0.75, group_cols=["lang"]
     )
 
 
@@ -3446,13 +3448,13 @@ def _q_hll_by_lang(spark, sf_dir):
     # ONE aggregation (langs × 64 registers, constant state per group).
     from flink_bm25_spark.operators.sketches import (
         hll_buckets_by,
-        hll_estimate_by,
+        hll_estimate,
     )
 
     tf = _stats(spark, sf_dir).tf
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "lang")
     words = tf.join(docs, "doc_id").select("lang", "word")
-    return hll_estimate_by(hll_buckets_by(words, "lang", "word"), "lang")
+    return hll_estimate(hll_buckets_by(words, "lang", "word"), ["lang"])
 
 
 def _q_curation_pipeline(spark, sf_dir):

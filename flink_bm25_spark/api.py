@@ -596,11 +596,11 @@ class QuantileTracker(_PersistedState):
         )
 
     def quantiles(self, qs: list[float]) -> DataFrame:
-        from flink_bm25_spark.operators.sketches import kmv_quantiles_by  # noqa: PLC0415
+        from flink_bm25_spark.operators.sketches import kmv_quantiles  # noqa: PLC0415
 
         if self.sketch is None:
             raise ValueError("no batches ingested yet")
-        return kmv_quantiles_by(self.sketch, "grp", qs)
+        return kmv_quantiles(self.sketch, qs, group_cols=["grp"])
 
     def save(self, path: str) -> None:
         super().save(path)
@@ -820,9 +820,7 @@ class WebIntakeScreen(_PersistedState):
             F.round(F.percentile("nll", F.lit(cuts[0])), 6).alias("nll_c1"),
             F.round(F.percentile("nll", F.lit(cuts[1])), 6).alias("nll_c2"),
         )
-        qual = quality_scores(reference).select("doc_id", "keep_score").join(
-            reference.select("doc_id", by_col), "doc_id"
-        )
+        qual = quality_scores(reference, carry=(by_col,))
         score_cuts = qual.groupBy(by_col).agg(
             F.round(
                 F.percentile("keep_score", F.lit(quality_cutoff)), 6

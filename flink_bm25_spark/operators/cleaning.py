@@ -409,8 +409,9 @@ def web_intake_pipeline(
     callable: ``strip_markup`` (line-preserving) → corpus-wide
     ``line_dedup`` (CCNet step 1 — BEFORE any quality statistic, or
     boilerplate dominates every ratio) → per-``by_col`` LM perplexity
-    buckets (``ccnet_buckets_by``) → per-``by_col`` quality percentile
-    gate (``quality_percentile_gate_by``).
+    buckets (``ccnet_buckets`` grouped on ``by_col``) → per-``by_col``
+    quality percentile gate (``quality_percentile_gate`` grouped on
+    ``by_col``).
 
     Output, one row per document KEPT by the gate: ``(doc_id, by_col,
     cleaned_text, n_lines, n_kept, nll, bucket, keep_score,
@@ -433,8 +434,8 @@ def web_intake_pipeline(
     from flink_bm25_spark.functions.text import strip_markup  # noqa: PLC0415
     from flink_bm25_spark.operators.dedup import line_dedup  # noqa: PLC0415
     from flink_bm25_spark.operators.text_analysis import (  # noqa: PLC0415
-        ccnet_buckets_by,
-        quality_percentile_gate_by,
+        ccnet_buckets,
+        quality_percentile_gate,
     )
 
     stripped = documents.select(
@@ -462,8 +463,9 @@ def web_intake_pipeline(
         )
         .localCheckpoint(eager=True)
     )
-    buckets = ccnet_buckets_by(cleaned, by_col, alpha, cuts, blocks)
-    gate = quality_percentile_gate_by(cleaned, by_col, cutoff, blocks)
+    g = [by_col]
+    buckets = ccnet_buckets(cleaned, alpha, cuts, blocks, group_cols=g)
+    gate = quality_percentile_gate(cleaned, cutoff, blocks, group_cols=g)
     return (
         gate.select("doc_id", "keep_score", F.col("pr").alias("quality_pr"))
         .join(buckets.select("doc_id", by_col, "nll", "bucket"), "doc_id")

@@ -8,8 +8,12 @@ fact table plus a broadcast join of the tiny moments relation.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from flink_bm25_spark.operators.rank import nullsafe_key_join
 
 
 def numeric_outliers(
@@ -174,6 +178,7 @@ def winsorize(
     hi: float = 0.99,
     k: int = 256,
     clip: bool = True,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Robust outlier treatment from the KMV quantile sketch: estimate
     the ``lo``/``hi`` quantiles on the deterministic bottom-``k`` sample
@@ -181,74 +186,45 @@ def winsorize(
     into ``[q_lo, q_hi]`` (``clip=True``, winsorization — adds
     ``<value_col>_w``) or DROP rows outside it (trimming).
 
-    Scale shape: the sketch is one TakeOrderedAndProject over the corpus;
-    the two quantile scalars come back as a 2-value broadcast row (never
-    a driver round-trip inside the plan), and the clip/trim itself is a
-    map-side expression — one scan + one k-row heap, no global sort, no
-    percentile window.  Same key contract as ``kmv_sketch``.
+    With one ``group_cols`` key each group's bounds come from its OWN
+    bottom-k sample — the per-source robust-cleaning form: a price
+    outlier in one store must not widen another store's bounds.  A null
+    group key is a group of its own (null-safe join-back).
+
+    Scale shape: ungrouped, the sketch is one TakeOrderedAndProject over
+    the corpus and the two quantile scalars come back as a 2-value
+    broadcast row; grouped, the sketch is one WindowGroupLimit pass
+    (``kmv_sketch_by``, O(groups × k) state) and the bounds are a
+    groups-sized relation.  The clip/trim itself is a map-side
+    expression — no global sort, no percentile window.  Same key
+    contract as ``kmv_sketch``.
     """
     from flink_bm25_spark.operators.sketches import (  # noqa: PLC0415
         kmv_quantiles,
         kmv_sketch,
-    )
-
-    if not (0.0 <= lo < hi <= 1.0):
-        raise ValueError(f"need 0 <= lo < hi <= 1, got {lo}, {hi}")
-    qs = kmv_quantiles(kmv_sketch(df, value_col, key_col, k=k), [lo, hi])
-    bounds = qs.groupBy().pivot("q", [lo, hi]).agg(F.first("est")).select(
-        F.col(f"`{lo}`").alias("_qlo"), F.col(f"`{hi}`").alias("_qhi")
-    )
-    joined = df.crossJoin(F.broadcast(bounds))
-    v = F.col(value_col).cast("double")
-    if clip:
-        return joined.withColumn(
-            f"{value_col}_w",
-            F.when(v < F.col("_qlo"), F.col("_qlo"))
-            .when(v > F.col("_qhi"), F.col("_qhi"))
-            .otherwise(v),
-        ).drop("_qlo", "_qhi")
-    return joined.where(
-        (v >= F.col("_qlo")) & (v <= F.col("_qhi"))
-    ).drop("_qlo", "_qhi")
-
-
-def winsorize_by(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    key_col: str,
-    lo: float = 0.01,
-    hi: float = 0.99,
-    k: int = 256,
-    clip: bool = True,
-) -> DataFrame:
-    """Per-group :func:`winsorize` — each group's clip bounds come from
-    its OWN bottom-k sample (``kmv_sketch_by``: one WindowGroupLimit
-    pass, O(groups × k) state), joined back on the group key.  The
-    per-source robust-cleaning form: a price outlier in one store must
-    not widen another store's bounds.
-    """
-    from flink_bm25_spark.operators.sketches import (  # noqa: PLC0415
-        kmv_quantiles_by,
         kmv_sketch_by,
     )
 
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError(f"need 0 <= lo < hi <= 1, got {lo}, {hi}")
-    sk = kmv_sketch_by(df, group_col, value_col, key_col, k=k)
-    qs = kmv_quantiles_by(sk, group_col, [lo, hi])
+    g = list(group_cols)
+    if len(g) > 1:
+        raise ValueError(f"winsorize groups by at most one key, got {g}")
+    sk = (
+        kmv_sketch_by(df, g[0], value_col, key_col, k=k)
+        if g
+        else kmv_sketch(df, value_col, key_col, k=k)
+    )
     bounds = (
-        qs.groupBy(group_col)
+        kmv_quantiles(sk, [lo, hi], g)
+        .groupBy(*g)
         .pivot("q", [lo, hi])
         .agg(F.first("est"))
         .select(
-            group_col,
-            F.col(f"`{lo}`").alias("_qlo"),
-            F.col(f"`{hi}`").alias("_qhi"),
+            *g, F.col(f"`{lo}`").alias("_qlo"), F.col(f"`{hi}`").alias("_qhi")
         )
     )
-    # group-count-sized relation; AQE broadcasts it while it fits
-    joined = df.join(bounds, group_col)
+    joined = nullsafe_key_join(df, bounds, g)
     v = F.col(value_col).cast("double")
     if clip:
         return joined.withColumn(

@@ -34,6 +34,8 @@ aggregate-sized-frame shape, never the corpus.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -118,14 +120,29 @@ def with_measured_blocks(
     )
 
 
-def nullsafe_key_join(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+def nullsafe_key_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: Sequence[str],
+    how: str = "inner",
+) -> DataFrame:
     """Equi-join on ``keys`` with NULL-SAFE equality (``<=>``): a NULL
     key matches a NULL key, so rows whose group column is null are
     ranked in their own group instead of silently dropped (plain
     equi-join semantics lose them — and SQL ``PARTITION BY`` keeps a
     NULL partition, so the oracle would diverge).  ``EqualNullSafe`` is
     a hashable join key; the plan is the same hash join as the
-    name-list form."""
+    name-list form.  ``how`` is ``"inner"`` or ``"left"`` (a miss keeps
+    the left row with null right columns).
+
+    With NO keys this is the ungrouped join-back of a statistic grouped
+    over zero keys, ``left.crossJoin(F.broadcast(right))``.  The
+    broadcast is bounded: a zero-key right side is always a global
+    aggregate (vocabulary size, cut values, clip bounds, the OOV
+    default), which has exactly one row whatever the corpus size — and
+    with one row the cross join is also the left join."""
+    if not keys:
+        return left.crossJoin(F.broadcast(right))
     r = right
     for k in keys:
         r = r.withColumnRenamed(k, "_rk_" + k)
@@ -133,7 +150,7 @@ def nullsafe_key_join(left: DataFrame, right: DataFrame, keys: list[str]) -> Dat
     for k in keys:
         c = left[k].eqNullSafe(r["_rk_" + k])
         cond = c if cond is None else (cond & c)
-    return left.join(r, cond).drop(*["_rk_" + k for k in keys])
+    return left.join(r, cond, how).drop(*["_rk_" + k for k in keys])
 
 
 def _value_before(

@@ -27,6 +27,8 @@ state, one narrow shuffle, mergeable partials.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -68,28 +70,44 @@ def hll_buckets(values: DataFrame, col: str) -> DataFrame:
     )
 
 
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Union of HLL sketches: per-bucket max of the register states.
+def hll_merge(
+    *sketches: DataFrame, group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """Union of HLL sketches: max of the register states per
+    (*group_cols, bucket).
 
     Exact sketch algebra — ``hll_merge(hll_buckets(A), hll_buckets(B))``
     is bit-identical to ``hll_buckets(A ∪ B)`` (max is associative,
     commutative, idempotent), which is what makes the sketch distributive:
     build per shard, merge 64-row relations, never revisit the shards.
-    Pinned by ``test_hll_merge_equals_rebuild``.
+    Pinned by ``test_hll_merge_equals_rebuild``.  Grouped sketches
+    (:func:`hll_buckets_by`) merge group-wise with ``group_cols``.
     """
     merged = sketches[0]
     for s in sketches[1:]:
         merged = merged.unionByName(s)
-    return merged.groupBy("bucket").agg(F.max("mx").alias("mx"))
+    return merged.groupBy(*group_cols, "bucket").agg(F.max("mx").alias("mx"))
 
 
-def hll_estimate(buckets_rel: DataFrame) -> DataFrame:
-    """One-row ``(n_distinct_est)`` from a ``(bucket, mx)`` register
-    relation — the read side of the sketch."""
+def hll_estimate(
+    buckets_rel: DataFrame, group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """``(*group_cols, n_distinct_est)`` from a ``(*group_cols, bucket,
+    mx)`` register relation — the read side of the sketch, one row per
+    group (one row in all when ungrouped).  Buckets missing from a
+    sparse grouped relation (:func:`hll_buckets_by`) count as rank 0
+    through the ``m - count(*)`` term; a dense :func:`hll_buckets`
+    relation has all ``m`` rows, so the term is 0 there."""
     m = HLL_BUCKETS
-    agg = buckets_rel.agg(
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 55 - mx)")).alias("isum"),
-        F.sum(F.when(F.col("mx") == 0, 1).otherwise(0)).alias("v_zero"),
+    absent = F.lit(m) - F.count("*")
+    agg = buckets_rel.groupBy(*group_cols).agg(
+        (
+            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 55 - mx)"))
+            + absent * F.lit(1 << 55)  # absent buckets contribute 2^(55-0)
+        ).alias("isum"),
+        (F.sum(F.when(F.col("mx") == 0, 1).otherwise(0)) + absent).alias(
+            "v_zero"
+        ),
     )
     raw = (
         F.lit(_ALPHA_64 * m * m)
@@ -100,7 +118,7 @@ def hll_estimate(buckets_rel: DataFrame) -> DataFrame:
         (raw <= 2.5 * m) & (F.col("v_zero") > 0),
         F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_zero").cast("double")),
     ).otherwise(raw)
-    return agg.select(F.round(est, 6).alias("n_distinct_est"))
+    return agg.select(*group_cols, F.round(est, 6).alias("n_distinct_est"))
 
 
 def hll_distinct(values: DataFrame, col: str) -> DataFrame:
@@ -402,7 +420,7 @@ def hll_buckets_by(
     """Grouped HLL register states: ``(group_col, bucket, mx)`` — one
     64-register sketch per group, built in ONE aggregation over the
     hashed relation (group count × 64 output rows regardless of input
-    size).  Groups merge with :func:`hll_merge_by`; absent buckets are
+    size).  Groups merge with :func:`hll_merge` (``group_cols``); absent buckets are
     implicit rank 0 (the estimator fills them)."""
     m = HLL_BUCKETS
     h = h60(F.col(col))
@@ -414,42 +432,6 @@ def hll_buckets_by(
     return hashed.groupBy(group_col, "bucket").agg(
         F.max(_hll_rank(F.col("w"))).alias("mx")
     )
-
-
-def hll_merge_by(group_col: str, *sketches: DataFrame) -> DataFrame:
-    """Per-group register merge — max per (group, bucket)."""
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy(group_col, "bucket").agg(F.max("mx").alias("mx"))
-
-
-def hll_estimate_by(buckets_rel: DataFrame, group_col: str) -> DataFrame:
-    """Per-group estimates ``(group_col, n_distinct_est)`` from a sparse
-    grouped register relation (missing buckets counted as rank 0 via
-    ``m - count(*)`` in the zero-register term)."""
-    m = HLL_BUCKETS
-    agg = buckets_rel.groupBy(group_col).agg(
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 55 - mx)"))
-            + (F.lit(m) - F.count("*"))
-            * F.lit(1 << 55)  # absent buckets contribute 2^(55-0)
-        ).alias("isum"),
-        (
-            F.sum(F.when(F.col("mx") == 0, 1).otherwise(0))
-            + (F.lit(m) - F.count("*"))
-        ).alias("v_zero"),
-    )
-    raw = (
-        F.lit(_ALPHA_64 * m * m)
-        * F.lit(float(1 << 55))
-        / F.col("isum").cast("double")
-    )
-    est = F.when(
-        (raw <= 2.5 * m) & (F.col("v_zero") > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_zero").cast("double")),
-    ).otherwise(raw)
-    return agg.select(group_col, F.round(est, 6).alias("n_distinct_est"))
 
 
 # ---------------------------------------------------------------------------
@@ -514,17 +496,23 @@ def kmv_merge(*sketches: DataFrame, k: int = KMV_K) -> DataFrame:
     return merged.orderBy(F.asc("hk"), F.asc("key")).limit(k)
 
 
-def kmv_quantiles(sketch: DataFrame, qs: list[float]) -> DataFrame:
-    """``(q, est)`` — nearest-rank quantile estimates from the sample:
+def kmv_quantiles(
+    sketch: DataFrame, qs: list[float], group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """``(*group_cols, q, est)`` — nearest-rank quantile estimates from
+    the sample (per group for a :func:`kmv_sketch_by` sketch):
     ``est(q) = sorted_v[floor(q * (n-1)) + 1]`` (1-based, integer index
     math — no interpolation, so the pick is bit-exact across engines).
 
-    One single-row aggregate (``sort_array(collect_list(v))`` over ≤ k
-    doubles) exploded to one row per requested quantile — constant
-    state, same posture as the other sketch finalizers.
+    ONE aggregate (``sort_array(collect_list(v))`` over ≤ k doubles per
+    group) exploded to one row per requested quantile — constant state
+    per group, same posture as the other sketch finalizers.  An empty
+    sketch yields no rows.
     """
     arr = F.sort_array(F.collect_list("v"))
-    one_row = sketch.agg(arr.alias("vs"), F.count(F.lit(1)).alias("n"))
+    per_group = sketch.groupBy(*group_cols).agg(
+        arr.alias("vs"), F.count(F.lit(1)).alias("n")
+    )
     picks = F.array(
         *[
             F.struct(
@@ -540,9 +528,9 @@ def kmv_quantiles(sketch: DataFrame, qs: list[float]) -> DataFrame:
         ]
     )
     return (
-        one_row.where(F.col("n") > 0)
-        .select(F.explode(picks).alias("p"))
-        .select(F.col("p.q").alias("q"), F.col("p.est").alias("est"))
+        per_group.where(F.col("n") > 0)
+        .select(*group_cols, F.explode(picks).alias("p"))
+        .select(*group_cols, F.col("p.q").alias("q"), F.col("p.est").alias("est"))
     )
 
 
@@ -577,40 +565,4 @@ def kmv_sketch_by(
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .drop("_rn")
-    )
-
-
-def kmv_quantiles_by(
-    sketch: DataFrame, group_col: str, qs: list[float]
-) -> DataFrame:
-    """``(group_col, q, est)`` — nearest-rank quantiles per group from a
-    grouped bottom-k sketch: ONE aggregate for all groups (sorted value
-    array + count per group), then the integer-index picks of
-    :func:`kmv_quantiles` exploded per requested quantile."""
-    arr = F.sort_array(F.collect_list("v"))
-    per_group = sketch.groupBy(group_col).agg(
-        arr.alias("vs"), F.count(F.lit(1)).alias("n")
-    )
-    picks = F.array(
-        *[
-            F.struct(
-                F.lit(float(q)).alias("q"),
-                F.element_at(
-                    F.col("vs"),
-                    (
-                        F.floor(F.lit(float(q)) * (F.col("n") - 1)) + 1
-                    ).cast("int"),
-                ).alias("est"),
-            )
-            for q in qs
-        ]
-    )
-    return (
-        per_group.where(F.col("n") > 0)
-        .select(F.col(group_col), F.explode(picks).alias("p"))
-        .select(
-            F.col(group_col),
-            F.col("p.q").alias("q"),
-            F.col("p.est").alias("est"),
-        )
     )

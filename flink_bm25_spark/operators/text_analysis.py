@@ -7,12 +7,18 @@ each has an exact ANSI-SQL twin for the correctness oracle.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_bm25_spark.functions.hashing import rolling_fingerprint
 from flink_bm25_spark.functions.text import quality_columns, tokenize_expr
-from flink_bm25_spark.operators.rank import nullsafe_key_join
+from flink_bm25_spark.operators.rank import (
+    block_ranked_spread,
+    min_ranked_by_value,
+    nullsafe_key_join,
+)
 
 # Marker stopwords per language for the n-gram/marker LID heuristic.
 # On real corpora these would be the top function words per language;
@@ -539,11 +545,39 @@ def bpe_pair_counts(documents: DataFrame, min_count: int = 2) -> DataFrame:
     )
 
 
+def _percent_rank() -> Column:
+    """``pr = (rank-1)/(n-1)`` over a ranked relation's ``_rank``/``_n``
+    — the identical double ``percent_rank()`` (per partition, when the
+    rank is grouped) produces in any engine."""
+    return F.when(
+        F.col("_n") > 1,
+        (F.col("_rank") - 1).cast("double") / (F.col("_n") - 1),
+    ).otherwise(F.lit(0.0))
+
+
+def _tercile(value: Column, cut1: Column, cut2: Column) -> Column:
+    """CCNet's ``head``/``middle``/``tail`` bucket of ``value`` against
+    two ascending cuts."""
+    return (
+        F.when(value < cut1, "head")
+        .when(value < cut2, "middle")
+        .otherwise("tail")
+    )
+
+
 def quality_percentile_gate(
-    documents: DataFrame, cutoff: float = 0.75, blocks: int = 64
+    documents: DataFrame,
+    cutoff: float = 0.75,
+    blocks: int = 64,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Docs whose composite quality score ranks at or above the
-    ``cutoff`` percentile of the corpus: ``(doc_id, keep_score, pr)``.
+    ``cutoff`` percentile of the corpus — or of their OWN group's
+    distribution with ``group_cols``: ``(doc_id, *group_cols,
+    keep_score, pr)``.  The per-group cut is the standard curation gate
+    when sources/languages have incomparable score distributions (a
+    global gate would keep almost none of a low-scoring language; CCNet
+    buckets per language for exactly this reason).
 
     Exact percentile semantics of ``percent_rank`` over
     ``(keep_score, doc_id)`` — the unique tiebreak makes the rank (and
@@ -560,8 +594,9 @@ def quality_percentile_gate(
     counts relation (a score atom like 0.0/0.2 — too-short or
     stopword-heavy document classes — is ONE row there), and the tie
     term sub-blocks any hot atom on the doc_id range, so no task ever
-    sorts a whole atom.  ``pr = (rank-1)/(n-1)`` is the identical
-    double the single-window form produces.
+    sorts a whole atom.  With groups every cumsum window is also
+    PARTITIONED by the group, and null group keys rank as their own
+    group.  ``pr`` is per-group ``(rank-1)/(n-1)``.
 
     Contract: ``doc_id`` must be NUMERIC — the hot-tie sub-blocking
     does range arithmetic on the tiebreak, which under Spark 4's
@@ -571,58 +606,12 @@ def quality_percentile_gate(
     which exact-tie rows land on either side of the cutoff, so do it
     at ingest, not per query.
     """
-    from flink_bm25_spark.operators.rank import (  # noqa: PLC0415
-        block_ranked_spread,
+    g = list(group_cols)
+    base = (
+        quality_scores(documents, carry=tuple(g))
+        .select("doc_id", *g, "keep_score")
+        .localCheckpoint(eager=True)
     )
-
-    scored = quality_scores(documents).select("doc_id", "keep_score")
-    base = scored.localCheckpoint(eager=True)
-    ranked = block_ranked_spread(
-        base, "keep_score", "doc_id", blocks=blocks, lo=0.0, hi=1.0
-    )
-    pr = F.when(
-        F.col("_n") > 1,
-        (F.col("_rank") - 1).cast("double") / (F.col("_n") - 1),
-    ).otherwise(F.lit(0.0))
-    return (
-        ranked.withColumn("pr", F.round(pr, 6))
-        .where(F.col("pr") >= F.lit(cutoff))
-        .select("doc_id", "keep_score", "pr")
-    )
-
-
-def quality_percentile_gate_by(
-    documents: DataFrame,
-    by_col: str = "lang",
-    cutoff: float = 0.75,
-    blocks: int = 64,
-) -> DataFrame:
-    """Docs at or above the ``cutoff`` percentile of their OWN group's
-    quality distribution: ``(doc_id, by_col, keep_score, pr)``.  The
-    per-group form of :func:`quality_percentile_gate` — the standard
-    curation cut when sources/languages have incomparable score
-    distributions (a global gate would keep almost none of a
-    low-scoring language; CCNet buckets per language for exactly this
-    reason).
-
-    Scale: the same atom-spread decomposition, with every cumsum window
-    additionally PARTITIONED by the group
-    (``rank.block_ranked_spread(group_cols=[by_col])``) — per-group
-    offsets stay ≤ ``blocks`` rows per group, hot tie atoms sub-block on
-    the document key, and nothing is ever globally sorted.  ``pr`` is
-    per-group ``(rank-1)/(n_g-1)``, the exact double any engine's
-    ``percent_rank() OVER (PARTITION BY group ...)`` produces.
-
-    Contract: ``doc_id`` must be NUMERIC (the sub-blocking arithmetic
-    — see :func:`quality_percentile_gate` for the string-key recipe).
-    """
-    from flink_bm25_spark.operators.rank import (  # noqa: PLC0415
-        block_ranked_spread,
-    )
-
-    base = quality_scores(documents, carry=(by_col,)).select(
-        "doc_id", by_col, "keep_score"
-    ).localCheckpoint(eager=True)
     ranked = block_ranked_spread(
         base,
         "keep_score",
@@ -630,40 +619,44 @@ def quality_percentile_gate_by(
         blocks=blocks,
         lo=0.0,
         hi=1.0,
-        group_cols=[by_col],
+        group_cols=g,
     )
-    pr = F.when(
-        F.col("_n") > 1,
-        (F.col("_rank") - 1).cast("double") / (F.col("_n") - 1),
-    ).otherwise(F.lit(0.0))
     return (
-        ranked.withColumn("pr", F.round(pr, 6))
+        ranked.withColumn("pr", F.round(_percent_rank(), 6))
         .where(F.col("pr") >= F.lit(cutoff))
-        .select("doc_id", by_col, "keep_score", "pr")
+        .select("doc_id", *g, "keep_score", "pr")
     )
 
 
 def quality_percentile_gate_approx(
-    documents: DataFrame, cutoff: float = 0.75, accuracy: int = 10_000
+    documents: DataFrame,
+    cutoff: float = 0.75,
+    accuracy: int = 10_000,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """100 TB form of :func:`quality_percentile_gate`: the threshold comes
-    from ``approx_percentile`` — a mergeable t-digest-style sketch built
-    in ONE tree aggregation (map-side partials, no global sort, no
-    single-reducer window) — then broadcast back as a scalar filter.
+    """100 TB form of :func:`quality_percentile_gate`: the threshold
+    (per group with ``group_cols``) comes from ``approx_percentile`` — a
+    mergeable t-digest-style sketch built in ONE tree aggregation
+    (map-side partials, no global sort, no single-reducer window) —
+    then joins back as a filter (:func:`rank.nullsafe_key_join`).
 
     Error is bounded by the sketch ``accuracy`` (rank error ≤ 1/accuracy),
     so the kept set can differ from the exact gate only for documents
-    within that rank band of the cutoff.  Returns ``(doc_id, keep_score)``
-    (no exact ``pr`` — computing one would reintroduce the global sort).
+    within that rank band of the cutoff.  Returns ``(doc_id,
+    *group_cols, keep_score)`` (no exact ``pr`` — computing one would
+    reintroduce the rank).
     """
-    scored = quality_scores(documents).select("doc_id", "keep_score")
-    thr = scored.agg(
+    g = list(group_cols)
+    scored = quality_scores(documents, carry=tuple(g)).select(
+        "doc_id", *g, "keep_score"
+    )
+    thr = scored.groupBy(*g).agg(
         F.percentile_approx("keep_score", cutoff, accuracy).alias("__thr")
     )
     return (
-        scored.join(F.broadcast(thr))
+        nullsafe_key_join(scored, thr, g)
         .where(F.col("keep_score") >= F.col("__thr"))
-        .select("doc_id", "keep_score")
+        .select("doc_id", *g, "keep_score")
     )
 
 
@@ -965,20 +958,26 @@ def _bigram_relation(
 
 
 def lm_perplexity_scores(
-    documents: DataFrame, alpha: float = 0.1
+    documents: DataFrame,
+    alpha: float = 0.1,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """``(doc_id, n_bigrams, nll)`` — add-α-smoothed bigram language
-    model trained on the corpus, scored back over every document:
-    ``nll = avg(-ln P(w2|w1))`` (lower = more typical of the corpus;
-    CCNet-style perplexity filtering, rank-equivalent to perplexity
-    ``e^nll``).
+    """``(doc_id, *group_cols, n_bigrams, nll)`` — add-α-smoothed bigram
+    language model trained on the corpus, scored back over every
+    document: ``nll = avg(-ln P(w2|w1))`` (lower = more typical of the
+    corpus; CCNet-style perplexity filtering, rank-equivalent to
+    perplexity ``e^nll``).  With ``group_cols`` every group fits and
+    scores its OWN model (CCNet fits one LM per language — scoring
+    German against an English model measures language, not quality);
+    null group keys train and score their own model (null-safe joins).
 
     ``P(w2|w1) = (C(w1,w2) + α) / (C(w1) + α·V)`` with V = distinct
-    unigram vocabulary.  Everything is a count relation: train and score
-    share the one map-side bigram extraction; the model "fit" is two
-    aggregations; scoring is a co-keyed join on (w1, w2) — at 100 TB the
-    model table shuffles once and the corpus joins against it keyed,
-    never broadcast (bigram vocabularies outgrow driver memory).
+    unigram vocabulary (per group).  Everything is a count relation:
+    train and score share the one map-side bigram extraction; the model
+    "fit" is two aggregations; scoring is a co-keyed join on
+    (*group, w1, w2) — at 100 TB the model table shuffles once and the
+    corpus joins against it keyed, never broadcast (bigram vocabularies
+    outgrow driver memory).
 
     Float discipline for the oracle: the only transcendental is
     ``ln`` of a count ratio (identical doubles both engines); the
@@ -990,16 +989,14 @@ def lm_perplexity_scores(
     # leg re-tokenized the corpus.  Batch-only by construction (the
     # ccnet wrappers already checkpoint); the streaming scorer path is
     # :func:`lm_score` against a persisted model, which is untouched.
-    base = _token_relation(documents).localCheckpoint(eager=False)
-    bigrams = _pairs_from_tokens(base)
-    pair_counts = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    vocab = base.select(
-        F.explode(F.array_distinct("_ws")).alias("w")
-    ).agg(F.countDistinct("w").alias("v"))
+    g = list(group_cols)
+    base = _token_relation(documents, tuple(g)).localCheckpoint(eager=False)
+    bigrams = _pairs_from_tokens(base, tuple(g))
+    pair_counts, vocab = _lm_counts(base, bigrams, g)
     # uni_counts=None: C(w1) derived as the pair-marginal window sum —
     # one pass over pair TYPES, not a second corpus bigram aggregation
-    model = lm_model(pair_counts, None, vocab, alpha)
-    return lm_score(documents, model, bigrams=bigrams)
+    model = lm_model(pair_counts, None, vocab, alpha, group_cols=g)
+    return lm_score(documents, model, group_cols=g, bigrams=bigrams)
 
 
 def ccnet_buckets(
@@ -1007,13 +1004,18 @@ def ccnet_buckets(
     alpha: float = 0.1,
     cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
     blocks: int = 64,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """``(doc_id, n_bigrams, nll, pr, bucket)`` — CCNet's perplexity
-    bucketing (Wenzek et al. 2020, arXiv:1911.00359): rank every document
-    by LM negative log-likelihood and cut the corpus into ``head`` (most
-    LM-typical), ``middle``, ``tail`` terciles — the standard recipe for
-    perplexity-stratified sampling (train mostly on head+middle, keep a
-    measured tail slice for diversity).
+    """``(doc_id, *group_cols, n_bigrams, nll, pr, bucket)`` — CCNet's
+    perplexity bucketing (Wenzek et al. 2020, arXiv:1911.00359): rank
+    every document by LM negative log-likelihood and cut the corpus into
+    ``head`` (most LM-typical), ``middle``, ``tail`` terciles — the
+    standard recipe for perplexity-stratified sampling (train mostly on
+    head+middle, keep a measured tail slice for diversity).  With
+    ``group_cols`` this is CCNet's published design: a perplexity model
+    PER LANGUAGE and terciles cut within each language's own nll
+    distribution, so low-resource languages are never bucketed against
+    the dominant one.
 
     Ranking uses the 6-dp-rounded ``nll`` (ties share a percent_rank —
     rank arithmetic is exact integer-ratio math, so the bucketing
@@ -1026,72 +1028,96 @@ def ccnet_buckets(
     :func:`flink_bm25_spark.operators.rank.min_ranked_by_value` (the nll
     range is measured with one min/max tree aggregation over the
     checkpointed scores; a tied score atom is ONE row on the counts
-    side, so no task ever sorts an atom).  ``pr = (rank-1)/(n-1)`` is
-    the identical double the single-window form (and the oracle)
-    produces; buckets cut on the unrounded ratio exactly as before.
-    For sketch-threshold cutting with no rank at all, see
+    side, so no task ever sorts an atom).  ``pr = (rank-1)/(n-1)`` (per
+    group) is the identical double the single-window form (and the
+    oracle) produces; buckets cut on the unrounded ratio.  For
+    sketch-threshold cutting with no rank at all, see
     :func:`ccnet_buckets_approx`.
     """
-    from flink_bm25_spark.operators.rank import (  # noqa: PLC0415
-        min_ranked_by_value,
+    g = list(group_cols)
+    scored = lm_perplexity_scores(documents, alpha, g).localCheckpoint(
+        eager=True
     )
-
-    scored = lm_perplexity_scores(documents, alpha).localCheckpoint(eager=True)
-    ranked = min_ranked_by_value(scored, "nll", blocks=blocks)
-    pr = F.when(
-        F.col("_n") > 1,
-        (F.col("_rank") - 1).cast("double") / (F.col("_n") - 1),
-    ).otherwise(F.lit(0.0))
-    bucket = (
-        F.when(pr < F.lit(cuts[0]), "head")
-        .when(pr < F.lit(cuts[1]), "middle")
-        .otherwise("tail")
-    )
+    ranked = min_ranked_by_value(scored, "nll", blocks=blocks, group_cols=g)
+    pr = _percent_rank()
     return ranked.select(
         "doc_id",
+        *g,
         "n_bigrams",
         "nll",
         F.round(pr, 6).alias("pr"),
-        bucket.alias("bucket"),
+        _tercile(pr, F.lit(cuts[0]), F.lit(cuts[1])).alias("bucket"),
     )
 
 
-def lm_perplexity_scores_by(
-    documents: DataFrame, by_col: str = "lang", alpha: float = 0.1
+def ccnet_buckets_approx(
+    documents: DataFrame,
+    alpha: float = 0.1,
+    cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
+    accuracy: int = 10_000,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """``(doc_id, by_col, n_bigrams, nll)`` — the per-group form of
-    :func:`lm_perplexity_scores`: a SEPARATE add-α bigram model per
-    group (CCNet fits one LM per language — scoring German against an
-    English model measures language, not quality).  One formula, one
-    code path: the shared :func:`lm_model`/:func:`lm_score` helpers
-    with ``group_cols=[by_col]`` — pair and unigram counts per
-    (group, w1[, w2]), vocabulary per group, scoring joined on
-    (group, w1, w2), co-keyed end to end, nothing broadcast except the
-    thin (doc_id → group) relation.  Null group keys train and score
-    their own model (null-safe joins).
-
-    r9: same-corpus fit+score, so the token relation is lazily
-    localCheckpointed and shared across the fit bigrams, the per-group
-    vocabulary and the scoring bigrams — one tokenization instead of
-    three (batch-only; the frozen-model scorers fit and score DISJOINT
-    relations and keep the plain paths)."""
-    base = _token_relation(documents, (by_col,)).localCheckpoint(
-        eager=False
+    """100 TB form of :func:`ccnet_buckets`: the two cut values (per
+    group with ``group_cols``) come from ONE ``approx_percentile``
+    aggregation (mergeable sketches, no global sort) and join back
+    (:func:`rank.nullsafe_key_join`); bucketing is then pure map-side.
+    Documents within the sketch's rank-error band of a cut may land in
+    the adjacent bucket — everything else agrees with the exact form.
+    Returns ``(doc_id, *group_cols, n_bigrams, nll, bucket)`` (no exact
+    ``pr`` — computing one would reintroduce the rank)."""
+    g = list(group_cols)
+    scored = lm_perplexity_scores(documents, alpha, g)
+    thr = scored.groupBy(*g).agg(
+        F.percentile_approx("nll", cuts[0], accuracy).alias("__t1"),
+        F.percentile_approx("nll", cuts[1], accuracy).alias("__t2"),
     )
-    bigrams = _pairs_from_tokens(base, (by_col,))
-    pair_counts = bigrams.groupBy(by_col, "w1", "w2").agg(
+    bucket = _tercile(F.col("nll"), F.col("__t1"), F.col("__t2"))
+    return nullsafe_key_join(scored, thr, g).select(
+        "doc_id", *g, "n_bigrams", "nll", bucket.alias("bucket")
+    )
+
+
+def _add_alpha_nl(c12: Column, alpha: float) -> Column:
+    """``-ln((c12 + α) / (c1 + α·V))`` over a fitted relation's ``c1``
+    and ``v`` columns — the add-α bigram cost, also for an unseen
+    continuation (``c12 = 0``)."""
+    return -F.log(
+        (c12 + F.lit(alpha)) / (F.col("c1") + F.lit(alpha) * F.col("v"))
+    )
+
+
+def _lm_fitted(
+    pair_counts: DataFrame,
+    uni_counts: DataFrame | None,
+    vocab: DataFrame,
+    g: list[str],
+) -> DataFrame:
+    """``(*g, w1, w2, c12, c1, v)`` — pair counts with their context
+    count and vocabulary size attached (see :func:`lm_model` for
+    ``uni_counts=None``)."""
+    if uni_counts is None:
+        w = Window.partitionBy(*g, "w1")
+        fitted = pair_counts.withColumn("c1", F.sum("c12").over(w))
+    else:
+        fitted = nullsafe_key_join(pair_counts, uni_counts, [*g, "w1"])
+    return nullsafe_key_join(fitted, vocab, g)
+
+
+def _lm_counts(
+    base: DataFrame, bigrams: DataFrame, g: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """``(pair_counts, vocab)`` of a :func:`_token_relation` ``base``
+    and its bigrams: ``(*g, w1, w2, c12)`` and ``(*g, v)``, the distinct
+    vocabulary size per group."""
+    pair_counts = bigrams.groupBy(*g, "w1", "w2").agg(
         F.count("*").alias("c12")
     )
     vocab = (
-        base.select(
-            F.col(by_col),
-            F.explode(F.array_distinct("_ws")).alias("w"),
-        )
-        .groupBy(by_col)
+        base.select(*g, F.explode(F.array_distinct("_ws")).alias("w"))
+        .groupBy(*g)
         .agg(F.countDistinct("w").alias("v"))
     )
-    model = lm_model(pair_counts, None, vocab, alpha, group_cols=[by_col])
-    return lm_score(documents, model, group_cols=[by_col], bigrams=bigrams)
+    return pair_counts, vocab
 
 
 def lm_fit_by(
@@ -1102,25 +1128,7 @@ def lm_fit_by(
     train-once half of CCNet's production loop: persist this relation
     and :func:`lm_score` every future batch or stream against it
     without ever touching the training corpus again."""
-    bigrams = _bigram_relation(documents, carry=(by_col,))
-    pair_counts = bigrams.groupBy(by_col, "w1", "w2").agg(
-        F.count("*").alias("c12")
-    )
-
-    vocab = (
-        documents.select(
-            F.col(by_col),
-            F.explode(
-                F.array_distinct(
-                    F.filter(tokenize_expr(F.col("text")), lambda w: w != F.lit(""))
-                )
-            ).alias("w"),
-        )
-        .groupBy(by_col)
-        .agg(F.countDistinct("w").alias("v"))
-    )
-    # uni_counts=None: per-group pair-marginal window sum (see lm_model)
-    return lm_model(pair_counts, None, vocab, alpha, group_cols=[by_col])
+    return lm_fit_backoff_by(documents, by_col, alpha)[0]
 
 
 def lm_fit_backoff_by(
@@ -1143,73 +1151,23 @@ def lm_fit_backoff_by(
     :func:`lm_score_backoff` scores any future batch.  ``contexts`` is
     context-vocabulary-sized and ``defaults`` groups-sized, both tiny
     next to the pair-type model."""
-    bigrams = _bigram_relation(documents, carry=(by_col,))
-    pair_counts = bigrams.groupBy(by_col, "w1", "w2").agg(
-        F.count("*").alias("c12")
+    g = [by_col]
+    base = _token_relation(documents, tuple(g))
+    pair_counts, vocab = _lm_counts(
+        base, _pairs_from_tokens(base, tuple(g)), g
     )
-    vocab = (
-        documents.select(
-            F.col(by_col),
-            F.explode(
-                F.array_distinct(
-                    F.filter(
-                        tokenize_expr(F.col("text")),
-                        lambda w: w != F.lit(""),
-                    )
-                )
-            ).alias("w"),
-        )
-        .groupBy(by_col)
-        .agg(F.countDistinct("w").alias("v"))
-    )
-    w = Window.partitionBy(by_col, "w1")
-    fitted = nullsafe_key_join(
-        pair_counts.withColumn("c1", F.sum("c12").over(w)), vocab, [by_col]
-    )
-    model = fitted.select(
-        by_col,
-        "w1",
-        "w2",
-        (
-            -F.log(
-                (F.col("c12") + F.lit(alpha))
-                / (F.col("c1") + F.lit(alpha) * F.col("v"))
-            )
-        ).alias("nl"),
-    )
+    model = lm_model(pair_counts, None, vocab, alpha, group_cols=g)
     # c1 and v are constant within (by, w1); max() is just the reducer
     contexts = (
-        fitted.groupBy(by_col, "w1")
+        _lm_fitted(pair_counts, None, vocab, g)
+        .groupBy(*g, "w1")
         .agg(F.max("c1").alias("c1"), F.max("v").alias("v"))
-        .select(
-            by_col,
-            "w1",
-            (
-                -F.log(
-                    F.lit(alpha) / (F.col("c1") + F.lit(alpha) * F.col("v"))
-                )
-            ).alias("nl0"),
-        )
+        .select(*g, "w1", _add_alpha_nl(F.lit(0), alpha).alias("nl0"))
     )
     defaults = vocab.select(
-        by_col, F.log(F.col("v").cast("double")).alias("nl_oov")
+        *g, F.log(F.col("v").cast("double")).alias("nl_oov")
     )
     return model, contexts, defaults
-
-
-def _nullsafe_left_join(
-    left: DataFrame, right: DataFrame, keys: list[str]
-) -> DataFrame:
-    """LEFT-outer twin of :func:`rank.nullsafe_key_join` (null group
-    keys match their own model; misses keep the left row)."""
-    r = right
-    for k in keys:
-        r = r.withColumnRenamed(k, "_rk_" + k)
-    cond = None
-    for k in keys:
-        c = left[k].eqNullSafe(r["_rk_" + k])
-        cond = c if cond is None else (cond & c)
-    return left.join(r, cond, "left").drop(*["_rk_" + k for k in keys])
 
 
 def lm_score_backoff(
@@ -1238,141 +1196,14 @@ def lm_score_backoff(
     same scale shape as :func:`lm_score`."""
     g = list(group_cols or [])
     bigrams = _bigram_relation(documents, carry=tuple(g))
-    scored = _nullsafe_left_join(bigrams, model, [*g, "w1", "w2"])
-    scored = _nullsafe_left_join(scored, contexts, [*g, "w1"])
-    if g:
-        scored = _nullsafe_left_join(scored, defaults, g)
-    else:
-        scored = scored.crossJoin(F.broadcast(defaults))
+    scored = nullsafe_key_join(bigrams, model, [*g, "w1", "w2"], "left")
+    scored = nullsafe_key_join(scored, contexts, [*g, "w1"], "left")
+    scored = nullsafe_key_join(scored, defaults, g, "left")
     per = F.coalesce(F.col("nl"), F.col("nl0"), F.col("nl_oov"))
     return scored.groupBy("doc_id", *g).agg(
         F.count("*").alias("n_bigrams"),
         F.count("nl").alias("n_known"),
         F.round(F.avg(per), 6).alias("nll"),
-    )
-
-
-def ccnet_buckets_by(
-    documents: DataFrame,
-    by_col: str = "lang",
-    alpha: float = 0.1,
-    cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
-    blocks: int = 64,
-) -> DataFrame:
-    """``(doc_id, by_col, n_bigrams, nll, pr, bucket)`` — CCNet's actual
-    published design (Wenzek et al. 2020): a perplexity model PER
-    LANGUAGE and head/middle/tail terciles cut within each language's
-    own nll distribution, so low-resource languages are never bucketed
-    against the dominant one.  Ranking is the grouped no-row-window
-    min-rank (:func:`rank.min_ranked_by_value` with ``group_cols``);
-    ``pr`` is per-group ``(rank-1)/(n_g-1)``.
-    """
-    from flink_bm25_spark.operators.rank import (  # noqa: PLC0415
-        min_ranked_by_value,
-    )
-
-    scored = lm_perplexity_scores_by(
-        documents, by_col, alpha
-    ).localCheckpoint(eager=True)
-    ranked = min_ranked_by_value(
-        scored, "nll", blocks=blocks, group_cols=[by_col]
-    )
-    pr = F.when(
-        F.col("_n") > 1,
-        (F.col("_rank") - 1).cast("double") / (F.col("_n") - 1),
-    ).otherwise(F.lit(0.0))
-    bucket = (
-        F.when(pr < F.lit(cuts[0]), "head")
-        .when(pr < F.lit(cuts[1]), "middle")
-        .otherwise("tail")
-    )
-    return ranked.select(
-        "doc_id",
-        by_col,
-        "n_bigrams",
-        "nll",
-        F.round(pr, 6).alias("pr"),
-        bucket.alias("bucket"),
-    )
-
-
-def ccnet_buckets_approx(
-    documents: DataFrame,
-    alpha: float = 0.1,
-    cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """100 TB form of :func:`ccnet_buckets`: the two cut values come from
-    ``approx_percentile`` (one mergeable-sketch tree aggregation, no
-    global sort) and broadcast back as scalars; bucketing is then pure
-    map-side.  Documents within the sketch's rank-error band of a cut
-    may land in the adjacent bucket — everything else agrees with the
-    exact form.  Returns ``(doc_id, n_bigrams, nll, bucket)`` (no exact
-    ``pr`` — computing one would reintroduce the global sort)."""
-    scored = lm_perplexity_scores(documents, alpha)
-    thr = scored.agg(
-        F.percentile_approx("nll", cuts[0], accuracy).alias("__t1"),
-        F.percentile_approx("nll", cuts[1], accuracy).alias("__t2"),
-    )
-    bucket = (
-        F.when(F.col("nll") < F.col("__t1"), "head")
-        .when(F.col("nll") < F.col("__t2"), "middle")
-        .otherwise("tail")
-    )
-    return (
-        scored.join(F.broadcast(thr))
-        .select("doc_id", "n_bigrams", "nll", bucket.alias("bucket"))
-    )
-
-
-def ccnet_buckets_by_approx(
-    documents: DataFrame,
-    by_col: str = "lang",
-    alpha: float = 0.1,
-    cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """100 TB form of :func:`ccnet_buckets_by`: per-group cut values
-    from ONE grouped ``approx_percentile`` aggregation (mergeable
-    sketch per group, groups-sized result, null-safe keyed join back) —
-    no rank relation at all.  Documents within the sketch's rank-error
-    band of their group's cut may land in the adjacent bucket.
-    Returns ``(doc_id, by_col, n_bigrams, nll, bucket)``."""
-    scored = lm_perplexity_scores_by(documents, by_col, alpha)
-    thr = scored.groupBy(by_col).agg(
-        F.percentile_approx("nll", cuts[0], accuracy).alias("__t1"),
-        F.percentile_approx("nll", cuts[1], accuracy).alias("__t2"),
-    )
-    bucket = (
-        F.when(F.col("nll") < F.col("__t1"), "head")
-        .when(F.col("nll") < F.col("__t2"), "middle")
-        .otherwise("tail")
-    )
-    return nullsafe_key_join(scored, thr, [by_col]).select(
-        "doc_id", by_col, "n_bigrams", "nll", bucket.alias("bucket")
-    )
-
-
-def quality_percentile_gate_by_approx(
-    documents: DataFrame,
-    by_col: str = "lang",
-    cutoff: float = 0.75,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """100 TB form of :func:`quality_percentile_gate_by`: each group's
-    threshold from ONE grouped ``approx_percentile`` aggregation,
-    applied with a null-safe keyed join — no rank, no row-relation
-    window.  Returns ``(doc_id, by_col, keep_score)``."""
-    base = quality_scores(documents, carry=(by_col,)).select(
-        "doc_id", by_col, "keep_score"
-    )
-    thr = base.groupBy(by_col).agg(
-        F.percentile_approx("keep_score", cutoff, accuracy).alias("__thr")
-    )
-    return (
-        nullsafe_key_join(base, thr, [by_col])
-        .where(F.col("keep_score") >= F.col("__thr"))
-        .select("doc_id", by_col, "keep_score")
     )
 
 
@@ -1403,21 +1234,9 @@ def lm_model(
     context counts genuinely differ from the pair marginals (e.g. a
     truncated pair relation)."""
     g = list(group_cols or [])
-    logp = F.log(
-        (F.col("c12") + F.lit(alpha)) / (F.col("c1") + F.lit(alpha) * F.col("v"))
+    return _lm_fitted(pair_counts, uni_counts, vocab, g).select(
+        *g, "w1", "w2", _add_alpha_nl(F.col("c12"), alpha).alias("nl")
     )
-    if uni_counts is None:
-        w = Window.partitionBy(*g, "w1")
-        fitted = pair_counts.withColumn("c1", F.sum("c12").over(w))
-    elif g:
-        fitted = nullsafe_key_join(pair_counts, uni_counts, [*g, "w1"])
-    else:
-        fitted = pair_counts.join(uni_counts, "w1")
-    if g:
-        fitted = nullsafe_key_join(fitted, vocab, g)
-    else:
-        fitted = fitted.crossJoin(F.broadcast(vocab))
-    return fitted.select(*g, "w1", "w2", (-logp).alias("nl"))
 
 
 def lm_score(
@@ -1445,12 +1264,9 @@ def lm_score(
     g = list(group_cols or [])
     if bigrams is None:
         bigrams = _bigram_relation(documents, carry=tuple(g))
-    if g:
-        scored = nullsafe_key_join(bigrams, model, [*g, "w1", "w2"]).select(
-            "doc_id", *g, "nl"
-        )
-    else:
-        scored = bigrams.join(model, ["w1", "w2"]).select("doc_id", "nl")
+    scored = nullsafe_key_join(bigrams, model, [*g, "w1", "w2"]).select(
+        "doc_id", *g, "nl"
+    )
     return scored.groupBy("doc_id", *g).agg(
         F.count("*").alias("n_bigrams"),
         F.round(F.avg("nl"), 6).alias("nll"),

@@ -306,7 +306,7 @@ def test_quantile_tracker_batches_equal_rebuild(spark, tmp_path):
     save/load, and state size stays at groups x k."""
     from flink_bm25_spark.api import QuantileTracker
     from flink_bm25_spark.operators.sketches import (
-        kmv_quantiles_by,
+        kmv_quantiles,
         kmv_sketch_by,
     )
 
@@ -330,8 +330,8 @@ def test_quantile_tracker_batches_equal_rebuild(spark, tmp_path):
     got = {(r.grp, r.q): r.est for r in qt.quantiles([0.5]).collect()}
     want = {
         (r.grp, r.q): r.est
-        for r in kmv_quantiles_by(
-            kmv_sketch_by(df, "grp", "val", "rid", k=k), "grp", [0.5]
+        for r in kmv_quantiles(
+            kmv_sketch_by(df, "grp", "val", "rid", k=k), [0.5], ["grp"]
         ).collect()
     }
     assert got == want

@@ -8,6 +8,7 @@ referenced by DEPLOY.md's memory-budget section.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -82,3 +83,37 @@ def test_forced_broadcasts_are_annotated_bounded():
     # dedup_stats' 1-row clustered-count scalar
     hints = re.findall(r"F\.broadcast\(\s*(\w+)", dedup)
     assert set(hints) <= {"hot", "spark", "n_clustered"}, hints
+
+
+# f / f_by pairs in operators/ that keep two implementations, each a
+# different physical plan (every other grouped statistic takes
+# ``group_cols``: ungrouped is grouped over zero keys).
+GROUPED_TWINS_ALLOWED = {
+    # dense 64-register contract (absent buckets as rank-0 rows) vs the
+    # sparse grouped registers
+    "operators/sketches.py::hll_buckets",
+    # TakeOrderedAndProject vs WindowGroupLimit: an ungrouped row_number
+    # window would be an unpartitioned WindowExec (a one-task sort)
+    "operators/sketches.py::kmv_sketch",
+}
+
+
+def test_no_grouped_twins():
+    """No operator module defines both ``f`` and a grouped twin
+    ``f_by`` (or ``f_approx`` and ``f_by_approx``) at top level."""
+    twins = []
+    for rel, src in _pkg_sources():
+        if not rel.startswith("operators" + os.sep):
+            continue
+        names = {
+            n.name
+            for n in ast.parse(src).body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        for n in sorted(names):
+            base = re.sub(r"_by(?=_|$)", "", n)
+            if base != n and base in names:
+                twins.append(f"{rel}::{base}")
+    assert set(twins) <= GROUPED_TWINS_ALLOWED, sorted(
+        set(twins) - GROUPED_TWINS_ALLOWED
+    )

@@ -691,15 +691,12 @@ def test_ccnet_buckets_by_lang_per_group_terciles(spark):
     ~1/3 each, and a document's nll comes from its language's model
     (pinned by differing from the pooled-model nll on a corpus where
     languages have distinct bigram statistics)."""
-    from flink_bm25_spark.operators.text_analysis import (
-        ccnet_buckets,
-        ccnet_buckets_by,
-    )
+    from flink_bm25_spark.operators.text_analysis import ccnet_buckets
     from flink_bm25_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, "documents", SF_DIR)
-    out = ccnet_buckets_by(docs, by_col="lang").collect()
+    out = ccnet_buckets(docs, group_cols=["lang"]).collect()
     per_lang: dict[str, dict[str, list[float]]] = {}
     for r in out:
         per_lang.setdefault(r.lang, {}).setdefault(r.bucket, []).append(r.nll)
@@ -726,10 +723,10 @@ def test_grouped_approx_twins_agree_off_boundary(spark):
     away from each group's cut boundary (within the sketch's rank-error
     band disagreement is allowed; off it, none is)."""
     from flink_bm25_spark.operators.text_analysis import (
-        ccnet_buckets_by,
-        ccnet_buckets_by_approx,
-        quality_percentile_gate_by,
-        quality_percentile_gate_by_approx,
+        ccnet_buckets,
+        ccnet_buckets_approx,
+        quality_percentile_gate,
+        quality_percentile_gate_approx,
     )
     from flink_bm25_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
@@ -738,10 +735,11 @@ def test_grouped_approx_twins_agree_off_boundary(spark):
 
     exact = {
         (r.doc_id): (r.lang, r.bucket, r.pr)
-        for r in ccnet_buckets_by(docs).collect()
+        for r in ccnet_buckets(docs, group_cols=["lang"]).collect()
     }
     approx = {
-        r.doc_id: r.bucket for r in ccnet_buckets_by_approx(docs).collect()
+        r.doc_id: r.bucket
+        for r in ccnet_buckets_approx(docs, group_cols=["lang"]).collect()
     }
     assert exact.keys() == approx.keys()
     band = 2e-2  # generous rank-error margin on the tiny fixture
@@ -750,11 +748,16 @@ def test_grouped_approx_twins_agree_off_boundary(spark):
             assert approx[d] == bucket, (d, lang, pr, bucket, approx[d])
 
     g_exact = {
-        r.doc_id for r in quality_percentile_gate_by(docs, cutoff=0.5).collect()
+        r.doc_id
+        for r in quality_percentile_gate(
+            docs, cutoff=0.5, group_cols=["lang"]
+        ).collect()
     }
     g_approx = {
         r.doc_id
-        for r in quality_percentile_gate_by_approx(docs, cutoff=0.5).collect()
+        for r in quality_percentile_gate_approx(
+            docs, cutoff=0.5, group_cols=["lang"]
+        ).collect()
     }
     # approx kept-set differs from exact only near the per-group cut:
     # symmetric difference is a small fraction of the corpus
@@ -824,8 +827,8 @@ def test_web_intake_pipeline_empty_and_single(spark):
 
 def test_web_intake_equals_manual_composition(spark):
     """web_intake_pipeline == the four stages composed by hand
-    (strip_markup(keep_line_breaks) -> line_dedup -> ccnet_buckets_by ->
-    quality_percentile_gate_by, inner-joined on doc_id) — guards the
+    (strip_markup(keep_line_breaks) -> line_dedup -> per-lang ccnet_buckets
+    -> per-lang quality_percentile_gate, inner-joined on doc_id) — guards the
     facade against drift from its own stages under refactors."""
     import random
 
@@ -833,8 +836,8 @@ def test_web_intake_equals_manual_composition(spark):
     from flink_bm25_spark.operators.cleaning import web_intake_pipeline
     from flink_bm25_spark.operators.dedup import line_dedup
     from flink_bm25_spark.operators.text_analysis import (
-        ccnet_buckets_by,
-        quality_percentile_gate_by,
+        ccnet_buckets,
+        quality_percentile_gate,
     )
 
     rng = random.Random(9)
@@ -871,8 +874,8 @@ def test_web_intake_equals_manual_composition(spark):
         docs.select("doc_id", "lang"), "doc_id"
     ).select("doc_id", "lang", F.col("cleaned_text").alias("text"),
              "n_lines", "n_kept")
-    buckets = ccnet_buckets_by(cleaned, "lang")
-    gate = quality_percentile_gate_by(cleaned, "lang", cutoff=0.5)
+    buckets = ccnet_buckets(cleaned, group_cols=["lang"])
+    gate = quality_percentile_gate(cleaned, cutoff=0.5, group_cols=["lang"])
     want = {
         (r.doc_id, r.lang, r.cleaned_text, r.n_lines, r.n_kept,
          r.nll, r.bucket, r.keep_score, r.quality_pr)

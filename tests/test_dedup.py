@@ -208,7 +208,7 @@ def test_grouped_hll_equals_per_group_singles(spark):
     from flink_bm25_spark.operators.sketches import (
         hll_buckets_by,
         hll_distinct,
-        hll_estimate_by,
+        hll_estimate,
     )
     from flink_bm25_spark.operators.tokenize import filter_stopwords, tokenize
 
@@ -220,8 +220,8 @@ def test_grouped_hll_equals_per_group_singles(spark):
     )
     grouped = {
         r["lang"]: r["n_distinct_est"]
-        for r in hll_estimate_by(
-            hll_buckets_by(words, "lang", "word"), "lang"
+        for r in hll_estimate(
+            hll_buckets_by(words, "lang", "word"), ["lang"]
         ).collect()
     }
     for lang in grouped:

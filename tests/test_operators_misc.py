@@ -3,8 +3,12 @@ tokenizer, broadcast stopword removal, and sign-LSH candidate pairs."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from flink_bm25_spark.operators import profiling
+from flink_bm25_spark.operators import sketches as sk_ops
+from flink_bm25_spark.operators import text_analysis as ta
 from flink_bm25_spark.operators.similarity import (
     rp_lsh_bucket,
     rp_lsh_candidate_pairs,
@@ -589,7 +593,7 @@ def test_kmv_sketch_merge_equals_rebuild_and_quantiles(spark):
 
 def test_kmv_sketch_by_groupwise_law_and_plan(spark):
     from flink_bm25_spark.operators.sketches import (
-        kmv_quantiles_by,
+        kmv_quantiles,
         kmv_sketch_by,
         kmv_sketch,
     )
@@ -612,7 +616,7 @@ def test_kmv_sketch_by_groupwise_law_and_plan(spark):
         ]
         assert sorted(got[g]) == sorted(solo), g
     # per-group quantiles exist for every group
-    qs = kmv_quantiles_by(sk, "grp", [0.5]).collect()
+    qs = kmv_quantiles(sk, [0.5], group_cols=["grp"]).collect()
     assert {r.grp for r in qs} == {"g0", "g1", "g2"}
     # plan: the k-cut must run below the window sort (WindowGroupLimit)
     plan = sk._jdf.queryExecution().executedPlan().toString()
@@ -642,7 +646,7 @@ def test_winsorize_clip_and_trim(spark):
 
 
 def test_winsorize_by_per_group_bounds(spark):
-    from flink_bm25_spark.operators.profiling import winsorize, winsorize_by
+    from flink_bm25_spark.operators.profiling import winsorize
 
     rows = (
         [(i, "a", float(i)) for i in range(100)]
@@ -651,7 +655,9 @@ def test_winsorize_by_per_group_bounds(spark):
         + [(2000, "b", -1e9)]
     )
     df = spark.createDataFrame(rows, "rid long, grp string, val double")
-    out = winsorize_by(df, "grp", "val", "rid", lo=0.1, hi=0.9, k=64)
+    out = winsorize(
+        df, "val", "rid", lo=0.1, hi=0.9, k=64, group_cols=["grp"]
+    )
     by = {}
     for r in out.collect():
         by.setdefault(r.grp, []).append(r.val_w)
@@ -667,6 +673,91 @@ def test_winsorize_by_per_group_bounds(spark):
         ).collect()
     )
     assert sorted(by["a"]) == solo
+
+
+def test_winsorize_null_group_keeps_rows_and_own_bounds(spark):
+    """A null group key is a group of its own (SQL keeps the NULL
+    partition): its rows all survive the join-back, clipped to the null
+    group's own bounds, not dropped by a plain equi-join."""
+    from flink_bm25_spark.operators.profiling import winsorize
+
+    rows = (
+        [(i, "a", float(i)) for i in range(20)]
+        + [(100 + i, None, float(1000 + i)) for i in range(10)]
+        + [(200, None, 1e9)]
+    )
+    df = spark.createDataFrame(rows, "rid long, grp string, val double")
+    out = winsorize(
+        df, "val", "rid", lo=0.1, hi=0.9, k=64, group_cols=["grp"]
+    ).collect()
+    nulls = sorted(r.val_w for r in out if r.grp is None)
+    assert len(nulls) == 11 and len(out) == 31
+    assert 1000.0 <= nulls[0] and nulls[-1] < 1e9  # own bounds, outlier clipped
+    solo = sorted(
+        r.val_w
+        for r in winsorize(
+            df.where(F.col("grp").isNull()).drop("grp"),
+            "val", "rid", lo=0.1, hi=0.9, k=64,
+        ).collect()
+    )
+    assert nulls == solo
+
+
+def _kmv_quantiles_over(df, g):
+    val = df.withColumn("val", F.length("text"))
+    sk = (
+        sk_ops.kmv_sketch_by(val, g[0], "val", "doc_id", k=16)
+        if g
+        else sk_ops.kmv_sketch(val, "val", "doc_id", k=16)
+    )
+    return sk_ops.kmv_quantiles(sk, [0.25, 0.5, 0.75], g)
+
+
+# each operator as f(documents, group_cols)
+_ZERO_VS_ONE_KEY = {
+    "quality_gate": lambda df, g: ta.quality_percentile_gate(
+        df, cutoff=0.5, group_cols=g
+    ),
+    "quality_gate_approx": lambda df, g: ta.quality_percentile_gate_approx(
+        df, cutoff=0.5, group_cols=g
+    ),
+    "ccnet_buckets": lambda df, g: ta.ccnet_buckets(df, group_cols=g),
+    "ccnet_buckets_approx": lambda df, g: ta.ccnet_buckets_approx(
+        df, group_cols=g
+    ),
+    "lm_perplexity_scores": lambda df, g: ta.lm_perplexity_scores(
+        df, group_cols=g
+    ),
+    "winsorize": lambda df, g: profiling.winsorize(
+        df.withColumn("val", F.length("text")),
+        "val", "doc_id", lo=0.1, hi=0.9, k=16, group_cols=g,
+    ),
+    "kmv_quantiles": _kmv_quantiles_over,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_ZERO_VS_ONE_KEY))
+def test_zero_keys_equal_one_constant_key(spark, op):
+    """Ungrouped is grouped over zero keys: the zero-key path (broadcast
+    cross join of a one-row statistic) and the one-key path (null-safe
+    keyed join) give the same rows when the one key is constant."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(30)]
+    docs = spark.createDataFrame(
+        [
+            (d, "c", " ".join(
+                rng.choice(vocab) for _ in range(rng.randint(3, 40))
+            ))
+            for d in range(40)
+        ],
+        "doc_id long, grp string, text string",
+    )
+    f = _ZERO_VS_ONE_KEY[op]
+    solo = sorted(map(tuple, f(docs.drop("grp"), []).collect()))
+    grouped = sorted(map(tuple, f(docs, ["grp"]).drop("grp").collect()))
+    assert solo and grouped == solo
 
 
 def test_strip_markup_tags_entities_payloads(spark):
