@@ -47,26 +47,116 @@ def bm25_score_expr(tf, idf_col, dl, avgdl, k1: float = BM25_K1, b: float = BM25
 
 
 def rank_topk(
-    scored: DataFrame, k: int, score: str = "score", id_col: str = "doc_id"
+    scored: DataFrame,
+    k: int,
+    score: str = "score",
+    id_col: str = "doc_id",
+    group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Global top-``k`` of ``scored`` by ``score`` desc, ``id_col`` asc,
-    with a 1-based ``rk`` column appended.
+    """Top-``k`` of ``scored`` by ``score`` desc, ``id_col`` asc — per
+    ``group_cols`` key, or globally over zero keys — with a 1-based
+    ``rk`` column appended.  The engine's one top-k rule.
 
-    orderBy+limit plans TakeOrderedAndProject: each partition keeps a
-    k-row heap and only k rows per partition move to the final merge (a
-    row_number window over ``scored`` would instead drag every scored
-    doc into ONE partition — wrong at scale).  Its output is ONE
-    partition holding the k rows in sort order (the operator's declared
-    SinglePartition / outputOrdering), so a row's index there is its
-    rank: ``monotonically_increasing_id`` numbers partition 0's rows
-    0..k-1.  No rank window, hence no WindowExec logging "No Partition
-    Defined" on every call (partitioning the window by a literal does
-    not help: the optimizer drops foldable window partitions)."""
+    Zero keys: orderBy+limit plans TakeOrderedAndProject: each
+    partition keeps a k-row heap and only k rows per partition move to
+    the final merge (a row_number window over ``scored`` would instead
+    drag every scored doc into ONE partition — wrong at scale).  Its
+    output is ONE partition holding the k rows in sort order (the
+    operator's declared SinglePartition / outputOrdering), so a row's
+    index there is its rank: ``monotonically_increasing_id`` numbers
+    partition 0's rows 0..k-1.  No rank window, hence no WindowExec
+    logging "No Partition Defined" on every call (partitioning the
+    window by a literal does not help: the optimizer drops foldable
+    window partitions).
+
+    With keys: ``row_number <= k`` over the key partition — Spark plans
+    WindowGroupLimit, which prunes to k rows per key below the window
+    sort, so no key ever sorts more than its own rows."""
+    if group_cols:
+        w = Window.partitionBy(*group_cols).orderBy(
+            F.desc(score), F.asc(id_col)
+        )
+        return scored.withColumn(
+            "rk", F.row_number().over(w).cast("int")
+        ).where(F.col("rk") <= F.lit(k))
     return (
         scored.orderBy(F.desc(score), F.asc(id_col))
         .limit(k)
         .withColumn("rk", (F.monotonically_increasing_id() + 1).cast("int"))
     )
+
+
+def bm25_topk(
+    joined: DataFrame,
+    idf,
+    avgdl,
+    k: int | None,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    by: tuple[str, ...] = (),
+    weight=None,
+    n_terms: int | None = None,
+    score: str = "score",
+) -> DataFrame:
+    """The BM25 scoring core every ranker shares — ``(*by, doc_id,
+    score, rk)``: per-(doc, term) contributions (times the per-term
+    ``weight`` Column when given) summed per ``(*by, doc_id)``, rounded
+    to 6 places and cut to the top ``k`` per ``by`` key (globally over
+    zero keys) by :func:`rank_topk`.  ``k=None`` stops at the raw
+    per-doc sum — no round, no cut, no ``rk`` (facets roll it up).
+
+    It starts where each caller's joins end, so every caller keeps its
+    own join order and physical plan: ``joined`` carries ``tf`` and
+    ``dl`` per posting plus whatever the ``idf`` and ``avgdl`` Columns
+    read.  Batch callers join postings ⋈ broadcast idf ⋈ dlen ×
+    broadcast avgdl (:func:`_corpus_topk`); served callers join
+    postings ⋈ the broadcast df fold, ``idf = ln(n_docs/(df+1))`` —
+    the same ``ln(N/(df+1))``.
+
+    ``n_terms`` keeps only docs holding that many distinct words (AND):
+    a ``count_distinct(word)`` in the same aggregate and a HAVING cut —
+    no second pass, no self-join per term."""
+    keys = [*by, "doc_id"]
+    contrib = bm25_score_expr(F.col("tf"), idf, F.col("dl"), avgdl, k1, b)
+    if weight is not None:
+        contrib = weight * contrib
+    total = F.sum("contrib") if k is None else F.round(F.sum("contrib"), 6)
+    words, aggs = [], [total.alias(score)]
+    if n_terms is not None:
+        words = ["word"]
+        aggs.append(F.count_distinct("word").alias("_nt"))
+    scored = (
+        joined.select(*keys, *words, contrib.alias("contrib"))
+        .groupBy(*keys)
+        .agg(*aggs)
+    )
+    if n_terms is not None:
+        scored = scored.where(F.col("_nt") == F.lit(n_terms)).select(*keys, score)
+    return scored if k is None else rank_topk(scored, k, score, group_cols=by)
+
+
+def _corpus_topk(
+    matches: DataFrame,
+    idf_stats: DataFrame,
+    dlen: DataFrame,
+    k: int | None,
+    k1: float,
+    b: float,
+    avgdl_row: DataFrame | None = None,
+    **kw,
+) -> DataFrame:
+    """The batch rankers' join order in front of :func:`bm25_topk`:
+    postings ``matches`` ⋈ broadcast idf (|query| rows) ⋈ dlen (one
+    doc_id shuffle join) × broadcast avgdl (one row, so the scalar never
+    round-trips through Python)."""
+    if avgdl_row is None:
+        avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
+    joined = (
+        matches.join(F.broadcast(idf_stats.select("word", "idf")), "word")
+        .join(dlen, "doc_id")
+        .crossJoin(F.broadcast(avgdl_row))
+    )
+    return bm25_topk(joined, F.col("idf"), F.col("avgdl"), k, k1, b, **kw)
 
 
 def bm25_rank(
@@ -92,26 +182,8 @@ def bm25_rank(
     ``avg(dl)`` scalar relation so the full-corpus average is not
     re-aggregated per pass — same value, fused subtree.
     """
-    avgdl_row = (
-        _avgdl_row
-        if _avgdl_row is not None
-        else dlen.agg(F.avg("dl").alias("avgdl"))
-    )
     matches = tf.where(F.col("word").isin(*query_terms))
-    scored = (
-        matches.join(F.broadcast(idf_stats.select("word", "idf")), "word")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(avgdl_row))
-        .select(
-            "doc_id",
-            bm25_score_expr(
-                F.col("tf"), F.col("idf"), F.col("dl"), F.col("avgdl"), k1, b
-            ).alias("contrib"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    return rank_topk(scored, k)
+    return _corpus_topk(matches, idf_stats, dlen, k, k1, b, _avgdl_row)
 
 
 def doc_norms(tfidf_rel: DataFrame) -> DataFrame:
@@ -188,29 +260,10 @@ def bm25_rank_conjunctive(
     pruned to query terms at the scan exactly as in the OR form, so
     shuffle volume is O(docs matching ANY term) before the HAVING cut.
     """
-    n_terms = len(set(query_terms))
-    avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
     matches = tf.where(F.col("word").isin(*query_terms))
-    scored = (
-        matches.join(F.broadcast(idf_stats.select("word", "idf")), "word")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(avgdl_row))
-        .select(
-            "doc_id",
-            "word",
-            bm25_score_expr(
-                F.col("tf"), F.col("idf"), F.col("dl"), F.col("avgdl"), k1, b
-            ).alias("contrib"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum("contrib"), 6).alias("score"),
-            F.count_distinct("word").alias("_nt"),
-        )
-        .where(F.col("_nt") == F.lit(n_terms))
-        .select("doc_id", "score")
+    return _corpus_topk(
+        matches, idf_stats, dlen, k, k1, b, n_terms=len(set(query_terms))
     )
-    return rank_topk(scored, k)
 
 
 def bm25_rank_excluding(
@@ -234,9 +287,6 @@ def bm25_rank_excluding(
     the OR form over the surviving candidates, so scores equal
     ``bm25_rank``'s for every surviving document.
     """
-    if not exclude_terms:  # nothing to exclude — the OR form verbatim
-        return bm25_rank(tf, idf_stats, dlen, query_terms, k, k1, b)
-    avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
     banned = (
         tf.where(F.col("word").isin(*exclude_terms))
         .select("doc_id")
@@ -245,20 +295,7 @@ def bm25_rank_excluding(
     matches = tf.where(F.col("word").isin(*query_terms)).join(
         banned, "doc_id", "left_anti"
     )
-    scored = (
-        matches.join(F.broadcast(idf_stats.select("word", "idf")), "word")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(avgdl_row))
-        .select(
-            "doc_id",
-            bm25_score_expr(
-                F.col("tf"), F.col("idf"), F.col("dl"), F.col("avgdl"), k1, b
-            ).alias("contrib"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    return rank_topk(scored, k)
+    return _corpus_topk(matches, idf_stats, dlen, k, k1, b)
 
 
 def bm25_batch_rank(
@@ -291,27 +328,8 @@ def bm25_batch_rank(
     q_terms = queries.select(
         F.col(id_col), F.explode(F.col(terms_col)).alias("word")
     ).distinct()
-    avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
-    scored = (
-        tf.join(F.broadcast(q_terms), "word")
-        .join(F.broadcast(idf_stats.select("word", "idf")), "word")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(avgdl_row))
-        .select(
-            id_col,
-            "doc_id",
-            bm25_score_expr(
-                F.col("tf"), F.col("idf"), F.col("dl"), F.col("avgdl"), k1, b
-            ).alias("contrib"),
-        )
-        .groupBy(id_col, "doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= F.lit(k))
-    )
+    matches = tf.join(F.broadcast(q_terms), "word")
+    return _corpus_topk(matches, idf_stats, dlen, k, k1, b, by=(id_col,))
 
 
 def bm25_rank_prf(
@@ -395,25 +413,10 @@ def bm25_rank_prf(
     ).select("word", F.lit(float(orig_weight)).alias("qwgt"))
     qrel = original.unionByName(expansion)
 
-    scored = (
-        tf.join(F.broadcast(qrel), "word")
-        .join(F.broadcast(idf_sel), "word")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(avgdl_row))
-        .select(
-            "doc_id",
-            (
-                F.col("qwgt")
-                * bm25_score_expr(
-                    F.col("tf"), F.col("idf"), F.col("dl"), F.col("avgdl"),
-                    k1, b,
-                )
-            ).alias("contrib"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
+    matches = tf.join(F.broadcast(qrel), "word")
+    return _corpus_topk(
+        matches, idf_sel, dlen, k, k1, b, avgdl_row, weight=F.col("qwgt")
     )
-    return rank_topk(scored, k)
 
 
 def bm25_facets(
@@ -436,21 +439,8 @@ def bm25_facets(
     at 100 TB pass a pruned projection, the join is doc_id-keyed on the
     match set.  One extra groupBy on the facet closes it out.
     """
-    avgdl_row = dlen.agg(F.avg("dl").alias("avgdl"))
     matches = tf.where(F.col("word").isin(*query_terms))
-    scored = (
-        matches.join(F.broadcast(idf_stats.select("word", "idf")), "word")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(avgdl_row))
-        .select(
-            "doc_id",
-            bm25_score_expr(
-                F.col("tf"), F.col("idf"), F.col("dl"), F.col("avgdl"), k1, b
-            ).alias("contrib"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
+    scored = _corpus_topk(matches, idf_stats, dlen, None, k1, b)
     meta = documents_meta.select(
         "doc_id", F.col(facet_col).alias("facet")
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_bm25_spark.operators.bm25 import rank_topk
 from flink_bm25_spark.operators.dedup import minhash_dedup_pairs
 from flink_bm25_spark.operators.graph import dedup_clusters
 from flink_bm25_spark.operators.text_analysis import quality_scores
@@ -88,19 +89,17 @@ def elect_cluster_representatives(
     partition size is the cluster population — bounded and small, never
     the corpus.  Nothing data-dependent is broadcast.
     """
-    from pyspark.sql import Window  # noqa: PLC0415
-
     if pairs is None:
         pairs = minhash_dedup_pairs(documents, jaccard_threshold)
     members = dedup_clusters(pairs).select("doc_id", "canonical_id")
     scored = quality_scores(documents).select("doc_id", "keep_score")
-    w = Window.partitionBy("canonical_id").orderBy(
-        F.desc("keep_score"), F.asc("doc_id")
-    )
     return (
-        members.join(scored, "doc_id")
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        rank_topk(
+            members.join(scored, "doc_id"),
+            1,
+            "keep_score",
+            group_cols=("canonical_id",),
+        )
         .select(
             "canonical_id",
             F.col("doc_id").alias("best_doc"),

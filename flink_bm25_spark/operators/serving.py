@@ -61,12 +61,12 @@ import threading
 from contextlib import contextmanager
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_bm25_spark.config import BM25_B, BM25_K1
 from flink_bm25_spark.functions.hashing import h60
-from flink_bm25_spark.operators.bm25 import bm25_score_expr, rank_topk
+from flink_bm25_spark.operators.bm25 import bm25_topk
 from flink_bm25_spark.operators.df_idf import document_frequencies
 from flink_bm25_spark.operators.pipeline import build_corpus_stats
 from flink_bm25_spark.operators.sinks import overwrite_mode
@@ -110,10 +110,6 @@ def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
         fs.mkdirs(parent)
     if not fs.rename(jsrc, jdst):
         raise IOError(f"rename failed: {src} -> {dst}")
-
-
-def _empty_topk(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "doc_id long, score double, rk int")
 
 
 # Marker file recording which streaming checkpoint owns an index's
@@ -744,8 +740,9 @@ def bm25_topk_from_partials(
     b: float = BM25_B,
 ) -> DataFrame:
     """Top-k ``(doc_id, score, rk)`` for a bag-of-words query against
-    IN-MEMORY index relations — the relational form of the scoring core
-    (`_score_topk`) the on-disk paths share.
+    IN-MEMORY index relations — the relational form of the served
+    scoring path, through the same core (`bm25.bm25_topk`) as the
+    on-disk paths and the batch rankers.
 
     Plan shape: postings pruned to the query's terms FIRST; corpus
     scalars folded from the batches-row stats relation and broadcast as
@@ -754,10 +751,9 @@ def bm25_topk_from_partials(
     concatenated corpus because both folds are exact sums.
 
     An EMPTY term tuple (a stopword-only query after tokenization)
-    short-circuits to an empty result instead of reaching a zero-arg
-    ``isin`` (which Spark rejects with an opaque analysis error)."""
-    if not query_terms:
-        return _empty_topk(index.postings.sparkSession)
+    needs no short-circuit: the zero-arg ``word IN ()`` filter is
+    constant false, the optimizer empties the whole plan, and the
+    result is 0 rows with no read."""
     word = F.col("word").isin(*query_terms)
     scalars = index.stats_parts.agg(
         F.sum("n_docs").cast("double").alias("n_docs"),
@@ -766,7 +762,7 @@ def bm25_topk_from_partials(
             / F.sum("n_dlen_docs").cast("double")
         ).alias("avgdl"),
     )
-    return _score_topk(
+    return _served_topk(
         index.postings.where(word).crossJoin(F.broadcast(scalars)),
         _fold_df(index.df_parts.where(word)),
         F.col("n_docs"),
@@ -780,7 +776,7 @@ def _fold_df(df_parts: DataFrame) -> DataFrame:
     return df_parts.groupBy("word").agg(F.sum("df").cast("long").alias("df"))
 
 
-def _score_topk(
+def _served_topk(
     matches: DataFrame,
     df: DataFrame,
     n_docs,
@@ -788,37 +784,16 @@ def _score_topk(
     k: int,
     k1: float,
     b: float,
-    by: str | None = None,
+    **kw,
 ) -> DataFrame:
-    """The BM25 scoring core of every index form: ``matches`` (postings
-    pruned to the query terms, plus ``by`` = ``query_id`` for a batch)
-    join the broadcast per-word ``df`` fold; contributions sum per doc
-    (per ``(by, doc)``), round to 6 places and cut to the top ``k``.
-    ``n_docs`` / ``avgdl`` are Columns: literals on the served paths,
-    the broadcast scalar row's columns on the in-memory partials path."""
-    keys = [by, "doc_id"] if by else ["doc_id"]
-    scored = (
-        matches.join(F.broadcast(df), "word")
-        .select(
-            *keys,
-            bm25_score_expr(
-                F.col("tf"),
-                F.log(n_docs / (F.col("df") + F.lit(1))),
-                F.col("dl"),
-                avgdl,
-                k1,
-                b,
-            ).alias("contrib"),
-        )
-        .groupBy(*keys)
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    if by is None:
-        return rank_topk(scored, k)
-    w = Window.partitionBy(by).orderBy(F.desc("score"), F.asc("doc_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("int")).where(
-        F.col("rk") <= F.lit(k)
-    )
+    """The served join in front of the scoring core (`bm25.bm25_topk`):
+    postings ``matches`` ⋈ the broadcast per-word ``df`` fold, idf =
+    ``ln(n_docs/(df+1))``.  ``n_docs`` / ``avgdl`` are Columns:
+    literals on the on-disk paths, the broadcast scalar row's columns
+    on the in-memory partials path."""
+    idf = F.log(n_docs / (F.col("df") + F.lit(1)))
+    joined = matches.join(F.broadcast(df), "word")
+    return bm25_topk(joined, idf, avgdl, k, k1, b, **kw)
 
 
 # Above this many distinct query terms, batch serving stops pushing a
@@ -1550,9 +1525,7 @@ def _topk_from_state(
 ) -> DataFrame:
     """One query's top-k from a resolved read state — the scoring path
     of both the cold (`bm25_topk_from_index`) and the warm
-    (`Bm25Index.search`) serve."""
-    if not terms:
-        return _empty_topk(rs.lay.spark)
+    (`Bm25Index.search`) serve; both reject an empty term tuple first."""
     buckets = rs.buckets
     if buckets is None:
         salts = rs.stats.salts
@@ -1560,7 +1533,7 @@ def _topk_from_state(
             hot = _hot_fold(rs.lay.spark, rs.lay, terms)
             salts = _fold_stats(rs.lay.spark, rs.lay, hot).salts
         buckets = _open_buckets(terms, rs.stats.n_buckets, salts)
-    return _score_topk(
+    return _served_topk(
         _state_postings(rs, terms, buckets),
         rs.df.where(F.col("word").isin(*terms)),
         F.lit(rs.stats.n_docs),
@@ -1584,13 +1557,13 @@ def bm25_topk_from_index(
     PARTITION pruning (only ~|terms|/n_buckets of the files open —
     asserted by ``test_bm25_index_query_prunes_partitions``), and the
     ``word IN (...)`` predicate pushes into parquet row-group skipping
-    within them.  Scoring is the shared core (`_score_topk`) — identical
+    within them.  Scoring is the shared core (`bm25.bm25_topk`) — identical
     scores to ``bm25_rank`` over the same corpus (pinned by test).
     ``version=`` serves from a pinned snapshot tree instead of the
     current one (`bm25_index_pin` / `bm25_index_snapshot`)."""
     terms = tuple(query_terms)
     if not terms:
-        return _empty_topk(spark)
+        return spark.createDataFrame([], "doc_id long, score double, rk int")
     # resolved ONCE: all-old or all-new sections
     lay = _Layout(spark, path, version=version)
     return _topk_from_state(_read_state(spark, lay, terms=terms), terms, k, k1, b)
@@ -2082,7 +2055,7 @@ def bm25_batch_topk_from_index(
     q_terms = queries.select(
         "query_id", F.explode("terms").alias("word")
     ).distinct()
-    return _score_topk(
+    return _served_topk(
         _state_postings(rs, terms, rs.buckets).join(
             F.broadcast(q_terms), "word"
         ),
@@ -2090,7 +2063,7 @@ def bm25_batch_topk_from_index(
         F.lit(rs.stats.n_docs),
         F.lit(rs.stats.avgdl),
         k, k1, b,
-        by="query_id",
+        by=("query_id",),
     )
 
 
@@ -2306,26 +2279,17 @@ def more_like_this_from_index(
     weighted = src.join(rs.df, "word").select(
         "word", "df", F.col("tf_src").cast("double").alias("tf_src")
     )
-    dots = (
-        postings.join(F.broadcast(weighted), "word")
-        .select(
-            "doc_id",
-            # weight = source tf (how much the source emphasizes the
-            # term); the idf lives once, inside the BM25 contribution
-            (
-                F.col("tf_src")
-                * bm25_score_expr(
-                    F.col("tf"),
-                    F.log(F.lit(rs.stats.n_docs) / (F.col("df") + F.lit(1))),
-                    F.col("dl"),
-                    F.lit(rs.stats.avgdl),
-                )
-            ).alias("p"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("p"), 6).alias("sim"))
+    # weight = source tf (how much the source emphasizes the term); the
+    # idf lives once, inside the BM25 contribution
+    return _served_topk(
+        postings,
+        weighted,
+        F.lit(rs.stats.n_docs),
+        F.lit(rs.stats.avgdl),
+        k, BM25_K1, BM25_B,
+        weight=F.col("tf_src"),
+        score="sim",
     )
-    return rank_topk(dots, k, score="sim")
 
 
 def doc_vectors_from_index(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from flink_bm25_spark.config import HASH_PRIME
 from flink_bm25_spark.functions.vectors import cosine_similarity
+from flink_bm25_spark.operators.bm25 import rank_topk
 from flink_bm25_spark.operators.serving import (
     BATCH_COL,
     DELETE_ALL,
@@ -528,7 +529,6 @@ def knn_graph(
         cosine_from_parts,
         l2_norm,
     )
-    from pyspark.sql import Window  # noqa: PLC0415
 
     with_n = embeddings.select("vec_id", "embedding").withColumn(
         "nrm", l2_norm(F.col("embedding"))
@@ -546,13 +546,7 @@ def knn_graph(
             6,
         ).alias("cos"),
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= k)
-    )
+    return rank_topk(scored, k, "cos", "neighbor_id", ("anchor_id",))
 
 
 def mutual_knn_clusters(
@@ -1239,6 +1233,15 @@ def feature_hash_embeddings(
 # tombstones (centroids live unversioned at the root).
 IVF_SECTIONS = ("cells", "deleted")
 
+# The centroid table `ivf_save` writes, read back with this declared
+# schema (an inferred read costs one more Spark job per probe).
+IVF_CENTROID_SCHEMA = "cell int, centroid array<double>"
+
+
+def _read_centroids(spark, path: str) -> DataFrame:
+    """The centroid table at ``path`` (the root's or a pin's stash)."""
+    return spark.read.schema(IVF_CENTROID_SCHEMA).parquet(path)
+
 
 @_locked_writer(lambda model, assigned, path, *a, **k: (assigned.sparkSession, path))
 def ivf_save(model, assigned: DataFrame, path: str) -> None:
@@ -1279,7 +1282,7 @@ def ivf_save(model, assigned: DataFrame, path: str) -> None:
     cents = model if isinstance(model, list) else model.clusterCenters()
     centroids = spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
+        IVF_CENTROID_SCHEMA,
     )
     centroids.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
@@ -1292,7 +1295,7 @@ def ivf_assign_to_existing(spark, path: str, new_vectors: DataFrame) -> DataFram
     shuffle, no join)."""
     from flink_bm25_spark.operators.kmeans import _squared_dist  # noqa: PLC0415
 
-    cents = spark.read.parquet(os.path.join(path, "centroids")).collect()
+    cents = _read_centroids(spark, os.path.join(path, "centroids")).collect()
     vec = F.col("embedding").cast("array<double>")
     candidates = F.array(
         *[
@@ -1336,7 +1339,7 @@ def _ivf_centroid_rows(spark, lay: _Layout, version: int | None) -> list:
         stash = _ivf_pin_centroids_stash(lay.path, lay.version)
         if _fs_exists(spark, stash):
             cent_path = stash
-    return spark.read.parquet(cent_path).collect()
+    return _read_centroids(spark, cent_path).collect()
 
 
 def _ivf_next_manual_id(spark, path: str) -> int:
@@ -1523,7 +1526,7 @@ def ivf_pin(spark, path: str, version: int | None = None) -> int:
         # one — the stash's whole meaning is "the codebook that
         # assigned this tree's cells", fixed at first pin
         if not _fs_exists(spark, stash):
-            spark.read.parquet(os.path.join(path, "centroids")).coalesce(
+            _read_centroids(spark, os.path.join(path, "centroids")).coalesce(
                 1
             ).write.mode("overwrite").parquet(stash)
     return v
@@ -1616,7 +1619,7 @@ def ivf_retrain(spark, path: str, n_cells: int | None = None, seed: int = 42) ->
     lay = _Layout(spark, path)
     if n_cells is None:
         n_cells = int(
-            spark.read.parquet(os.path.join(path, "centroids")).count()
+            _read_centroids(spark, os.path.join(path, "centroids")).count()
         )
     visible = (
         _ivf_visible(spark, lay)
@@ -1692,8 +1695,6 @@ def cosine_batch_topk(
     ``exclude_same_id=True`` drops pairs where ``query_id == vec_id``
     (self-matches when queries are drawn from the corpus itself).
     """
-    from pyspark.sql import Window  # noqa: PLC0415
-
     from flink_bm25_spark.functions.vectors import (  # noqa: PLC0415
         cosine_from_parts,
         l2_norm,
@@ -1718,9 +1719,4 @@ def cosine_batch_topk(
             6,
         ).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos"), F.asc(id_col)
-    )
-    return scored.withColumn(
-        "rk", F.row_number().over(w).cast("int")
-    ).where(F.col("rk") <= F.lit(k))
+    return rank_topk(scored, k, "cos", id_col, (query_id_col,))

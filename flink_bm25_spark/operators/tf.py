@@ -14,10 +14,11 @@ jobs where the reference does O(corpus).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_bm25_spark.config import TOP_K_TERMS
+from flink_bm25_spark.operators.bm25 import rank_topk
 
 
 def term_frequencies(tokens: DataFrame) -> DataFrame:
@@ -48,11 +49,7 @@ def topk_terms(tf: DataFrame, k: int = TOP_K_TERMS) -> DataFrame:
     (``BatchBM25PreMain.java:219-227``, SURVEY.md §5).  Spark ≥3.5 plans
     this with WindowGroupLimit, pushing the k-cut before the full sort.
     """
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tf"), F.asc("word"))
-    return (
-        tf.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= k)
-    )
+    return rank_topk(tf, k, "tf", "word", ("doc_id",))
 
 
 def inverted_index(tf: DataFrame) -> DataFrame:

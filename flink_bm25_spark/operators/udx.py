@@ -27,6 +27,7 @@ hatches, not alternative semantics.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -81,13 +82,11 @@ def merge_counts_grouped_agg(counts: DataFrame) -> DataFrame:
     merged.  Equal to the built-in ``sum`` by construction — the slot
     matters when the merge is NOT a built-in (custom monoid).
     """
-    from pyspark.sql.functions import PandasUDFType, pandas_udf  # noqa: PLC0415
-
-    # functionType passed explicitly: this module uses
-    # `from __future__ import annotations`, which stringifies hints and
-    # defeats pyspark's signature-based UDF-type inference.
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def merge(v):
+    # Series -> scalar hints make this a grouped agg; pyspark resolves
+    # the stringified hints against this module's globals, hence the
+    # module-level pandas import
+    @F.pandas_udf("long")
+    def merge(v: pd.Series) -> int:
         # associative, commutative — safe under partial aggregation
         return int(v.sum())
 

@@ -117,3 +117,45 @@ def test_no_grouped_twins():
     assert set(twins) <= GROUPED_TWINS_ALLOWED, sorted(
         set(twins) - GROUPED_TWINS_ALLOWED
     )
+
+
+def _calls(tree, name: str):
+    """Every call of ``name`` (bare or as an attribute) in ``tree``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            fn = node.func
+            called = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                fn, "id", None
+            )
+            if called == name:
+                yield node
+
+
+def test_one_bm25_core():
+    """The BM25 contribution is written once (``bm25_score_expr`` has
+    one call site, the scoring core), and the per-key ``row_number() <=
+    k`` cut lives only in ``bm25.rank_topk``."""
+    score_sites, rk_sites = [], []
+    for rel, src in _pkg_sources():
+        tree = ast.parse(src)
+        score_sites += [
+            f"{rel}:{c.lineno}" for c in _calls(tree, "bm25_score_expr")
+        ]
+        owners = {
+            id(call): fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for call in ast.walk(fn)
+        }
+        for c in _calls(tree, "withColumn"):
+            if (
+                len(c.args) == 2
+                and isinstance(c.args[0], ast.Constant)
+                and c.args[0].value == "rk"
+                and any(_calls(c.args[1], "row_number"))
+            ):
+                where = f"{rel}::{owners.get(id(c))}"
+                if where != os.path.join("operators", "bm25.py") + "::rank_topk":
+                    rk_sites.append(f"{where}:{c.lineno}")
+    assert len(score_sites) == 1, score_sites
+    assert not rk_sites, rk_sites

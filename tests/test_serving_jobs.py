@@ -10,11 +10,15 @@ import pytest
 
 from flink_bm25_spark.api import Bm25Index
 from flink_bm25_spark.operators.serving import bm25_index_save
+from flink_bm25_spark.operators.similarity import ivf_save, ivf_topk_from_disk
 
 # Measured on this fixture before section schemas were pinned and the
 # read state was resolved once: add ran 21 jobs, delete 14.
 ADD_JOBS_BEFORE = 21
 DELETE_JOBS_BEFORE = 14
+# One IVF probe below, measured while the centroid table was still read
+# by schema inference: 4 jobs, two of them "parquet at ..." inferences.
+IVF_PROBE_JOBS_BEFORE = 4
 
 QUERY = "w1 w2 w250"
 
@@ -87,3 +91,22 @@ def test_write_budgets(spark, index):
     assert len(add) <= ADD_JOBS_BEFORE - 4, add
     delete = _jobs(spark, lambda: index.delete([1, 2, 3]))
     assert len(delete) <= DELETE_JOBS_BEFORE - 4, delete
+
+
+def test_ivf_probe_budget(spark, tmp_path):
+    """One ``ivf_topk_from_disk`` probe on a 60-vector, 2-cell index: the
+    centroid table is read with its declared schema, so
+    the only inference job left is the ``cells/`` read (its schema
+    varies with the embedding type and ``post_train``)."""
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5), 1.0], i % 2) for i in range(60)],
+        "vec_id long, embedding array<double>, cell int",
+    )
+    path = str(tmp_path / "ivf")
+    ivf_save([[0.0, 0.0, 1.0], [5.0, 4.0, 1.0]], vecs, path)
+    probe = lambda: ivf_topk_from_disk(  # noqa: E731
+        spark, path, [1.0, 1.0, 1.0], k=5, nprobe=1
+    ).collect()
+    names = _jobs(spark, probe)
+    assert len(names) <= IVF_PROBE_JOBS_BEFORE - 1, names
+    assert len(_inference(names)) <= 1, names

@@ -5,7 +5,10 @@ return exactly what ``bm25_rank`` returns over the shadow corpus (same
 top-k, scores at 6 d.p.).  The three served paths share one read-state
 resolution and one scoring core; this pins that they still agree with
 the batch ranking through uncompacted partials, tombstones, re-salting
-folds and snapshot-free version flips."""
+folds and snapshot-free version flips.
+
+The batch entry points share that scoring core too: a single-query rank,
+a query relation and the in-memory index partials agree row for row."""
 
 from __future__ import annotations
 
@@ -16,9 +19,16 @@ from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 from flink_bm25_spark.api import Bm25Index
-from flink_bm25_spark.operators.bm25 import bm25_rank
+from pyspark.sql import functions as F
+
+from flink_bm25_spark.operators.bm25 import bm25_batch_rank, bm25_rank
 from flink_bm25_spark.operators.pipeline import build_corpus_stats
-from flink_bm25_spark.operators.serving import bm25_index_save
+from flink_bm25_spark.operators.serving import (
+    bm25_index_batch,
+    bm25_index_save,
+    bm25_topk_from_partials,
+    merge_index_batches,
+)
 
 VOCAB = (
     "alpha", "beta", "gamma", "delta", "spark", "stream", "join", "hash",
@@ -138,3 +148,52 @@ def test_warm_cold_and_batch_serve_equal_bm25_rank(spark, data):
             _assert_paths_agree(spark, path, shadow, qs, (step, op))
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+# "common" is in every document (idf = ln(N/(N+1)) < 0), docs 6-8 hold a
+# single token; the queries are the empty query, a duplicated term, an
+# absent term alone and beside the negative-idf term
+ENTRY_DOCS = {
+    1: "common spark stream join",
+    2: "common spark spark hash",
+    3: "common query index bucket salt",
+    4: "common stream stream stream join join",
+    5: "common alpha beta gamma delta spark",
+    6: "common",
+    7: "common",
+    8: "common",
+    9: "common hash hash query",
+    10: "common beta beta beta beta beta beta beta beta",
+}
+ENTRY_QUERIES = ((), ("spark", "spark", "join"), ("absent",), ("absent", "common"))
+
+
+def _triples(df):
+    return [(r["doc_id"], r["score"], r["rk"]) for r in df.collect()]
+
+
+def test_bm25_entry_points_agree(spark):
+    """``bm25_rank`` equals that query's rows of ``bm25_batch_rank`` and
+    ``bm25_topk_from_partials`` over a two-batch split of the corpus —
+    ``(doc_id, score, rk)`` exactly."""
+    docs = _frame(spark, ENTRY_DOCS)
+    s = build_corpus_stats(docs, cache_tf=True)
+    qdf = spark.createDataFrame(
+        list(enumerate(map(list, ENTRY_QUERIES))),
+        "query_id int, terms array<string>",
+    )
+    batch: dict[int, list] = {i: [] for i in range(len(ENTRY_QUERIES))}
+    for r in bm25_batch_rank(s.tf, s.idf_stats, s.dlen, qdf, k=4).collect():
+        batch[r["query_id"]].append((r["doc_id"], r["score"], r["rk"]))
+    partials = merge_index_batches(
+        [
+            bm25_index_batch(docs.where(F.col("doc_id") <= 5), n_buckets=4),
+            bm25_index_batch(docs.where(F.col("doc_id") > 5), n_buckets=4),
+        ]
+    )
+    for qid, terms in enumerate(ENTRY_QUERIES):
+        want = _triples(bm25_rank(s.tf, s.idf_stats, s.dlen, terms, k=4))
+        assert bool(want) == (terms not in ((), ("absent",))), terms
+        assert sorted(batch[qid], key=lambda t: t[2]) == want, terms
+        assert _triples(bm25_topk_from_partials(partials, terms, k=4)) == want, terms
+    s.tf.unpersist()
