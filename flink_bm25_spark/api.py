@@ -253,9 +253,9 @@ class CorpusCurator(_PersistedState):
         good2 = curator.screen_batch(day2_docs)       # dedups vs day1 too
         curator.save("/state"); CorpusCurator.load(spark, "/state")
 
-    Per batch, O(batch + candidates) work (``dedup.py::
-    minhash_dedup_pairs_incremental``): the archive is only ever touched
-    through its signature store.  Dedup policy is greedy-stream,
+    Per batch, O(batch + candidates) work (``dedup.minhash_dedup_pairs``
+    with ``store=``): the archive is only ever touched through its
+    signature store.  Dedup policy is greedy-stream,
     FIRST-ARRIVAL wins: a new document is dropped when it
     near-duplicates ANYTHING already ingested (an emitted survivor can
     never be retracted, so arrival order — not id order — decides);
@@ -334,7 +334,8 @@ class CorpusCurator(_PersistedState):
         removed lines per document."""
         from flink_bm25_spark.operators.decontam import overlap_counts  # noqa: PLC0415
         from flink_bm25_spark.operators.dedup import (  # noqa: PLC0415
-            minhash_dedup_pairs_incremental,
+            first_arrival_losers,
+            minhash_dedup_pairs,
             minhash_signatures_wide,
             shingles,
         )
@@ -349,31 +350,16 @@ class CorpusCurator(_PersistedState):
             new_documents = self.line_screen.screen_batch(
                 new_documents, carry=others
             ).withColumnRenamed("cleaned_text", "text")
-        if self.sigs_wide is None:
-            empty = new_documents.where(F.lit(False))
-            pairs = minhash_dedup_pairs_incremental(
-                empty, new_documents, threshold=self.jaccard_threshold
-            )
-        else:
-            # Candidate generation probes the signature store (archive
-            # never re-signed); exact-Jaccard verify re-shingles only the
-            # archive docs that land in a candidate pair.  A curator can
-            # legitimately hold signatures without the archive text (e.g.
-            # constructed from a bare signature store): verify then runs
-            # against an empty archive rather than dereferencing None.
-            archive = (
-                self._docs
-                if self._docs is not None
-                else new_documents.where(F.lit(False))
-            )
-            pairs = minhash_dedup_pairs_incremental(
-                archive,
-                new_documents,
-                old_sigs_wide=self.sigs_wide,
-                threshold=self.jaccard_threshold,
-            )
-        from flink_bm25_spark.operators.dedup import first_arrival_losers  # noqa: PLC0415
-
+        # Candidate generation probes the signature store (archive never
+        # re-signed); exact-Jaccard verify re-shingles only the archive
+        # docs that land in a candidate pair.  The first batch has no
+        # store and is the plain batch dedup.
+        pairs = minhash_dedup_pairs(
+            new_documents,
+            self.jaccard_threshold,
+            store=self.sigs_wide,
+            archive=self._docs,
+        )
         losers = first_arrival_losers(pairs, new_documents.select("doc_id"))
         qual = quality_scores(new_documents).select("doc_id", "keep_score")
         contaminated = (
@@ -446,23 +432,19 @@ class EmbeddingDeduper(_PersistedState):
         duplicates must still match it)."""
         from flink_bm25_spark.operators.dedup import first_arrival_losers  # noqa: PLC0415
         from flink_bm25_spark.operators.similarity import (  # noqa: PLC0415
-            embedding_near_dup_pairs_incremental,
+            embedding_band_store,
+            embedding_near_dup_pairs_lsh,
         )
 
-        pairs, new_keys = embedding_near_dup_pairs_incremental(
-            self.keys_wide,
-            new_vectors,
-            threshold=self.threshold,
-            bands=self.bands,
-            bits_per_band=self.bits_per_band,
-            dim=self.dim,
-            nnz=self.nnz,
+        lsh = (self.bands, self.bits_per_band, self.dim, self.nnz)
+        pairs = embedding_near_dup_pairs_lsh(
+            new_vectors, self.threshold, *lsh, store=self.keys_wide
         )
         losers = first_arrival_losers(
             pairs.select("d1", "d2"), new_vectors.select("vec_id")
         )
         survivors = new_vectors.join(losers, "vec_id", "left_anti")
-        self._grow("keys_wide", new_keys)
+        self._grow("keys_wide", embedding_band_store(new_vectors, *lsh))
         return survivors
 
 
@@ -471,7 +453,7 @@ class WinnowScreen(_PersistedState):
     :class:`EmbeddingDeduper`: state is the persisted ``(doc_id, fp)``
     fingerprint relation, so each batch is screened against everything
     already ingested in O(batch + candidates) and the archive text is
-    never re-read (``dedup.winnowing_pairs_incremental``).
+    never re-read (``dedup.winnowing_dedup_pairs`` with ``store=``).
 
         ws = WinnowScreen(min_shared=2)
         keep1 = ws.screen_batch(day1_docs)      # survivors, store grows
@@ -506,21 +488,26 @@ class WinnowScreen(_PersistedState):
     def screen_batch(self, new_documents: DataFrame) -> DataFrame:
         from flink_bm25_spark.operators.dedup import (  # noqa: PLC0415
             first_arrival_losers,
-            winnowing_pairs_incremental,
+            winnowing_dedup_pairs,
+            winnowing_fingerprints,
         )
 
-        store = self.fps
-        if store is None:
-            store = new_documents.sparkSession.createDataFrame(
-                [], "doc_id long, fp long"
-            )
-        pairs, new_fps = winnowing_pairs_incremental(
-            store,
+        # The batch's fingerprints are computed once: the pair plan below
+        # reads this same relation from the cache, and the store grows
+        # by it.
+        new_fps = (
+            winnowing_fingerprints(new_documents, k=self.k, w=self.w)
+            .select("doc_id", "fp")
+            .distinct()
+            .cache()
+        )
+        pairs = winnowing_dedup_pairs(
             new_documents,
-            min_shared=self.min_shared,
-            k=self.k,
-            w=self.w,
-            max_fp_doc_freq=self.max_fp_doc_freq,
+            self.min_shared,
+            self.k,
+            self.w,
+            self.max_fp_doc_freq,
+            store=self.fps,
         )
         losers = first_arrival_losers(
             pairs.select("d1", "d2"), new_documents.select("doc_id")

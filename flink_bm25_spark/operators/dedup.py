@@ -692,30 +692,75 @@ def band_keys(
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
 
 
-def lsh_candidate_pairs(
-    sigs_wide: DataFrame,
-    bands: int = MINHASH_BANDS,
-    rows_per_band: int = MINHASH_ROWS_PER_BAND,
+def _key_pairs(
+    new: DataFrame,
+    store: DataFrame | None,
+    on: tuple[str, ...],
+    id_col: str = "doc_id",
+    carry: tuple[tuple[str, str, str], ...] = (),
 ) -> DataFrame:
-    """LSH banding over the wide signature: docs agreeing on ALL rows of
-    any band become ``(d1, d2)`` candidates.
+    """``(d1, d2, *carry)`` — one row per key value (``on``) that two
+    documents share: every new–new pair with ``d1 < d2`` and, with a
+    ``store``, every new–old pair.  Old–old pairs are never formed: they
+    were reported when their batch arrived (ids must be disjoint across
+    batches, the caller contract of the reference's upsert sink,
+    ``MongoTFSink.java:43-58``).
 
-    The self-join is an equi-join on (band, key), i.e. only same-bucket
-    docs ever meet.
+    ``carry`` lists ``(src_col, a_alias, b_alias)`` payload columns
+    replicated per side.  New–old pairs are oriented (smaller id, larger
+    id) so pair identity matches a rebuild over old ∪ new whatever the
+    arrival order; each payload swaps with its id.  With no store this
+    is the plain keyed self-join: a batch pays nothing for the store
+    path (no Union, no extra Exchange).
     """
-    banded = band_keys(sigs_wide, bands, rows_per_band)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
+    def leg(df: DataFrame, d: str, side: int) -> DataFrame:
+        payload = (F.col(c[0]).alias(c[side]) for c in carry)
+        return df.select(F.col(id_col).alias(d), *payload, *on)
+
+    a = leg(new, "d1", 1)
+    out = ["d1", "d2", *(x for _, xa, xb in carry for x in (xa, xb))]
+    pairs = (
+        a.join(leg(new, "d2", 2), list(on))
+        .where(F.col("d1") < F.col("d2"))
+        .select(*out)
     )
+    if store is None:
+        return pairs
+    swap = F.col("d1") > F.col("d2")
+    swapped = (
+        F.when(swap, F.col(y)).otherwise(F.col(x)).alias(x)
+        for _, xa, xb in carry
+        for x, y in ((xa, xb), (xb, xa))
+    )
+    new_old = (
+        a.join(leg(store, "d2", 2), list(on))
+        .where(F.col("d1") != F.col("d2"))
+        .select(
+            F.least("d1", "d2").alias("d1"),
+            F.greatest("d1", "d2").alias("d2"),
+            *swapped,
+        )
+    )
+    return pairs.unionByName(new_old)
+
+
+def lsh_candidate_pairs(
+    new: DataFrame,
+    store: DataFrame | None = None,
+    id_col: str = "doc_id",
+    carry: tuple[tuple[str, str, str], ...] = (),
+) -> DataFrame:
+    """LSH banding: ``(d1, d2, *carry)`` candidates for every two rows of
+    band-key relations (``(id_col, band, bkey)``: :func:`band_keys`,
+    ``similarity.embedding_band_store``) that agree on ALL rows of any
+    band — the new–new pairs of ``new`` plus, against a persisted
+    ``store`` of band keys, the new–old ones (see :func:`_key_pairs`).
+
+    The pair join is an equi-join on (band, bkey), i.e. only same-bucket
+    docs ever meet; one ``distinct`` folds the per-band repeats (the
+    carried payload is a function of the id, so it cannot split a pair).
+    """
+    return _key_pairs(new, store, ("band", "bkey"), id_col, carry).distinct()
 
 
 def minhash_dedup_pairs(
@@ -725,6 +770,8 @@ def minhash_dedup_pairs(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
     shingles_rel: DataFrame | None = None,
+    store: DataFrame | None = None,
+    archive: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidates verified by exact Jaccard.
 
@@ -737,6 +784,20 @@ def minhash_dedup_pairs(
     relation of ``documents`` at width ``n`` (r10) so a composite that
     also probes the same shingles (curation_report's decontamination
     leg) shares ONE shingle pass — the caller owns the caching.
+
+    Batch-incremental screening (same O(batch) posture as
+    ``pipeline.merge_corpus_stats``): ``store`` is the persisted
+    wide-signature relation (:func:`minhash_signatures_wide`) of every
+    document already ingested, and ``archive`` those documents' text.
+    The result then also holds the new–old pairs; old–old pairs are not
+    re-emitted.  Only ``documents`` is shingled and signed in full; the
+    archive is never re-signed, and its docs are re-shingled **only if
+    LSH puts them in a candidate pair** (a semi-join prunes the archive
+    before tokenization), so verify cost is O(candidates), not
+    O(archive).  Without ``archive`` (a bare
+    signature store), new–old candidates find no old shingles and fail
+    verification.  A batch is the first delta against an empty store:
+    ``store=None`` is the plain batch plan.
     """
     # The shingle relation feeds both the signature and the verify stages,
     # and the candidate set is consumed twice inside the verify (doc-level
@@ -746,97 +807,31 @@ def minhash_dedup_pairs(
     # scale this is the standard stage checkpoint between candidate
     # generation and verification.  Caches are left to LRU eviction; an
     # eager unpersist would evict before the caller's action runs.
+    rows_per_band = num_hashes // bands
     sh = (
         shingles_rel
         if shingles_rel is not None
         else shingles(documents, n).cache()
     )
-    wide = minhash_signatures_wide(sh, num_hashes)
-    cands = lsh_candidate_pairs(wide, bands, num_hashes // bands).cache()
+    new_keys = band_keys(
+        minhash_signatures_wide(sh, num_hashes), bands, rows_per_band
+    )
+    old_keys = None if store is None else band_keys(store, bands, rows_per_band)
+    cands = lsh_candidate_pairs(new_keys, old_keys).cache()
     cands.count()
+    if archive is not None:
+        # No broadcast hint: the candidate set is duplicate-fraction-sized
+        # (data-dependent); AQE picks the join strategy at runtime.
+        ids = cands.select(F.explode(F.array("d1", "d2")).alias("doc_id"))
+        sh = sh.unionByName(
+            shingles(archive.join(ids, "doc_id", "left_semi"), n)
+        )
     # The verified pair set is duplicate-fraction-sized (thin, tiny
     # relative to the corpus) and is the input every downstream consumer
     # (cluster election, loser flags, stats) re-derives: cache it so two
     # queries over the same corpus slice (e.g. the curation pipeline and
     # its drop-accounting report) pay the verify join once per session.
     return jaccard_pairs(sh, threshold, pairs=cands).cache()
-
-
-def minhash_dedup_pairs_incremental(
-    old_documents: DataFrame,
-    new_documents: DataFrame,
-    old_sigs_wide: DataFrame | None = None,
-    threshold: float = 0.8,
-    n: int = SHINGLE_SIZE,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-) -> DataFrame:
-    """Near-duplicate pairs TOUCHING a new batch: new-new plus new-old,
-    without re-signing or re-shingling the archive.
-
-    The batch-incremental twin of :func:`minhash_dedup_pairs` (same
-    O(batch) posture as ``pipeline.merge_corpus_stats``): only the new
-    batch is shingled and signed in full; the archive participates
-    through its persisted wide-signature store ``old_sigs_wide`` (pass
-    the relation saved by a previous run — computed here only as a
-    bootstrap fallback), and archived documents are re-shingled **only
-    if LSH puts them in a candidate pair** (a semi-join prunes the old
-    corpus scan to candidate ids before tokenization, so verify cost is
-    O(candidates), not O(archive)).
-
-    Old-old pairs are NOT re-emitted — they were reported when their
-    batch arrived; doc_ids must be disjoint across batches (same caller
-    contract as the reference's upsert sink, ``MongoTFSink.java:43-58``).
-    """
-    rows_per_band = num_hashes // bands
-    sh_new = shingles(new_documents, n).cache()
-    bands_new = band_keys(
-        minhash_signatures_wide(sh_new, num_hashes), bands, rows_per_band
-    ).cache()
-    if old_sigs_wide is None:
-        old_sigs_wide = minhash_signatures_wide(
-            shingles(old_documents, n), num_hashes
-        )
-    bands_old = band_keys(old_sigs_wide, bands, rows_per_band)
-
-    a = bands_new.alias("a")
-    nn = (
-        a.join(
-            bands_new.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-    )
-    # New-old candidates, oriented (smaller id, larger id) so pair
-    # identity matches the full rebuild regardless of batch order.
-    no_raw = a.join(
-        bands_old.alias("o"),
-        (F.col("a.band") == F.col("o.band"))
-        & (F.col("a.bkey") == F.col("o.bkey"))
-        & (F.col("a.doc_id") != F.col("o.doc_id")),
-    ).select(F.col("a.doc_id").alias("x"), F.col("o.doc_id").alias("y"))
-    no = no_raw.select(
-        F.least("x", "y").alias("d1"), F.greatest("x", "y").alias("d2")
-    )
-    # Candidates materialized eagerly — same stage checkpoint as the full
-    # pipeline: every consumer below would otherwise replay the LSH plan.
-    cands = nn.unionByName(no).distinct().cache()
-    cands.count()
-
-    cand_ids = (
-        cands.select(F.col("d1").alias("doc_id"))
-        .unionByName(cands.select(F.col("d2").alias("doc_id")))
-        .distinct()
-    )
-    # Only candidate OLD docs are ever re-shingled.  No broadcast hint —
-    # the candidate set is duplicate-fraction-sized (data-dependent);
-    # AQE picks the join strategy from runtime statistics.
-    sh_old_cands = shingles(
-        old_documents.join(cand_ids, "doc_id", "left_semi"), n
-    )
-    return jaccard_pairs(sh_new.unionByName(sh_old_cands), threshold, pairs=cands)
 
 
 def first_arrival_losers(pairs: DataFrame, new_ids: DataFrame) -> DataFrame:
@@ -1480,6 +1475,7 @@ def winnowing_dedup_pairs(
     k: int = 3,
     w: int = 4,
     max_fp_doc_freq: int = 50,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """``(d1, d2, n_shared)`` — document pairs sharing at least
     ``min_shared`` distinct winnowed fingerprints; the copy-detection
@@ -1491,107 +1487,40 @@ def winnowing_dedup_pairs(
     — they cannot discriminate and would put df² rows into one join
     bucket — so they are pruned BEFORE the self-join, bounding every
     bucket at ``max_fp_doc_freq²``.
-    """
-    from pyspark.sql import Window  # noqa: PLC0415
 
+    Batch-incremental screening: ``store`` is the persisted ``(doc_id,
+    fp)`` fingerprint relation of every document already ingested (the
+    archive is never re-read or re-hashed; only ``documents`` is
+    fingerprinted).  The result then also holds the new–old pairs;
+    old–old pairs are not re-emitted.  The boilerplate cap counts
+    document frequency over store ∪ batch, so a fingerprint that BECOMES
+    boilerplate as batches accumulate stops pairing exactly as in a full
+    rebuild: the result equals this function over old ∪ new, restricted
+    to pairs touching the batch (pinned by test).
+    """
     fps = winnowing_fingerprints(documents, k=k, w=w).select(
         "doc_id", "fp"
     ).distinct()
+    if store is not None:
+        fps = fps.withColumn("_new", F.lit(True)).unionByName(
+            store.select("doc_id", "fp", F.lit(False).alias("_new"))
+        )
     # df-cap via a window count on the SAME fp partitioning the self-join
     # needs — one pass over the fingerprint relation.  A groupBy+join-back
     # would reference `fps` twice, and the whole per-document winnowing
     # pipeline (md5 per gram) is re-derived once per reference.
-    pruned = (
-        fps.withColumn(
-            "_df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-        )
-        .where(F.col("_df") <= F.lit(max_fp_doc_freq))
-        .select("doc_id", "fp")
-    )
-    a = pruned.select(F.col("doc_id").alias("d1"), "fp")
-    b = pruned.select(F.col("doc_id").alias("d2"), "fp")
+    pruned = fps.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
+    ).where(F.col("_df") <= F.lit(max_fp_doc_freq))
+    if store is None:
+        new, old = pruned, None
+    else:
+        new, old = pruned.where(F.col("_new")), pruned.where(~F.col("_new"))
     return (
-        a.join(b, "fp")
-        .where(F.col("d1") < F.col("d2"))
+        _key_pairs(new, old, ("fp",))
         .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .where(F.col("n_shared") >= F.lit(min_shared))
-    )
-
-
-def winnowing_pairs_incremental(
-    old_fps: DataFrame,
-    new_documents: DataFrame,
-    min_shared: int = 2,
-    k: int = 3,
-    w: int = 4,
-    max_fp_doc_freq: int = 50,
-) -> tuple[DataFrame, DataFrame]:
-    """Batch-incremental winnowing screen: returns ``(pairs, new_fps)``
-    where ``pairs = (d1, d2, n_shared)`` covers new-new AND new-old
-    document pairs sharing ``min_shared`` winnowed fingerprints, and
-    ``new_fps`` is the batch's fingerprint relation to append to the
-    store.  The operational twin of ``minhash_dedup_pairs_incremental``:
-    only the new batch is fingerprinted (O(batch) map work); the archive
-    participates purely through its persisted ``(doc_id, fp)`` store —
-    never re-read, never re-hashed.
-
-    Boilerplate pruning uses the doc-frequency of each fingerprint over
-    store ∪ batch, so a fingerprint that BECOMES boilerplate as batches
-    accumulate stops generating candidates exactly as it would in a full
-    rebuild.  Equals :func:`winnowing_dedup_pairs` over the union,
-    restricted to pairs touching the batch (pinned by test).
-    """
-    # Referenced three times (a leg, the union feeding rare + b leg);
-    # batch-sized, so cache it rather than re-fingerprint the batch per
-    # reference (LRU-evicted, same policy as the other stage checkpoints).
-    new_fps = (
-        winnowing_fingerprints(new_documents, k=k, w=w)
-        .select("doc_id", "fp")
-        .distinct()
-        .cache()
-    )
-    all_fps = old_fps.select("doc_id", "fp").unionByName(new_fps)
-    rare = (
-        all_fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") <= F.lit(max_fp_doc_freq))
-        .select("fp")
-    )
-    a = new_fps.join(rare, "fp").select(F.col("doc_id").alias("da"), "fp")
-    b = all_fps.join(rare, "fp").select(F.col("doc_id").alias("db"), "fp")
-    pairs = (
-        a.join(b, "fp")
-        .where(F.col("da") != F.col("db"))
-        .select(
-            F.least("da", "db").alias("d1"),
-            F.greatest("da", "db").alias("d2"),
-        )
-        .groupBy("d1", "d2")
-        .agg((F.count(F.lit(1))).alias("_n"))
-    )
-    # new-new pairs are counted twice (once from each side's probe);
-    # new-old exactly once.  Halve the double-counted ones via a semi
-    # membership flag instead of a distinct on the fp-level relation.
-    new_ids = new_documents.select("doc_id").distinct()
-    both_new = (
-        pairs.join(new_ids.withColumnRenamed("doc_id", "d1"), "d1", "left_semi")
-        .join(new_ids.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
-        .select("d1", "d2", (F.col("_n") / 2).cast("long").alias("n_shared"))
-    )
-    one_new = (
-        pairs.join(
-            both_new.select("d1", "d2").withColumn("_b", F.lit(1)),
-            ["d1", "d2"],
-            "left_anti",
-        )
-        .select("d1", "d2", F.col("_n").cast("long").alias("n_shared"))
-    )
-    return (
-        both_new.unionByName(one_new).where(
-            F.col("n_shared") >= F.lit(min_shared)
-        ),
-        new_fps,
     )
 
 

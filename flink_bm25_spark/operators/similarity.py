@@ -17,8 +17,8 @@ Tiers:
   (band, bucket) instead of a cross join.
 - :func:`semantic_dedup_pairs` — SemDeDup: k-means cells bound the pair
   space, exact cosine only within clusters.
-- :func:`embedding_near_dup_pairs_incremental` — the batch-incremental
-  form over a persisted band-key store (:func:`embedding_band_store`);
+- :func:`embedding_near_dup_pairs_lsh` with ``store=`` screens a batch
+  against a persisted band-key store (:func:`embedding_band_store`);
   operational loop in ``api.EmbeddingDeduper``.
 - IVF (below) — coarse-quantizer cells, persisted partition-pruned.
 
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from flink_bm25_spark.config import HASH_PRIME
 from flink_bm25_spark.functions.vectors import cosine_similarity
 from flink_bm25_spark.operators.bm25 import rank_topk
+from flink_bm25_spark.operators.dedup import lsh_candidate_pairs
 from flink_bm25_spark.operators.serving import (
     BATCH_COL,
     DELETE_ALL,
@@ -270,6 +271,7 @@ def embedding_near_dup_pairs_lsh(
     bits_per_band: int = 6,
     dim: int = 64,
     nnz: int = 8,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """``(d1, d2, cos)`` — near-dup pairs found via banded sign-LSH
     candidates, exact cosine scored ONLY on candidates.  The 100 TB tier:
@@ -286,35 +288,20 @@ def embedding_near_dup_pairs_lsh(
     collisions a vanishing fraction.  Everything is deterministic
     (md5-derived planes), so the result replays bit-identically in the
     DuckDB oracle.
-    """
-    from flink_bm25_spark.functions.vectors import (  # noqa: PLC0415
-        cosine_from_parts,
-        l2_norm,
-    )
 
-    keyed = srp_band_keys(
-        embeddings.withColumn("nrm", l2_norm(F.col("embedding"))).select(
-            "vec_id", "embedding", "nrm"
-        ),
-        bands,
-        bits_per_band,
-        dim,
-        nnz,
-        carry_cols=("nrm",),
-    )
-    a = keyed.select(
-        F.col("vec_id").alias("d1"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"), "band", "bkey",
-    )
-    b = keyed.select(
-        F.col("vec_id").alias("d2"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"), "band", "bkey",
-    )
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", "ea", "eb", "na", "nb")
-        .distinct()
+    Batch-incremental screening: ``store`` is the persisted
+    :func:`embedding_band_store` relation of every vector already
+    ingested; the result then also holds the new–old pairs (old–old
+    pairs are not re-emitted; vec_ids must be disjoint across batches),
+    in O(batch + candidates) — the archive is never re-keyed.
+    """
+    from flink_bm25_spark.functions.vectors import cosine_from_parts  # noqa: PLC0415
+
+    cand = lsh_candidate_pairs(
+        embedding_band_store(embeddings, bands, bits_per_band, dim, nnz),
+        store,
+        id_col="vec_id",
+        carry=(("embedding", "ea", "eb"), ("nrm", "na", "nb")),
     )
     scored = cand.select(
         "d1",
@@ -352,89 +339,6 @@ def embedding_band_store(
         nnz,
         carry_cols=("nrm",),
     )
-
-
-def embedding_near_dup_pairs_incremental(
-    old_keys: DataFrame | None,
-    new_vectors: DataFrame,
-    threshold: float = 0.9,
-    bands: int = 12,
-    bits_per_band: int = 6,
-    dim: int = 64,
-    nnz: int = 8,
-) -> tuple[DataFrame, DataFrame]:
-    """Near-dup pairs TOUCHING a new vector batch (new-new plus
-    new-old), without re-keying the archive: the batch-incremental twin
-    of :func:`embedding_near_dup_pairs_lsh`, same O(batch + candidates)
-    posture as ``dedup.minhash_dedup_pairs_incremental``.
-
-    The archive participates only through its persisted
-    :func:`embedding_band_store` relation (``old_keys``; None = empty
-    archive).  Returns ``(pairs, new_keys)`` where ``pairs`` is
-    ``(d1, d2, cos)`` with ``d1 < d2`` and ``new_keys`` is the batch's
-    key-store rows for the caller to append to the archive (ALL of them,
-    dropped vectors included — a dropped vector's future duplicates must
-    still match it).  Old-old pairs are not re-emitted; vec_ids must be
-    disjoint across batches.
-    """
-    from flink_bm25_spark.functions.vectors import cosine_from_parts  # noqa: PLC0415
-
-    new_keys = embedding_band_store(new_vectors, bands, bits_per_band, dim, nnz)
-    a = new_keys.select(
-        F.col("vec_id").alias("d1"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"), "band", "bkey",
-    )
-    b = new_keys.select(
-        F.col("vec_id").alias("d2"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"), "band", "bkey",
-    )
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", "ea", "eb", "na", "nb")
-    )
-    if old_keys is not None:
-        o = old_keys.select(
-            F.col("vec_id").alias("d_old"), F.col("embedding").alias("eo"),
-            F.col("nrm").alias("no"), "band", "bkey",
-        )
-        # Oriented (smaller id, larger id) so pair identity matches the
-        # full rebuild regardless of batch order.
-        no_cand = (
-            a.join(o, ["band", "bkey"])
-            .where(F.col("d1") != F.col("d_old"))
-            .select(
-                F.least("d1", "d_old").alias("d1"),
-                F.greatest("d1", "d_old").alias("d2"),
-                F.when(F.col("d1") < F.col("d_old"), F.col("ea"))
-                .otherwise(F.col("eo"))
-                .alias("ea"),
-                F.when(F.col("d1") < F.col("d_old"), F.col("eo"))
-                .otherwise(F.col("ea"))
-                .alias("eb"),
-                F.when(F.col("d1") < F.col("d_old"), F.col("na"))
-                .otherwise(F.col("no"))
-                .alias("na"),
-                F.when(F.col("d1") < F.col("d_old"), F.col("no"))
-                .otherwise(F.col("na"))
-                .alias("nb"),
-            )
-        )
-        cand = cand.unionByName(no_cand)
-    scored = (
-        cand.dropDuplicates(["d1", "d2"])
-        .select(
-            "d1",
-            "d2",
-            F.round(
-                cosine_from_parts(
-                F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
-            ), 6
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-    return scored, new_keys
 
 
 def _ordered_vector_pairs(

@@ -306,8 +306,14 @@ def main() -> None:
     for name, why in AUDITED:
         df = qs[name](spark, sf_dir)
         plan = explain_str(df, "formatted")
+        # exprIds (``fbucket#1649``) depend on how many plans the
+        # session analyzed before this one; strip them so two runs of
+        # one tree diff clean.  PushedFilters name source columns (no
+        # exprIds) and print literals verbatim (``Brand#23``): keep them.
         lines = [
             line.rstrip()
+            if line.startswith("PushedFilters:")
+            else re.sub(r"#\d+", "", line.rstrip())
             for line in plan.splitlines()
             if INTERESTING.search(line)
         ]

@@ -119,6 +119,34 @@ def test_no_grouped_twins():
     )
 
 
+# ``*incremental*`` functions in operators/ kept beside their batch form
+# (every other family takes ``store=``: a batch is the first delta
+# against an empty store).
+INCREMENTAL_TWINS_ALLOWED = {
+    # shares every helper with ``line_dedup`` and returns the store
+    # delta (the unseen lines), which the batch form has no use for
+    "operators/dedup.py::line_dedup_incremental",
+}
+
+
+def test_no_incremental_twins():
+    """No module under ``operators/`` defines a top-level function whose
+    name contains ``incremental``, except the allow-listed ones."""
+    found = set()
+    for rel, src in _pkg_sources():
+        if not rel.startswith("operators" + os.sep):
+            continue
+        found |= {
+            f"{rel}::{n.name}"
+            for n in ast.parse(src).body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and "incremental" in n.name
+        }
+    assert found <= INCREMENTAL_TWINS_ALLOWED, sorted(
+        found - INCREMENTAL_TWINS_ALLOWED
+    )
+
+
 def _calls(tree, name: str):
     """Every call of ``name`` (bare or as an attribute) in ``tree``."""
     for node in ast.walk(tree):

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flink_bm25_spark.operators.dedup import (
+    band_keys,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -28,7 +29,9 @@ def test_minhash_lsh_covers_true_pairs(spark):
     }
     cands = {
         (r.d1, r.d2)
-        for r in lsh_candidate_pairs(minhash_signatures_wide(sh)).collect()
+        for r in lsh_candidate_pairs(
+            band_keys(minhash_signatures_wide(sh))
+        ).collect()
     }
     missed = true_pairs - cands
     assert not missed, f"LSH missed high-similarity pairs: {missed}"
@@ -81,12 +84,9 @@ def test_simhash_from_tokens_equals_tf_variant(spark):
 
 def test_incremental_minhash_equals_full_restricted(spark):
     # Incremental dedup of a new batch must report exactly the full
-    # rebuild's pairs that touch the batch — with or without a persisted
-    # signature store for the archive.
-    from flink_bm25_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        minhash_dedup_pairs_incremental,
-    )
+    # rebuild's pairs that touch the batch — from a lazy or a
+    # materialized signature store for the archive.
+    from flink_bm25_spark.operators.dedup import minhash_dedup_pairs
 
     docs = load_documents(spark, SF_DIR)
     old = docs.where(F.col("doc_id") < 350)
@@ -98,18 +98,20 @@ def test_incremental_minhash_equals_full_restricted(spark):
     want = {p: j for p, j in full.items() if p[0] >= 350 or p[1] >= 350}
     assert want, "fixture produced no pairs touching the new batch"
 
+    store = minhash_signatures_wide(shingles(old))
     got = {
         (r.d1, r.d2): r.jaccard
-        for r in minhash_dedup_pairs_incremental(old, new, threshold=0.8).collect()
+        for r in minhash_dedup_pairs(
+            new, 0.8, store=store, archive=old
+        ).collect()
     }
     assert got == want
 
-    # persisted-store path: identical result without re-signing old docs
-    store = minhash_signatures_wide(shingles(old))
+    # materialized-store path: identical result without re-signing old docs
     got2 = {
         (r.d1, r.d2): r.jaccard
-        for r in minhash_dedup_pairs_incremental(
-            old, new, old_sigs_wide=store, threshold=0.8
+        for r in minhash_dedup_pairs(
+            new, 0.8, store=store.localCheckpoint(), archive=old
         ).collect()
     }
     assert got2 == want
@@ -177,7 +179,7 @@ def test_incremental_minhash_from_persisted_store(spark, tmp_path):
     # to an in-memory run (signatures are plain rows; persistence is
     # just a parquet round-trip, no custom serialization).
     from flink_bm25_spark.operators.dedup import (
-        minhash_dedup_pairs_incremental,
+        minhash_dedup_pairs,
         minhash_signatures_wide,
     )
 
@@ -191,12 +193,14 @@ def test_incremental_minhash_from_persisted_store(spark, tmp_path):
 
     want = {
         (r.d1, r.d2): r.jaccard
-        for r in minhash_dedup_pairs_incremental(old, new, threshold=0.8).collect()
+        for r in minhash_dedup_pairs(
+            new, 0.8, store=minhash_signatures_wide(shingles(old)), archive=old
+        ).collect()
     }
     got = {
         (r.d1, r.d2): r.jaccard
-        for r in minhash_dedup_pairs_incremental(
-            old, new, old_sigs_wide=reloaded, threshold=0.8
+        for r in minhash_dedup_pairs(
+            new, 0.8, store=reloaded, archive=old
         ).collect()
     }
     assert got == want and got
@@ -590,14 +594,19 @@ def test_winnowing_pairs_prune_boilerplate(spark):
 
 def test_winnowing_incremental_equals_full_restricted(spark):
     """Incremental screen == full winnowing_dedup_pairs over old ∪ new,
-    restricted to pairs touching the new batch; and the returned store
-    delta reproduces the full fingerprint relation."""
+    restricted to pairs touching the new batch; and the store delta a
+    screen appends reproduces the full fingerprint relation.  The batch
+    also holds the shapes the fixtures never do: an empty, a
+    whitespace-only and a shorter-than-k text, and an exact copy of an
+    old doc under a SMALLER new id (the first-arrival case); the old
+    docs sharing ``base`` form old-old pairs that must not be re-emitted.
+    A store of an empty batch changes nothing."""
     import random
 
+    from flink_bm25_spark.api import WinnowScreen
     from flink_bm25_spark.operators.dedup import (
         winnowing_dedup_pairs,
         winnowing_fingerprints,
-        winnowing_pairs_incremental,
     )
 
     rng = random.Random(5)
@@ -606,23 +615,36 @@ def test_winnowing_incremental_equals_full_restricted(spark):
     old_rows += [(i, " ".join(f"x{i}y{j}" for j in range(15))) for i in range(10, 14)]
     new_rows = [(100, base + " n100a n100b"), (101, " ".join(f"z{j}" for j in range(15)))]
     new_rows += [(102, " ".join(f"x12y{j}" for j in range(15)))]  # near-copies doc 12
+    new_rows += [(103, ""), (104, " \n\t "), (105, "w00 w01")]
+    new_rows += [(7, " ".join(f"x13y{j}" for j in range(15)))]  # exact copy of doc 13
     old = spark.createDataFrame(old_rows, "doc_id bigint, text string")
     new = spark.createDataFrame(new_rows, "doc_id bigint, text string")
 
     old_fps = winnowing_fingerprints(old).select("doc_id", "fp").distinct()
-    pairs, new_fps = winnowing_pairs_incremental(old_fps, new, min_shared=2)
+    pairs = winnowing_dedup_pairs(new, min_shared=2, store=old_fps)
     got = {(r.d1, r.d2): r.n_shared for r in pairs.collect()}
 
-    full = winnowing_dedup_pairs(old.unionByName(new), min_shared=2)
-    new_ids = {100, 101, 102}
-    want = {
+    full = {
         (r.d1, r.d2): r.n_shared
-        for r in full.collect()
-        if r.d1 in new_ids or r.d2 in new_ids
+        for r in winnowing_dedup_pairs(old.unionByName(new), min_shared=2).collect()
+    }
+    new_ids = {100, 101, 102, 103, 104, 105, 7}
+    want = {
+        p: n for p, n in full.items() if p[0] in new_ids or p[1] in new_ids
     }
     assert got == want
     assert want, "fixture must produce at least one batch-touching pair"
+    assert (7, 13) in want and (0, 1) in full
+    empty = new.where(F.lit(False))
+    empty_fps = winnowing_fingerprints(empty).select("doc_id", "fp").distinct()
+    batch = winnowing_dedup_pairs(new, min_shared=2)
+    assert sorted(map(tuple, batch.collect())) == sorted(
+        map(tuple, winnowing_dedup_pairs(new, min_shared=2, store=empty_fps).collect())
+    )
     # the store delta matches a fresh fingerprint run on the batch
+    screen = WinnowScreen(old_fps, min_shared=2)
+    screen.screen_batch(new)
+    new_fps = screen.fps.subtract(old_fps)
     a = sorted(map(tuple, new_fps.collect()))
     b = sorted(
         map(tuple, winnowing_fingerprints(new).select("doc_id", "fp").distinct().collect())
@@ -655,6 +677,54 @@ def test_winnowing_shared_spans_align_on_diagonal(spark):
     # doc1's copy of the run sits 3 tokens later than doc2's
     assert diags == {-3}
     assert all(r.d1 == 1 and r.d2 == 2 for r in spans)
+
+
+def test_minhash_store_path_edge_cases(spark):
+    """Twin parity of the MinHash store path on in-memory shapes the
+    fixtures never hold: an empty, a whitespace-only and a
+    shorter-than-shingle text, an exact copy of an old doc under a
+    SMALLER new id (the first-arrival case) and an old-old pair that
+    must not be re-emitted.  ``f(new, store=keys(old))`` equals
+    ``f(old ∪ new)`` restricted to pairs touching the batch, and a store
+    of an empty batch changes nothing."""
+    from flink_bm25_spark.operators.dedup import minhash_dedup_pairs
+
+    def text(p):
+        return " ".join(f"{p}{j}" for j in range(30))
+
+    def pairs(df):
+        return {(r.d1, r.d2): r.jaccard for r in df.collect()}
+
+    schema = "doc_id bigint, text string"
+    old = spark.createDataFrame(
+        [(10, text("a")), (11, text("a")), (12, text("b")), (13, text("c"))],
+        schema,
+    )
+    new_rows = [
+        (1, text("b")),  # exact copy of doc 12
+        (20, ""),
+        (21, " \n\t "),
+        (22, "too short"),
+        (23, text("d")),
+        (24, text("d") + " tail"),
+    ]
+    new = spark.createDataFrame(new_rows, schema)
+    new_ids = {r[0] for r in new_rows}
+
+    full = pairs(minhash_dedup_pairs(old.unionByName(new), 0.8))
+    want = {p: j for p, j in full.items() if new_ids & set(p)}
+    assert (10, 11) in full and (1, 12) in want and (23, 24) in want
+    store = minhash_signatures_wide(shingles(old))
+    assert pairs(minhash_dedup_pairs(new, 0.8, store=store, archive=old)) == want
+
+    empty = new.where(F.lit(False))
+    batch = pairs(minhash_dedup_pairs(new, 0.8))
+    assert batch == pairs(
+        minhash_dedup_pairs(
+            new, 0.8, store=minhash_signatures_wide(shingles(empty)), archive=empty
+        )
+    )
+    assert batch == {p: j for p, j in want.items() if set(p) <= new_ids}
 
 
 def test_dedup_stats_sums_to_corpus(spark):

@@ -291,7 +291,6 @@ def test_embedding_incremental_equals_full_rebuild(spark):
     # LSH pairs that touch B (old-old pairs excluded by contract).
     from flink_bm25_spark.operators.similarity import (
         embedding_band_store,
-        embedding_near_dup_pairs_incremental,
         embedding_near_dup_pairs_lsh,
     )
 
@@ -306,9 +305,10 @@ def test_embedding_incremental_equals_full_rebuild(spark):
     expected = {
         p: c for p, c in full.items() if not (p[0] in old_ids and p[1] in old_ids)
     }
-    pairs, new_keys = embedding_near_dup_pairs_incremental(
-        embedding_band_store(old), new, threshold=0.45
+    pairs = embedding_near_dup_pairs_lsh(
+        new, 0.45, store=embedding_band_store(old)
     )
+    new_keys = embedding_band_store(new)
     got = {(r.d1, r.d2): r.cos for r in pairs.collect()}
     assert got == expected
     assert set(new_keys.columns) == {"vec_id", "embedding", "nrm", "band", "bkey"}
