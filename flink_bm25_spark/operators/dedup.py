@@ -794,9 +794,8 @@ def minhash_dedup_pairs(
     archive is never re-signed, and its docs are re-shingled **only if
     LSH puts them in a candidate pair** (a semi-join prunes the archive
     before tokenization), so verify cost is O(candidates), not
-    O(archive).  Without ``archive`` (a bare
-    signature store), new–old candidates find no old shingles and fail
-    verification.  A batch is the first delta against an empty store:
+    O(archive).  Without ``archive`` (a bare signature store), new–old
+    candidates find no old shingles and fail verification.  A batch is the first delta against an empty store:
     ``store=None`` is the plain batch plan.
     """
     # The shingle relation feeds both the signature and the verify stages,
